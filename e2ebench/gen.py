@@ -361,7 +361,7 @@ def _text(rng, lang: str, n_words: int) -> str:
 
 
 def make_corpus(path: str, rng: np.random.Generator, n_docs: int) -> Corpus:
-    """``documents.parquet`` in the driver schema (doc_id, text, lang,
+    """``documents.parquet`` in the testdata schema (doc_id, text, lang,
     source, n_chars).  The registry's pretraining_mix reads the doc_id % 10
     slice as its corpus and doc_id % 97 as its benchmark, so every planted
     relation lives on % 10 ids: exact clone clusters, near-dup edits (one
