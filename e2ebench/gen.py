@@ -380,6 +380,13 @@ def make_corpus(path: str, rng: np.random.Generator, n_docs: int) -> Corpus:
             t = "".join(chr(0x4E00 + int(c)) for c in rng.integers(0, 2000, size=n_w * 2))
         else:
             t = _text(rng, lang, n_w)
+        if i == 0:
+            # the fixture's decontamination plant 9000030 is words 3-26 of
+            # this text: English markers inside that slice keep it English,
+            # so it passes the clean stage and dies where it is meant to
+            words = t.split(" ")
+            words[5:5], words[15:15] = ["the"], ["and"]
+            t = " ".join(words)
         texts.append(t)
         doc_langs.append(lang)
     c = Corpus(docs=n_docs)

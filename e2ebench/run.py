@@ -40,8 +40,6 @@ ROOT = os.path.dirname(HERE)
 WORKLOADS = ("sheet_report", "sheet_scan", "corpus_mix")
 E2E = (("op_s", "s"), ("first_op_s", "s"), ("setup_s", "s"), ("peak_rss_mb", "MB"))
 REPORT_ARGS = ["--xlsx", "--pptx", "--png"]
-#: warm operations measured even when one outlasts --seconds
-MIN_WARM_OPS = 1
 
 
 def parse_args(argv=None):
@@ -73,6 +71,16 @@ def prepare_env(work: str) -> int:
     time.tzset()
     sys.path[:0] = [ROOT, HERE]
     return cores
+
+
+def reset_hwm() -> None:
+    """Reset this process's VmHWM to its current RSS, so the peak reported
+    is the program's, not that of input generation and the reference."""
+    import gc
+
+    gc.collect()
+    with open("/proc/self/clear_refs", "w") as f:
+        f.write("5")
 
 
 def vm_hwm_mb(pid: int) -> float:
@@ -108,6 +116,8 @@ def draw_sheets(store, make, tries=20):
 class SheetReport:
     """The CLI a user runs: workbook -> CSV, XLSX, PPTX, timeline JSON/PNG."""
 
+    #: warm operations measured even when one outlasts --seconds
+    warm_ops = 1
 
     def __init__(self, work, rng):
         import gen
@@ -177,12 +187,14 @@ class SheetScan:
     """A sheet straight into summaries: CondCollection.run with
     cache_results=False plus one summaries_df collect, no sinks."""
 
+    #: the JIT is still speeding these operations up; a median of two damps it
+    warm_ops = 2
 
     def __init__(self, work, rng):
         import gen
 
         self.store_dir = os.path.join(work, "store")
-        store = gen.make_store(self.store_dir, rng, n_stations=12, days=21)
+        store = gen.make_store(self.store_dir, rng, n_stations=6, days=120)
         self.sheets, self.ref, draws = draw_sheets(store, lambda: [
             gen.make_sheet(rng, store, "scan", "east", 4, diamond=False)
         ])
@@ -227,6 +239,7 @@ class SheetScan:
 class CorpusMix:
     """The registry's pretraining_mix pipeline over a generated corpus."""
 
+    warm_ops = 1
 
     def __init__(self, work, rng):
         import gen
@@ -322,10 +335,12 @@ def measure(args, work, cores):
 
     import tracing as tr
 
+    t_start = time.perf_counter()
     rng = np.random.default_rng(args.seed)
     wl = {"sheet_report": SheetReport, "sheet_scan": SheetScan, "corpus_mix": CorpusMix}[
         args.workload
     ](work, rng)
+    reset_hwm()
 
     t0 = time.perf_counter()
     spark = build_session(work, traced=bool(args.trace))
@@ -357,13 +372,14 @@ def measure(args, work, cores):
             one_op(1, altered=True)
         else:
             start, i = time.perf_counter(), 1
-            while i <= MIN_WARM_OPS or time.perf_counter() - start < args.seconds:
+            while i <= wl.warm_ops or time.perf_counter() - start < args.seconds:
                 one_op(i)
                 i += 1
-        rss = vm_hwm_mb(os.getpid()) + vm_hwm_mb(jvm_pid)
+        rss = {"python": vm_hwm_mb(os.getpid()), "jvm": vm_hwm_mb(jvm_pid)}
     finally:
         if args.trace:
             tracer.unwrap()
+        t_stop = time.perf_counter()
         stop_session(spark)
 
     warm = list(range(1, len(times)))
@@ -378,6 +394,11 @@ def measure(args, work, cores):
         "failed": len(failures),
         "fail_frac": len(failures) / len(times),
         "failures": failures,
+        "peak_rss_mb": rss,
+        # where the run's wall time goes: inputs and reference, session,
+        # operations, stopping the session
+        "phases_s": {"inputs": t0 - t_start, "setup": setup_s,
+                     "ops": t_stop - t0 - setup_s, "stop": time.perf_counter() - t_stop},
     }
     if args.trace:
         log = tr.read_event_log(os.path.join(work, "eventlog"))
@@ -390,7 +411,7 @@ def measure(args, work, cores):
             "op_s": statistics.median(times[1:]) if len(times) > 1 else times[0],
             "first_op_s": times[0],
             "setup_s": setup_s,
-            "peak_rss_mb": rss,
+            "peak_rss_mb": rss["python"] + rss["jvm"],
         }
         result_metrics = {k: {"value": values[k], "unit": u} for k, u in E2E}
     return detail, result_metrics
