@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Run a set of benchmark runs and report each metric's spread.
 
-    python3 e2ebench/prove.py --workloads sheet_report,sheet_scan,corpus_mix \\
+    python3 e2ebench/prove.py --workloads sheet_report,corpus_mix \\
         --seeds 101-110 [--trace 0] [--seconds 5]
 
 Each run is ``run.py`` in a fresh process, one after another.  The
@@ -33,7 +33,7 @@ def _last_json(stdout: str) -> dict:
 
 def main() -> int:
     p = argparse.ArgumentParser()
-    p.add_argument("--workloads", default="sheet_report,sheet_scan,corpus_mix")
+    p.add_argument("--workloads", default="sheet_report,corpus_mix")
     p.add_argument("--seeds", default="101-110", help="a-b or a,b,c")
     p.add_argument("--seconds", default="5")
     p.add_argument("--trace", default="0")

@@ -26,17 +26,6 @@ import duckdb
 
 from gen import Cond, Corpus, Sheet
 
-SUMMARY_COLS = [
-    "data_from",
-    "data_until",
-    "tottime_s",
-    "tottime_valid_s",
-    "tottime_notvalid_s",
-    "tottime_nodata_s",
-    "percentage_valid",
-    "percentage_notvalid",
-    "percentage_nodata",
-]
 #: the pretraining_mix oracle's composites, by the stage that must drop them
 PLANTED = {"exact": [9000010], "near": [9000020], "decon": [9000030, 9000040, 9000094]}
 
@@ -180,20 +169,6 @@ class SheetReference:
 
     def conds(self):
         return [c for sheet in self.sheets for c in sheet.conds]
-
-    # -- sheet_scan: summaries_df rows ------------------------------------
-
-    def check_summaries(self, rows: list[dict]) -> None:
-        got = sorted(
-            (r["cond_id"], *(norm(r[k]) for k in SUMMARY_COLS)) for r in rows
-        )
-        want = sorted(
-            (c.cond_id, *(norm(self.summary[c.cond_id][k]) for k in SUMMARY_COLS))
-            for c in self.conds()
-        )
-        expect(len(got) == len(want), f"summaries: {len(got)} rows, want {len(want)}")
-        for g, w in zip(got, want):
-            expect(g == w, f"summary mismatch: got {g} want {w}")
 
     # -- sheet_report: the CLI's files --------------------------------------
 

@@ -278,7 +278,9 @@ def layer_metrics(spans: list[dict], actions: list[dict], log: dict, ops: list[i
                     tot[f"corpus.{mod}.floor_s"] += act - _union(
                         [(x["start"], x["end"]) for x in ms])
                     tot[f"corpus.{mod}.exec_run_s"] += sum(x["run_ms"] for x in ms) / 1000.0
-        sink_jobs = sum(tot[f"{layer}.jobs"] for layer in LAYERS if layer.startswith("reports."))
+        # on sheet_report the summary layer runs only inside the sinks
+        sink_jobs = sum(tot[f"{layer}.jobs"] for layer in LAYERS
+                        if layer.startswith("reports.") or layer == "summary")
         tot["reports.jobs_per_condition"] = sink_jobs / n_conditions if n_conditions else 0.0
         per_op.append(tot)
     return {k: statistics.median(t[k] for t in per_op) for k in per_op[0]} if per_op else {}
