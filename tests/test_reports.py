@@ -1,5 +1,5 @@
-"""Report sink tests: CSV/JSON fallbacks always work; rich sinks raise
-cleanly when their libraries are absent."""
+"""Report sink tests: summary_rows collects a sheet once into plain rows,
+and every sink renders from those rows without running a Spark job."""
 
 from __future__ import annotations
 
@@ -16,17 +16,33 @@ T0 = datetime(2018, 3, 1)
 
 
 @pytest.fixture(scope="module")
-def results(spark):
+def obs(spark):
     rows = [(i * 5, 1122, 3, float(v)) for i, v in enumerate([5, 4, 2, 1, 2.5, 4, 5, 5])]
-    obs = spark.createDataFrame(
+    return spark.createDataFrame(
         [(T0 + timedelta(minutes=m), s, se, v) for m, s, se, v in rows],
         "tfrom timestamp, statid int, seid int, seval float",
     )
+
+
+@pytest.fixture(scope="module")
+def sheet(obs):
+    """(collection, runner results): one runnable and one failed condition."""
     coll = CondCollection.from_rows(
         "sheet1", T0, T0,
         [("Sipoo", "A1", "s1122#tie_1 < 3"), ("Sipoo", "B1", "keli_10 = 8 AND")],
     )
     return coll, coll.run(obs, sensor_name_to_id={"tie_1": 3})
+
+
+@pytest.fixture(scope="module")
+def results(sheet):
+    """(collection, its summary_rows)."""
+    coll, res = sheet
+    return coll, reports.summary_rows(res)
+
+
+def _row(rows, cid):
+    return next(r for r in rows if r["cond_id"] == cid)
 
 
 def test_summary_csv(results, tmp_path):
@@ -43,13 +59,19 @@ def test_summary_csv(results, tmp_path):
 
 def test_timeline_json(results, tmp_path):
     _, res = results
-    p = reports.write_timeline_json(res["sipoo_a1"], str(tmp_path / "tl.json"))
+    p = reports.write_timeline_json(_row(res, "sipoo_a1"), str(tmp_path / "tl.json"))
     rows = json.load(open(p))
     series = {r["series"] for r in rows}
     assert series == {"a1_0", "master"}
     assert {r["color"] for r in rows} <= {
         reports.COLOR_TRUE, reports.COLOR_FALSE, reports.COLOR_NULL
     }
+    # segments come in vfrom order, and the summary's rows counts them
+    assert [r["vfrom"] for r in rows] == sorted(r["vfrom"] for r in rows)
+    master = [r for r in rows if r["series"] == "master"]
+    with open(reports.write_summary_csv(res, str(tmp_path / "summary.csv"))) as f:
+        a1 = next(r for r in csv.DictReader(f) if r["master_alias"] == "a1")
+    assert int(a1["rows"]) == len(master) > 1
 
 
 def test_error_json(results, tmp_path):
@@ -63,7 +85,7 @@ def test_error_json(results, tmp_path):
 
 
 def test_summary_excel_native(results, tmp_path):
-    """S6 writes a real .xlsx (built-in codec when openpyxl is absent)."""
+    """S6 writes a real .xlsx through the built-in codec."""
     from tsatool_app_spark.sources.xlsx_codec import read_xlsx
 
     _, res = results
@@ -84,7 +106,7 @@ def test_timeline_png_native(results, tmp_path):
     import numpy as np
 
     _, res = results
-    p = reports.write_timeline_png(res["sipoo_a1"], str(tmp_path / "x.png"))
+    p = reports.write_timeline_png(_row(res, "sipoo_a1"), str(tmp_path / "x.png"))
     data = open(p, "rb").read()
     assert data[:8] == b"\x89PNG\r\n\x1a\n"
     w, h = struct.unpack(">II", data[16:24])
@@ -120,28 +142,30 @@ def test_pptx_native(results, tmp_path):
         assert z.read("ppt/media/image1.png")[:8] == b"\x89PNG\r\n\x1a\n"
 
 
-def test_pptx_no_data_condition(spark, tmp_path):
+def test_pptx_no_data_condition(tmp_path):
     """A condition that matched no rows yields a summary of NULLs
     (x/0 -> NULL in Spark); the deck must render 'n/a' cells instead of
     raising TypeError on float formatting (r2 ADVICE)."""
     import zipfile
-    from types import SimpleNamespace
 
-    summary = spark.createDataFrame(
-        [(None,) * 9],
-        "data_from timestamp, data_until timestamp, tottime_s bigint, "
-        "tottime_valid_s bigint, tottime_notvalid_s bigint, "
-        "tottime_nodata_s bigint, percentage_valid double, "
-        "percentage_notvalid double, percentage_nodata double",
-    )
-    res = {
-        "c_nodata": SimpleNamespace(
-            spec=SimpleNamespace(raw_condition="s1#x > 1", errors=None),
-            summary=summary,
-            ranges=None,
-        )
+    row = {
+        "cond_id": "c_nodata",
+        "site": "s1",
+        "master_alias": "c",
+        "condition": "s1#x > 1",
+        "data_from": None,
+        "data_until": None,
+        "percentage_valid": None,
+        "percentage_notvalid": None,
+        "percentage_nodata": None,
+        "tottime_valid_s": None,
+        "tottime_notvalid_s": None,
+        "tottime_nodata_s": None,
+        "rows": 0,
+        "errors": [],
+        "ranges": [],
     }
-    p = reports.write_pptx(res, str(tmp_path / "nodata.pptx"))
+    p = reports.write_pptx([row], str(tmp_path / "nodata.pptx"))
     with zipfile.ZipFile(p) as z:
         s1 = z.read("ppt/slides/slide1.xml").decode()
     assert "n/a" in s1
@@ -208,3 +232,41 @@ def test_pptx_template_preserves_branding(results, tmp_path):
                 ET.fromstring(z.read(n))
         rels1 = z.read("ppt/slides/_rels/slide1.xml.rels").decode()
         assert "../slideLayouts/slideLayout1.xml" in rels1
+
+
+def _jobs_in_group(sc, group: str, fn) -> int:
+    """Run ``fn`` in its own Spark job group; return how many jobs it ran."""
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_sinks_read_the_sheet_once(spark, obs, sheet, results, tmp_path):
+    """summary_rows is the report path's only Spark reader: its job count
+    does not grow with the number of conditions in a level (the module
+    sheet's one runnable condition against four), and no sink runs a
+    Spark job."""
+    sc = spark.sparkContext
+    four = CondCollection.from_rows(
+        "sheet4", T0, T0,
+        [("Sipoo", f"A{i}", f"s1122#tie_1 < {i + 2}") for i in range(4)],
+    ).run(obs, sensor_name_to_id={"tie_1": 3})
+    one_jobs = _jobs_in_group(sc, "summary-rows-1", lambda: reports.summary_rows(sheet[1]))
+    four_jobs = _jobs_in_group(sc, "summary-rows-4", lambda: reports.summary_rows(four))
+    assert one_jobs == four_jobs > 0
+
+    _, rows = results
+
+    def sinks():
+        reports.write_summary_csv(rows, str(tmp_path / "s.csv"))
+        reports.write_summary_excel(rows, str(tmp_path / "s.xlsx"))
+        reports.write_pptx(rows, str(tmp_path / "s.pptx"))
+        for row in rows:
+            reports.write_timeline_json(row, str(tmp_path / f"{row['cond_id']}.json"))
+            reports.write_timeline_png(row, str(tmp_path / f"{row['cond_id']}.png"))
+
+    assert _jobs_in_group(sc, "sinks", sinks) == 0

@@ -87,9 +87,9 @@ def test_summaries_df_level_sharing_and_subset(spark):
         ],
     )
     res = coll.run(obs_fixture(spark), sensor_name_to_id=SENSORS)
-    # level 0 conditions share the tagged frame; B1 (level 1) has its own
-    assert res["x_a1"].tagged_summary is res["x_a2"].tagged_summary
-    assert res["x_b1"].tagged_summary is not res["x_a1"].tagged_summary
+    # level 0 conditions share the level object; B1 (level 1) has its own
+    assert res["x_a1"].level is res["x_a2"].level
+    assert res["x_b1"].level is not res["x_a1"].level
     full = {r.cond_id: r for r in CondCollection.summaries_df(res).collect()}
     assert set(full) == {"x_a1", "x_a2", "x_b1"}
     assert full["x_a1"].tottime_valid_s == 900
@@ -104,8 +104,8 @@ def test_summaries_df_level_sharing_and_subset(spark):
 def test_no_data_condition_keeps_one_row_summary(spark):
     """A condition whose blocks match ZERO observations must still get one
     NULL-filled summary row (the ungrouped-rollup empty-input shape), not
-    vanish from the level's grouped rollup — reports.py:74,234 do
-    summary.collect()[0] and document the no-data case as supported."""
+    vanish from the level's grouped rollup — reports.summary_rows reads
+    it and documents the no-data case as supported."""
     coll = CondCollection.from_rows(
         "sheet1",
         T0,

@@ -118,22 +118,16 @@ def test_read_xlsx_workbook_end_to_end(tmp_path):
 
 def test_write_summary_excel_without_openpyxl(tmp_path):
     """S6 writes a real .xlsx via the built-in codec; the percentage columns
-    carry the 0.00 % style and the content matches summary_rows."""
+    carry the 0.00 % style and the content matches the summary rows."""
     import zipfile
 
     from tsatool_app_spark.reports import SUMMARY_COLUMNS, write_summary_excel
     from tsatool_app_spark.sources.xlsx_codec import read_xlsx
 
-    class FakeSpec:
-        site, master_alias, raw_condition = "sipoo", "a1", "s1#x > 1"
-
-    class FakeRes:
-        spec = FakeSpec()
-        summary = None
-        ranges = None
-
+    row = dict.fromkeys(SUMMARY_COLUMNS)
+    row.update(site="sipoo", master_alias="a1", condition="s1#x > 1", rows=0)
     p = str(tmp_path / "summary.xlsx")
-    write_summary_excel({"sipoo_a1": FakeRes()}, p, analysis_name="t")
+    write_summary_excel([row], p, analysis_name="t")
     back = read_xlsx(p)
     assert back["INFO"][0] == ["Analysis", "t"]
     assert back["summary"][0] == SUMMARY_COLUMNS

@@ -113,27 +113,25 @@ def main(argv: list[str] | None = None) -> int:
 
     for coll in analysis.collections:
         res = coll.run(obs, max_minutes=args.max_minutes, sensor_name_to_id=sensor_map)
-        reports.write_summary_csv(res, str(results_dir / f"{args.name}_{coll.name}.csv"))
+        rows = reports.summary_rows(res)
+        reports.write_summary_csv(rows, str(results_dir / f"{args.name}_{coll.name}.csv"))
         if args.xlsx:
             reports.write_summary_excel(
-                res, str(results_dir / f"{args.name}_{coll.name}.xlsx"),
+                rows, str(results_dir / f"{args.name}_{coll.name}.xlsx"),
                 analysis_name=args.name,
             )
         if args.pptx:
             reports.write_pptx(
-                res,
+                rows,
                 str(results_dir / f"{args.name}_{coll.name}.pptx"),
                 template=args.pptx_template,
             )
-        for cid, r in res.items():
-            if r.ranges is not None:
-                reports.write_timeline_json(
-                    r, str(results_dir / f"{args.name}_{cid}_timeline.json")
-                )
+        for row in rows:
+            if row["ranges"] is not None:
+                stem = f"{args.name}_{row['cond_id']}_timeline"
+                reports.write_timeline_json(row, str(results_dir / f"{stem}.json"))
                 if args.png:
-                    reports.write_timeline_png(
-                        r, str(results_dir / f"{args.name}_{cid}_timeline.png")
-                    )
+                    reports.write_timeline_png(row, str(results_dir / f"{stem}.png"))
         log.info("collection %s: %d conditions", coll.name, len(coll.conditions))
 
     reports.write_error_json(analysis, str(results_dir / f"{args.name}_ERRORS.json"))

@@ -3,25 +3,26 @@
 The reference emits Excel (openpyxl), PowerPoint (python-pptx) and PNG
 timelines (matplotlib) on the driver after collecting per-condition results
 (analysis_collection.py:195-231, cond_collection.py:205-401,
-condition.py:448-554). Those libraries are absent in this container, so each
-rich sink has a dependency-free native implementation (the library is used
-when importable); structured CSV/JSON fallbacks carrying the same content
-also remain:
+condition.py:448-554). Here each rich sink has a dependency-free native
+implementation, and structured CSV/JSON sinks carry the same content:
 
-- S6 Excel summary      → write_summary_excel (openpyxl OR the built-in
-  xlsx codec, sources.xlsx_codec) / write_summary_csv
+- S6 Excel summary      → write_summary_excel (built-in xlsx codec,
+  sources.xlsx_codec) / write_summary_csv
 - S7 PowerPoint deck    → write_pptx (built-in PresentationML writer,
   sinks_pptx: one slide per condition with validity table + timeline PNG)
-- S8 PNG timeline Gantt → write_timeline_png (matplotlib OR the built-in
-  rasterizer sinks_png) / timeline_rows (the exact broken_barh segments +
-  colors the reference draws: red=true #f03b20, blue=false #2b83ba,
-  grey=NULL #bababa — condition.py:448-554)
+- S8 PNG timeline Gantt → write_timeline_png (built-in rasterizer
+  sinks_png) / timeline_rows (the exact broken_barh segments + colors the
+  reference draws: red=true #f03b20, blue=false #2b83ba, grey=NULL
+  #bababa — condition.py:448-554)
 - S9 JSON error tree    → write_error_json (runner.error_tree → json)
 - S10 log sink          → stdlib logging, configured in setup_logging
 
-All sinks are driver-side by design: they consume the one-row summaries and
-small per-condition range tables (10²-10⁴ rows) — never raw observations —
-so report generation is O(conditions), independent of data scale.
+One driver-side data path feeds every sink: summary_rows collects a sheet's
+results once into plain per-condition rows, and every write_* sink renders
+from those rows without running a Spark job. The rows hold one-row
+summaries and small per-condition range tables (10²-10⁴ rows) — never raw
+observations — so report generation is O(conditions), independent of data
+scale.
 """
 
 from __future__ import annotations
@@ -45,6 +46,18 @@ SUMMARY_COLUMNS = [
     "rows",
 ]
 
+#: Summary (A3) fields a report row takes from the condition's rollup.
+_SUMMARY_FIELDS = (
+    "data_from",
+    "data_until",
+    "percentage_valid",
+    "percentage_notvalid",
+    "percentage_nodata",
+    "tottime_valid_s",
+    "tottime_notvalid_s",
+    "tottime_nodata_s",
+)
+
 #: Timeline colors (condition.py:452-455).
 COLOR_TRUE = "#f03b20"
 COLOR_FALSE = "#2b83ba"
@@ -52,114 +65,105 @@ COLOR_NULL = "#bababa"
 
 
 def summary_rows(results: dict) -> list[dict]:
-    """Flatten runner results → one summary dict per condition."""
+    """Collect runner results into plain rows, one per condition: the only
+    report step that runs Spark, and the input of every sink.
+
+    One collect of ``CondCollection.summaries_df`` reads every summary, and
+    one collect per level of the level's shared runs relation reads every
+    condition's ranges. A row holds the SUMMARY_COLUMNS plus ``cond_id``,
+    the A3 seconds (``tottime_valid_s``, ``tottime_notvalid_s``,
+    ``tottime_nodata_s``), ``errors`` (the condition's error messages) and
+    ``ranges``: the condition's runs in vfrom order, each a dict
+    (vfrom, vuntil, <alias>..., master) — None when the condition did not
+    run, empty when it matched no data."""
+    from tsatool_app_spark.runner import CondCollection
+
+    summaries_df = CondCollection.summaries_df(results)
+    summaries = (
+        {r.cond_id: r for r in summaries_df.collect()} if summaries_df is not None else {}
+    )
+    ranges: dict[str, list[dict]] = {
+        cid: [] for cid, res in results.items() if res.level is not None
+    }
+    levels = dict.fromkeys(res.level for res in results.values() if res.level is not None)
+    for level in levels:
+        for r in level.runs.collect():
+            cid = r.cond_id
+            if cid in ranges:
+                ranges[cid].append(
+                    {
+                        "vfrom": r.vfrom,
+                        "vuntil": r.vuntil,
+                        **{a: r[f"{cid}__{a}"] for a in level.aliases[cid]},
+                        "master": r.master,
+                    }
+                )
     out = []
     for cid, res in results.items():
         spec = res.spec
-        if res.summary is None:
-            out.append(
-                {
-                    "site": spec.site,
-                    "master_alias": spec.master_alias,
-                    "condition": spec.raw_condition,
-                    "data_from": None,
-                    "data_until": None,
-                    "percentage_valid": None,
-                    "percentage_notvalid": None,
-                    "percentage_nodata": None,
-                    "rows": 0,
-                }
-            )
-            continue
-        s = res.summary.collect()[0]
-        n_rows = res.ranges.count() if res.ranges is not None else 0
+        s = summaries.get(cid)
+        runs = ranges.get(cid)
         out.append(
             {
+                "cond_id": cid,
                 "site": spec.site,
                 "master_alias": spec.master_alias,
                 "condition": spec.raw_condition,
-                "data_from": s.data_from,
-                "data_until": s.data_until,
-                "percentage_valid": s.percentage_valid,
-                "percentage_notvalid": s.percentage_notvalid,
-                "percentage_nodata": s.percentage_nodata,
-                "rows": n_rows,
+                **{c: None if s is None else s[c] for c in _SUMMARY_FIELDS},
+                "rows": 0 if runs is None else len(runs),
+                "errors": list(spec.errors.messages),
+                "ranges": None if runs is None else sorted(runs, key=lambda r: r["vfrom"]),
             }
         )
     return out
 
 
-def write_summary_csv(results: dict, path: str) -> str:
+def write_summary_csv(rows: list[dict], path: str) -> str:
     """S6 fallback: the per-collection summary sheet as CSV."""
-    rows = summary_rows(results)
     with open(path, "w", newline="") as f:
-        w = csv.DictWriter(f, fieldnames=SUMMARY_COLUMNS)
+        w = csv.DictWriter(f, fieldnames=SUMMARY_COLUMNS, extrasaction="ignore")
         w.writeheader()
         w.writerows(rows)
     return path
 
 
-def write_summary_excel(results: dict, path: str, *, analysis_name: str = "") -> str:
+def write_summary_excel(rows: list[dict], path: str, *, analysis_name: str = "") -> str:
     """S6: Excel workbook — INFO sheet + one summary sheet, with the
     reference's ``0.00 %`` number format on the percentage columns
-    (analysis_collection.py:195-231).
+    (analysis_collection.py:195-231), written by the built-in codec
+    (sources.xlsx_codec)."""
+    from tsatool_app_spark.sources.xlsx_codec import STYLE_PERCENT, write_xlsx
 
-    Uses openpyxl when present; otherwise the built-in dependency-free
-    codec (sources.xlsx_codec) — a real .xlsx is produced either way."""
-    rows = summary_rows(results)
-    try:
-        import openpyxl
-    except ImportError:
-        from tsatool_app_spark.sources.xlsx_codec import STYLE_PERCENT, write_xlsx
-
-        pct_cols = {
-            SUMMARY_COLUMNS.index(c): STYLE_PERCENT
-            for c in ("percentage_valid", "percentage_notvalid", "percentage_nodata")
-        }
-        return write_xlsx(
-            path,
-            {
-                "INFO": [["Analysis", analysis_name]],
-                "summary": [SUMMARY_COLUMNS]
-                + [[row[c] for c in SUMMARY_COLUMNS] for row in rows],
-            },
-            column_styles={"summary": pct_cols},
-        )
-    wb = openpyxl.Workbook()
-    info = wb.active
-    info.title = "INFO"
-    info["A1"] = "Analysis"
-    info["B1"] = analysis_name
-    sheet = wb.create_sheet("summary")
-    sheet.append(SUMMARY_COLUMNS)
-    for row in rows:
-        sheet.append([row[c] for c in SUMMARY_COLUMNS])
-    for cell in sheet["F2":f"H{sheet.max_row}"] if sheet.max_row > 1 else []:
-        for c in cell:
-            c.number_format = "0.00 %"
-    wb.save(path)
-    return path
+    pct_cols = {
+        SUMMARY_COLUMNS.index(c): STYLE_PERCENT
+        for c in ("percentage_valid", "percentage_notvalid", "percentage_nodata")
+    }
+    return write_xlsx(
+        path,
+        {
+            "INFO": [["Analysis", analysis_name]],
+            "summary": [SUMMARY_COLUMNS]
+            + [[row[c] for c in SUMMARY_COLUMNS] for row in rows],
+        },
+        column_styles={"summary": pct_cols},
+    )
 
 
-def timeline_rows(cond_result) -> list[dict]:
-    """S8 content: the Gantt segments the reference draws — one row per
-    (series, vfrom, vuntil, state, color), series = each block alias +
-    'master'. Render-ready for any plotting backend."""
-    if cond_result.ranges is None:
-        return []
-    aliases = [
-        c for c in cond_result.ranges.columns
-        if c not in ("vfrom", "vuntil", "vdiff_s", "master")
-    ]
+def timeline_rows(cond: dict) -> list[dict]:
+    """S8 content: the Gantt segments the reference draws for one
+    summary_rows row — one row per (series, vfrom, vuntil, state, color),
+    series = each block alias + 'master'. Render-ready for any plotting
+    backend."""
     rows = []
-    for r in cond_result.ranges.orderBy("vfrom").collect():
-        for series in aliases + ["master"]:
-            val = r[series]
+    for r in cond["ranges"] or []:
+        for series, val in r.items():
+            if series in ("vfrom", "vuntil"):
+                continue
             rows.append(
                 {
                     "series": series,
-                    "vfrom": r.vfrom,
-                    "vuntil": r.vuntil,
+                    "vfrom": r["vfrom"],
+                    "vuntil": r["vuntil"],
                     "state": val,
                     "color": COLOR_TRUE if val is True else COLOR_FALSE if val is False else COLOR_NULL,
                 }
@@ -167,50 +171,26 @@ def timeline_rows(cond_result) -> list[dict]:
     return rows
 
 
-def write_timeline_json(cond_result, path: str) -> str:
+def write_timeline_json(cond: dict, path: str) -> str:
     """S8 fallback: timeline segments as JSON (default=str for timestamps)."""
     with open(path, "w") as f:
-        json.dump(timeline_rows(cond_result), f, default=str, indent=1)
+        json.dump(timeline_rows(cond), f, default=str, indent=1)
     return path
 
 
-def write_timeline_png(cond_result, path: str) -> str:
+def write_timeline_png(cond: dict, path: str) -> str:
     """S8: the per-condition validity Gantt as a real PNG
-    (condition.py:448-554 broken_barh figure).
+    (condition.py:448-554 broken_barh figure), drawn by the built-in
+    rasterizer (sinks_png.render_timeline_png — stdlib zlib PNG, same
+    segments, same colors, 5×7 bitmap labels)."""
+    from tsatool_app_spark.sinks_png import render_timeline_png
 
-    matplotlib renders it when present; otherwise the built-in rasterizer
-    (sinks_png.render_timeline_png — stdlib zlib PNG, same segments, same
-    colors, 5×7 bitmap labels)."""
-    try:
-        import matplotlib
-    except ImportError:
-        from tsatool_app_spark.sinks_png import render_timeline_png
-
-        with open(path, "wb") as f:
-            f.write(render_timeline_png(timeline_rows(cond_result)))
-        return path
-    matplotlib.use("Agg")
-    import matplotlib.dates as mdates
-    import matplotlib.pyplot as plt
-
-    rows = timeline_rows(cond_result)
-    series = list(dict.fromkeys(r["series"] for r in rows))
-    fig, ax = plt.subplots(figsize=(12, 0.6 * len(series) + 1))
-    for i, s in enumerate(series):
-        segs = [r for r in rows if r["series"] == s]
-        ax.broken_barh(
-            [(mdates.date2num(r["vfrom"]), mdates.date2num(r["vuntil"]) - mdates.date2num(r["vfrom"])) for r in segs],
-            (i - 0.4, 0.8),
-            facecolors=[r["color"] for r in segs],
-        )
-    ax.set_yticks(range(len(series)), series)
-    ax.xaxis_date()
-    fig.savefig(path, bbox_inches="tight")
-    plt.close(fig)
+    with open(path, "wb") as f:
+        f.write(render_timeline_png(timeline_rows(cond)))
     return path
 
 
-def write_pptx(results: dict, path: str, template: str | None = None) -> str:
+def write_pptx(rows: list[dict], path: str, template: str | None = None) -> str:
     """S7: one slide per condition, matching the reference's deck contract
     (cond_collection.py:257-401): title, condition text, time range,
     validity table, errors, timeline image.
@@ -224,42 +204,36 @@ def write_pptx(results: dict, path: str, template: str | None = None) -> str:
     from tsatool_app_spark.sinks_png import render_timeline_png
     from tsatool_app_spark.sinks_pptx import write_pptx_deck
 
+    # A condition that matched no rows (or tottime_s == 0, x/0 → NULL in
+    # Spark) has NULL data_from/until and percentages — render "n/a"
+    # instead of crashing the deck on a no-data slide.
+    def _pct(v):
+        return "n/a" if v is None else f"{v:.2f} %"
+
+    def _sec(v):
+        return "n/a" if v is None else str(v)
+
     slides = []
-    for cid, res in results.items():
-        spec = res.spec
-        lines = [f"Condition: {spec.raw_condition}"]
+    for row in rows:
+        lines = [f"Condition: {row['condition']}"]
         table = None
         png = None
-        if res.summary is not None:
-            s = res.summary.collect()[0]
-
-            # A condition that matched no rows (or tottime_s == 0, x/0 →
-            # NULL in Spark) yields NULL data_from/until and percentages —
-            # render "n/a" instead of crashing the deck on a no-data slide.
-            def _pct(v):
-                return "n/a" if v is None else f"{v:.2f} %"
-
-            def _sec(v):
-                return "n/a" if v is None else str(v)
-
-            if s.data_from is None and s.data_until is None:
+        if row["ranges"] is not None:
+            if row["data_from"] is None and row["data_until"] is None:
                 lines.append("Data range: n/a")
             else:
-                lines.append(f"Data range: {s.data_from} - {s.data_until}")
+                lines.append(f"Data range: {row['data_from']} - {row['data_until']}")
             table = [
                 ["", "seconds", "percent"],
-                ["valid", _sec(s.tottime_valid_s), _pct(s.percentage_valid)],
-                ["not valid", _sec(s.tottime_notvalid_s), _pct(s.percentage_notvalid)],
-                ["no data", _sec(s.tottime_nodata_s), _pct(s.percentage_nodata)],
+                ["valid", _sec(row["tottime_valid_s"]), _pct(row["percentage_valid"])],
+                ["not valid", _sec(row["tottime_notvalid_s"]), _pct(row["percentage_notvalid"])],
+                ["no data", _sec(row["tottime_nodata_s"]), _pct(row["percentage_nodata"])],
             ]
+            png = render_timeline_png(timeline_rows(row))
         else:
             lines.append("No result (condition not run)")
-        err_coll = getattr(spec, "errors", None)
-        for msg in (err_coll.messages if err_coll else [])[:5]:
-            lines.append(f"Error: {msg}")
-        if res.ranges is not None:
-            png = render_timeline_png(timeline_rows(res))
-        slides.append({"title": cid, "lines": lines, "table": table, "png": png})
+        lines.extend(f"Error: {msg}" for msg in row["errors"][:5])
+        slides.append({"title": row["cond_id"], "lines": lines, "table": table, "png": png})
     return write_pptx_deck(path, slides, template_path=template)
 
 

@@ -46,17 +46,23 @@ from tsatool_app_spark.operators.summary import validity_summary
 DEFAULT_MAX_MINUTES = 30
 
 
+@dataclass(eq=False)  # identity-hashed: readers group conditions by level
+class LevelResult:
+    """One topological level's shared relations, the same object on every
+    condition of the level: report and summary reads then make one plan
+    (and one collect) per LEVEL instead of one per condition."""
+
+    runs: DataFrame  # (cond_id, vfrom, vuntil, vdiff_s, <cond_id>__<alias>..., master)
+    summary: DataFrame  # cond_id-grouped validity rollup (cond_id + A3 columns)
+    aliases: "dict[str, list[str]]"  # cond_id -> block aliases, column order
+
+
 @dataclass
 class ConditionResult:
     spec: ConditionSpec
     ranges: DataFrame | None = None  # (vfrom, vuntil, vdiff_s, <aliases...>, master)
     summary: DataFrame | None = None  # one-row validity rollup (A3)
-    # The whole level's cond_id-grouped rollup this condition's summary is
-    # a filter of — shared by every condition of the level so
-    # summaries_df can union one plan per LEVEL instead of one aggregate
-    # plan per condition (driver-side plan construction was ~1.1 s of the
-    # 10-condition sheet's warm wall before this).
-    tagged_summary: DataFrame | None = None
+    level: LevelResult | None = None  # the level this condition ran in
 
 
 @dataclass
@@ -366,22 +372,22 @@ class CondCollection:
             # The keys frame restores the one-row-per-condition contract:
             # a condition whose blocks matched ZERO observations has no
             # rows in `multi`, and a grouped agg would silently drop it —
-            # downstream reporting (reports.py:74,234) relies on
-            # summary.collect()[0] existing, NULL-filled, for no-data
-            # conditions exactly as the ungrouped rollup produced.
+            # the report rows (reports.summary_rows) rely on its summary
+            # row existing, NULL-filled, for no-data conditions exactly as
+            # the ungrouped rollup produced.
             cid_keys = obs.sparkSession.createDataFrame(
                 [(c,) for c in cond_aliases], "cond_id string"
             )
             lvl_summary = validity_summary(
                 multi, group_cols=["cond_id"], keys=cid_keys
             )
+            level = LevelResult(multi, lvl_summary, cond_aliases)
             for cid in cond_aliases:
-                ranges = condition_view(multi, cid, cond_aliases[cid])
-                results[cid].ranges = ranges
+                results[cid].ranges = condition_view(multi, cid, cond_aliases[cid])
                 results[cid].summary = lvl_summary.where(
                     F.col("cond_id") == F.lit(cid)
                 ).drop("cond_id")
-                results[cid].tagged_summary = lvl_summary
+                results[cid].level = level
         return results
 
     @staticmethod
@@ -392,28 +398,23 @@ class CondCollection:
         collecting summaries one `.collect()` at a time serializes ~10
         small jobs per condition instead.
 
-        Fast path: conditions executed by :meth:`run` share one
-        cond_id-grouped rollup per LEVEL (``tagged_summary``), so the
-        union is one branch per level — plan size and execution stay flat
-        in condition count.  Results built outside run() (no tagged frame)
-        fall back to the per-condition union."""
+        Conditions of a level share one cond_id-grouped rollup
+        (``level.summary``), so the union is one branch per level — plan
+        size and execution stay flat in condition count.  Conditions that
+        did not run (no level) are left out."""
         from functools import reduce
 
-        levels: dict[int, tuple[DataFrame, list[str]]] = {}
-        fallback: list[DataFrame] = []
+        levels: dict[LevelResult, list[str]] = {}
         for cid, res in results.items():
-            if res.tagged_summary is not None:
-                levels.setdefault(id(res.tagged_summary), (res.tagged_summary, []))[
-                    1
-                ].append(cid)
-            elif res.summary is not None:
-                fallback.append(res.summary.select(F.lit(cid).alias("cond_id"), "*"))
+            if res.level is not None:
+                levels.setdefault(res.level, []).append(cid)
         # isin keeps the contract exact when the caller passes a SUBSET of
         # a level's results; on the normal whole-sheet path it is a cheap
         # always-true predicate on a per-level one-row-per-condition frame.
         parts = [
-            df.where(F.col("cond_id").isin(cids)) for df, cids in levels.values()
-        ] + fallback
+            level.summary.where(F.col("cond_id").isin(cids))
+            for level, cids in levels.items()
+        ]
         if not parts:
             return None
         return reduce(DataFrame.unionByName, parts)

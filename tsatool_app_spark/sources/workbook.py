@@ -8,8 +8,8 @@ Reference: an Excel workbook where each sheet is one condition collection
 - rows ≥ 4, columns A/B/C = (site, master_alias, condition); any empty cell
   ⇒ row skipped with an error.
 
-Real .xlsx workbooks are read via openpyxl when present, else via the
-built-in dependency-free codec (sources.xlsx_codec) — no gating either way.
+Real .xlsx workbooks are read by the built-in dependency-free codec
+(sources.xlsx_codec).
 The CSV reader accepts the same sheet layout (the reference itself ships its
 example sheets as CSV exports — example_data/toimiva.csv).
 Everything is driver-side: condition sets are tiny (no distributed read).
@@ -22,6 +22,7 @@ from datetime import datetime
 from pathlib import Path
 
 from tsatool_app_spark.runner import AnalysisCollection, CondCollection
+from tsatool_app_spark.sources.xlsx_codec import read_xlsx
 
 INFO_SHEET_NAMES = {"info"}
 DATE_FORMAT = "%d.%m.%Y"  # d.m.Y per cond_collection.py:490-494
@@ -75,26 +76,11 @@ def read_csv_workbook(dir_path: str, analysis_name: str) -> AnalysisCollection:
 
 
 def read_xlsx_workbook(path: str, analysis_name: str | None = None) -> AnalysisCollection:
-    """S1: Excel workbook intake (analysis_collection.py:67-110).
-
-    Uses openpyxl when present; otherwise the built-in dependency-free
-    codec (sources.xlsx_codec) — real .xlsx files work either way."""
-    try:
-        import openpyxl
-    except ImportError:
-        from tsatool_app_spark.sources.xlsx_codec import read_xlsx
-
-        ac = AnalysisCollection(analysis_name or Path(path).stem)
-        for title, rows in read_xlsx(path).items():
-            if title.lower() in INFO_SHEET_NAMES:
-                continue
-            ac.add_collection(parse_sheet_rows(title, rows))
-        return ac
-    wb = openpyxl.load_workbook(path, read_only=True)
+    """S1: Excel workbook intake (analysis_collection.py:67-110), read by
+    the built-in codec (sources.xlsx_codec)."""
     ac = AnalysisCollection(analysis_name or Path(path).stem)
-    for ws in wb.worksheets:
-        if ws.title.lower() in INFO_SHEET_NAMES:
+    for title, rows in read_xlsx(path).items():
+        if title.lower() in INFO_SHEET_NAMES:
             continue
-        rows = [[c.value for c in row] for row in ws.iter_rows()]
-        ac.add_collection(parse_sheet_rows(ws.title, rows))
+        ac.add_collection(parse_sheet_rows(title, rows))
     return ac
