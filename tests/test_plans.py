@@ -86,8 +86,9 @@ def test_brute_force_topk_uses_take_ordered(spark, sf_dir):
 
 
 def test_pack_ranges_multi_single_shuffle(spark):
-    """The whole-sheet packing pass must stay ONE hash exchange (the
-    broadcast spec join and islands agg reuse it)."""
+    """The whole-sheet packing pass adds ONE hash exchange (on block_id)
+    to the stepping one: the in-plan sensor-key lookup adds none, and the
+    islands agg reuses the block_id partitioning."""
     from datetime import datetime, timedelta
 
     from tsatool_app_spark.operators.ranges import (

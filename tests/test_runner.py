@@ -71,11 +71,20 @@ def test_secondary_chain_and_topo_order(spark):
     assert a.tottime_valid_s == b.tottime_valid_s == 900
 
 
-def test_summaries_df_level_sharing_and_subset(spark):
+def test_summaries_df_level_sharing_and_subset(spark, monkeypatch):
     """r7: conditions of a level share one cond_id-grouped rollup;
     summaries_df must emit one row per condition, values equal to the
     per-condition summaries, and — the subset contract — only the passed
-    conditions when given a filtered results dict."""
+    conditions when given a filtered results dict.
+
+    The run and the sheet collect build every lookup (sensor key → block,
+    block → condition, condition → block columns, condition keys) inside
+    the plan: no driver-side ``createDataFrame`` relation. A3 repeats A1's
+    block (one CSE-shared packed block fanned out to two conditions) and
+    A4 reads A1's sensor key with another predicate (two blocks under one
+    key)."""
+    from pyspark.sql import SparkSession
+
     coll = CondCollection.from_rows(
         "sheet1",
         T0,
@@ -84,15 +93,30 @@ def test_summaries_df_level_sharing_and_subset(spark):
             ("x", "A1", "s1122#tie_1 < 3"),
             ("x", "A2", "s1122#keli_1 = 8"),
             ("x", "B1", "A1 AND A2"),
+            ("x", "A3", "s1122#tie_1 < 3"),
+            ("x", "A4", "s1122#tie_1 >= 3"),
         ],
     )
-    res = coll.run(obs_fixture(spark), sensor_name_to_id=SENSORS)
+    obs = obs_fixture(spark)
+
+    def no_driver_relations(*args, **kwargs):
+        raise AssertionError("createDataFrame on the sheet path")
+
+    with monkeypatch.context() as m:
+        m.setattr(SparkSession, "createDataFrame", no_driver_relations)
+        res = coll.run(obs, sensor_name_to_id=SENSORS)
+        full = {r.cond_id: r for r in CondCollection.summaries_df(res).collect()}
     # level 0 conditions share the level object; B1 (level 1) has its own
     assert res["x_a1"].level is res["x_a2"].level
     assert res["x_b1"].level is not res["x_a1"].level
-    full = {r.cond_id: r for r in CondCollection.summaries_df(res).collect()}
-    assert set(full) == {"x_a1", "x_a2", "x_b1"}
+    assert set(full) == {"x_a1", "x_a2", "x_b1", "x_a3", "x_a4"}
     assert full["x_a1"].tottime_valid_s == 900
+    # the shared block gives both conditions the same values
+    for cid in ("x_a1", "x_a3"):
+        assert (full[cid].tottime_valid_s, full[cid].tottime_notvalid_s) == (900, 1200)
+    # the complement predicate on the same sensor key
+    assert (full["x_a4"].tottime_valid_s, full["x_a4"].tottime_notvalid_s) == (1200, 900)
+    assert full["x_a4"].tottime_nodata_s == 0
     # per-condition summary (filter of the rollup) agrees with the union
     solo = res["x_a2"].summary.collect()[0]
     assert solo.tottime_valid_s == full["x_a2"].tottime_valid_s

@@ -147,12 +147,12 @@ def combine_blocks(blocks: dict[str, DataFrame], alias_condition: str) -> DataFr
     )
 
     # Evaluate each block's state at EVERY timeline point: grid = points ×
-    # aliases (aliases ≤ ~26 per condition — broadcast), left-join events,
-    # carry the last event forward per block.
-    alias_df = tagged.sparkSession.createDataFrame(
-        [(a,) for a in aliases], ["alias"]
-    )
-    grid = pts.crossJoin(F.broadcast(alias_df)).join(events, ["alias", "vt"], "left")
+    # aliases (a literal array exploded per point — no driver-side
+    # relation, no broadcast), left-join events, carry the last event
+    # forward per block.
+    grid = pts.select(
+        "vt", F.explode(F.array(*[F.lit(a) for a in aliases])).alias("alias")
+    ).join(events, ["alias", "vt"], "left")
     wfill = (
         Window.partitionBy("alias")
         .orderBy("vt")
@@ -236,9 +236,9 @@ def combine_tagged(
     ``<cond_id>__<alias>`` and s_start is the sentinel-encoded tri-state.
 
     Callers that already hold an id-keyed ranges relation (the runner's
-    pack_ranges_multi output) build ``tagged`` with ONE broadcast join
-    instead of a per-block union — Catalyst analysis cost stays constant
-    in the number of blocks."""
+    pack_ranges_multi output) build ``tagged`` with one literal-map lookup
+    on the block id instead of a per-block union — Catalyst analysis cost
+    stays constant in the number of blocks."""
     import re
 
     ualias = {
@@ -265,12 +265,23 @@ def combine_tagged(
         .select("cond_id", "ualias", "vt", F.col("ps.s").alias("s"))
     )
 
-    alias_df = tagged.sparkSession.createDataFrame(
-        [(cid, u) for (cid, _), u in ualias.items()], ["cond_id", "ualias"]
+    # cond_id → its ualias columns as a literal map: each timeline point
+    # fans out to its own condition's blocks inside the plan.
+    alias_map = F.create_map(
+        *[
+            col
+            for cid, aliases in cond_aliases.items()
+            for col in (
+                F.lit(cid),
+                F.array(*[F.lit(ualias[(cid, a)]) for a in aliases]),
+            )
+        ]
     )
-    grid = pts.join(F.broadcast(alias_df), "cond_id").join(
-        events, ["cond_id", "ualias", "vt"], "left"
-    )
+    grid = pts.select(
+        "cond_id",
+        "vt",
+        F.explode(F.element_at(alias_map, F.col("cond_id"))).alias("ualias"),
+    ).join(events, ["cond_id", "ualias", "vt"], "left")
     wfill = (
         Window.partitionBy("cond_id", "ualias")
         .orderBy("vt")

@@ -245,25 +245,57 @@ def pack_ranges_multi(
     """Pack EVERY block of a whole sheet in ONE windowed pass.
 
     ``block_specs``: (block_id, statid, seid, operator, value) per block.
-    Rows of ``stepped`` (from prepare_stepped_obs) are joined to the
-    broadcast spec table on the sensor key — a row is duplicated only for
-    blocks sharing its key — then a single generated CASE evaluates each
-    block's predicate, and the islands merge runs partitioned by block_id:
-    ONE shuffle for all blocks, however many the sheet has. Output:
-    (block_id, vfrom, vuntil, istrue) — small (runs, not readings); cache
-    THIS, not the stepped readings.
+    Each row of ``stepped`` (from prepare_stepped_obs) looks its sensor key
+    up in a literal nested map, station then sensor, and is exploded once
+    per block id found there — a row is duplicated only for blocks sharing
+    its key, and a row of an unknown key is dropped. Then a single
+    generated CASE evaluates each block's predicate, and the islands merge
+    runs partitioned by block_id: ONE shuffle for all blocks, however many
+    the sheet has. Output: (block_id, vfrom, vuntil, istrue) — small
+    (runs, not readings); cache THIS, not the stepped readings.
+
+    The lookup is an expression inside the plan, not a driver-side
+    relation: a ``createDataFrame`` table is parallelized through Python
+    workers, and each broadcast of it costs a job. Map lookups scan keys
+    linearly, so nesting keeps the per-reading cost at (#stations +
+    #sensors of one station), not the sheet's block count.
 
     The reference executes one pack_ranges SQL call per block
     (condition.py:329-354): O(#blocks) scans. This is the 100 TB shape:
     O(1) scans, O(1) shuffles per sheet.
     """
-    spark = stepped.sparkSession
-    spec_rows = [(int(b), sid, sev) for b, sid, sev, _, _ in block_specs]
     k0, k1 = key_cols
-    specs_df = spark.createDataFrame(
-        spec_rows, f"block_id int, {k0} {dict(stepped.dtypes)[k0]}, {k1} {dict(stepped.dtypes)[k1]}"
+    t0, t1 = dict(stepped.dtypes)[k0], dict(stepped.dtypes)[k1]
+    by_key: dict = {}
+    for b, sid, sev, _, _ in block_specs:
+        by_key.setdefault(sid, {}).setdefault(sev, []).append(int(b))
+    key_map = F.create_map(
+        *[
+            col
+            for sid, sensors in by_key.items()
+            for col in (
+                F.lit(sid).cast(t0),
+                F.create_map(
+                    *[
+                        col
+                        for sev, bids in sensors.items()
+                        for col in (
+                            F.lit(sev).cast(t1),
+                            F.array(*[F.lit(b) for b in bids]),
+                        )
+                    ]
+                ),
+            )
+        ]
     )
-    joined = stepped.join(F.broadcast(specs_df), list(key_cols), "inner")
+    joined = stepped.select(
+        F.explode(F.element_at(F.element_at(key_map, F.col(k0)), F.col(k1))).alias(
+            "block_id"
+        ),
+        "vfrom",
+        "vuntil",
+        "seval",
+    )
 
     pred = None
     for b, _, _, op, value in block_specs:

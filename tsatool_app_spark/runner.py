@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 from datetime import datetime, time, timedelta
+from functools import reduce
 from graphlib import CycleError, TopologicalSorter
 
 from pyspark.sql import DataFrame, SparkSession
@@ -175,7 +176,11 @@ class CondCollection:
         relation is localCheckpoint-ed — the right trade when results are
         read MANY times (reports, per-condition exports, deep secondary
         chains: lineage truncation keeps driver-side re-analysis flat in
-        sheet size).  For a summaries-only run (ONE action over
+        sheet size).  Even a lazy checkpoint does most of its work inside
+        this call: under AQE, ``localCheckpoint(eager=False)`` runs every
+        shuffle map stage of the level as its own job before returning,
+        and only the final result stage waits for the first action.  For
+        a summaries-only run (ONE action over
         summaries_df) the checkpoint materialization is pure overhead —
         measured r9 at sf0.1, warm interleaved best-of-3: default 5.19 s,
         all-lazy checkpoints 5.55 s, cache_results=False 4.01 s — so
@@ -268,11 +273,12 @@ class CondCollection:
         # downstream plan branches — an unmaterialized cache would be
         # recomputed concurrently inside the fan-out job).  Every other
         # level — in particular the ONLY level of a secondary-free sheet,
-        # the common case — checkpoints lazily: the logical plan is
-        # truncated immediately, but materialization folds into the first
-        # consuming job (normally the sheet-summary job), removing one
-        # serialized job barrier per level (profiled r8: the eager chain
-        # was the residual sheet_workload floor).
+        # the common case — checkpoints lazily, which saves only the final
+        # result stage: under AQE the lazy call still runs each shuffle
+        # map stage of the level as a job inside localCheckpoint (profiled
+        # on a 4-condition sheet: 8 jobs, 1.1 s), and only the result
+        # stage folds into the first consuming job (normally the
+        # sheet-summary collect).
         eager_levels = {
             level_of[b.source_condition_id]
             for spec in self.conditions.values()
@@ -283,17 +289,18 @@ class CondCollection:
         for lvl in sorted(levels):
             # Per level, assemble the tagged ranges relation for
             # combine_tagged: ALL primary blocks come from packed_all via
-            # ONE broadcast map join (block_id → cond_id/ualias — a
-            # CSE-shared block fans out to every condition using it);
-            # secondary blocks add one small branch each.
-            primary_map: list[tuple[int, str, str]] = []
+            # ONE literal map looked up by block_id and exploded (block_id
+            # → [(cond_id, ualias)] — a CSE-shared block fans out to every
+            # condition using it; blocks of other levels find no entry and
+            # drop out); secondary blocks add one small branch each.
+            primary_users: dict[int, list[tuple[str, str]]] = {}
             secondary_parts: list[DataFrame] = []
             cond_aliases: dict[str, list[str]] = {}
             exprs: dict[str, str] = {}
             for cid in levels[lvl]:
                 spec = self.conditions[cid]
                 aliases: list[str] = []
-                pmap: list[tuple[int, str, str]] = []
+                pmap: list[tuple[int, str]] = []
                 sparts: list[DataFrame] = []
                 failed = False
                 for alias, block in spec.blocks.items():
@@ -324,32 +331,45 @@ class CondCollection:
                             )
                         )
                     else:
-                        pmap.append((block_ids[(cid, alias)], cid, f"{cid}__{alias}"))
+                        pmap.append((block_ids[(cid, alias)], f"{cid}__{alias}"))
                     aliases.append(alias)
                 if failed or not aliases:
                     continue
                 cond_aliases[cid] = aliases
                 exprs[cid] = spec.alias_condition
-                primary_map.extend(pmap)
+                for bid, ualias in pmap:
+                    primary_users.setdefault(bid, []).append((cid, ualias))
                 secondary_parts.extend(sparts)
             if not cond_aliases:
                 continue
             tagged_parts = list(secondary_parts)
-            if primary_map:
-                map_df = obs.sparkSession.createDataFrame(
-                    primary_map, "block_id int, cond_id string, ualias string"
+            if primary_users:
+                block_users = F.create_map(
+                    *[
+                        col
+                        for bid, users in primary_users.items()
+                        for col in (
+                            F.lit(bid),
+                            F.array(
+                                *[
+                                    F.struct(
+                                        F.lit(c).alias("cond_id"),
+                                        F.lit(u).alias("ualias"),
+                                    )
+                                    for c, u in users
+                                ]
+                            ),
+                        )
+                    ]
                 )
                 tagged_parts.append(
-                    packed_all.join(F.broadcast(map_df), "block_id").select(
-                        "cond_id",
-                        "ualias",
+                    packed_all.select(
+                        F.inline(F.element_at(block_users, F.col("block_id"))),
                         "vfrom",
                         "vuntil",
                         encode_tristate(F.col("istrue")).alias("s_start"),
                     )
                 )
-            from functools import reduce
-
             tagged = reduce(DataFrame.unionByName, tagged_parts)
             multi = combine_tagged(tagged, exprs, cond_aliases)
             if cache_results:
@@ -375,8 +395,8 @@ class CondCollection:
             # the report rows (reports.summary_rows) rely on its summary
             # row existing, NULL-filled, for no-data conditions exactly as
             # the ungrouped rollup produced.
-            cid_keys = obs.sparkSession.createDataFrame(
-                [(c,) for c in cond_aliases], "cond_id string"
+            cid_keys = obs.sparkSession.range(0, 1, 1, 1).select(
+                F.explode(F.array(*[F.lit(c) for c in cond_aliases])).alias("cond_id")
             )
             lvl_summary = validity_summary(
                 multi, group_cols=["cond_id"], keys=cid_keys
@@ -402,8 +422,6 @@ class CondCollection:
         (``level.summary``), so the union is one branch per level — plan
         size and execution stay flat in condition count.  Conditions that
         did not run (no level) are left out."""
-        from functools import reduce
-
         levels: dict[LevelResult, list[str]] = {}
         for cid, res in results.items():
             if res.level is not None:
