@@ -914,11 +914,16 @@ def pretraining_mix(
     fingerprints, stream from ONE text pass via :func:`decon_probe`, so
     decontamination costs one corpus read, not two).  ``impl="arrow"`` switches the span hashing to the
     mapInPandas bulk path (byte-identical; ~11×).  ``checkpoint``
-    (default on) materializes the two frames consumed by multiple
-    downstream stages (the near-dup survivor set and the decontaminated
-    set) via lazy localCheckpoint so the LSH pipeline is not recomputed
-    per consumer; output is identical either way (the registry oracle
-    runs with the default).
+    (default on) truncates the lineage of six frames with
+    ``localCheckpoint(eager=False)``: the input ``docs``, the clean
+    survivors ``surv``, the near-dup ``losers``, the survivors ``kept``,
+    the decontaminated ``decon_df`` and the budgeted ``mix``, so no
+    stage is recomputed per consumer.  "Lazy" does not mean free: under
+    AQE each call runs the frame's shuffle map stages as jobs before it
+    returns, and only the final result stage waits for the first action
+    — so much of the pipeline's wall time is spent inside these calls,
+    not in the caller's collect.  Output is identical either way (the
+    registry oracle runs with the default).
     """
     from tsatool_app_spark.functions.dedup import (
         anti_join_ids,

@@ -35,17 +35,6 @@ def deterministic_sample(
     return df.where(hash_bucket(F.col(key_col), buckets) < pct)
 
 
-def train_holdout_split(
-    df: DataFrame, holdout_pct: int, key_col: str
-) -> tuple[DataFrame, DataFrame]:
-    """Disjoint, deterministic (train, holdout) split keyed on key_col —
-    membership survives reshuffles, re-ingests, and engine changes."""
-    if not 0 <= holdout_pct <= 100:
-        raise ValueError(f"holdout_pct must be in [0, 100], got {holdout_pct}")
-    b = hash_bucket(F.col(key_col))
-    return df.where(b >= holdout_pct), df.where(b < holdout_pct)
-
-
 def weighted_sample_by_group(
     df: DataFrame,
     group_col: str,

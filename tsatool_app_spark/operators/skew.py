@@ -13,18 +13,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_count(
-    df: DataFrame, key_cols: list[str], *, salt_buckets: int = 32
-) -> DataFrame:
-    """COUNT per key via salt → partial count → merge. Deterministic output,
-    two small shuffles instead of one potentially-skewed one."""
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), salt_buckets)
-    )
-    partial = salted.groupBy(*key_cols, "_salt").agg(F.count(F.lit(1)).alias("_c"))
-    return partial.groupBy(*key_cols).agg(F.sum("_c").cast("long").alias("n"))
-
-
 def salted_sum(
     df: DataFrame,
     key_cols: list[str],

@@ -12,6 +12,9 @@ runs on local[N] for tests and on a large cluster:
   DuckDB oracle; the reference's Europe/Helsinki semantics are applied
   explicitly at ingest/bucketing sites (see sources/csv_ingest.py), never
   implicitly via session state.
+- Generated-class cache sized to the pipelines: a repeated plan compiles
+  each of its generated classes once per session, not on every repeat
+  (measured class counts at the config).
 """
 
 from __future__ import annotations
@@ -105,6 +108,27 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()),
         )
         .config("spark.ui.enabled", "false")
+        # Generated-class cache (a static conf).  Spark's 100 entries are
+        # fewer than the classes one operation compiles, so every repeat of
+        # an unchanged plan (a stream's micro-batches, the CLI re-run over a
+        # workbook) evicted and recompiled all of them: 0.5-0.7 s of a
+        # 2.5-3.2 s warm operation.  Compiles per operation at Spark's
+        # defaults, cold -> warm (4 cores): e2ebench sheet_report 192 -> 180,
+        # corpus_mix 212 -> 201, the registry's 10-condition sheet_workload
+        # 191 -> 172, and the largest repeated unit, a 2-sheet
+        # e2ebench/gen.py workbook through the CLI, 362 -> 347 (212 distinct
+        # classes).  With the two settings below: 138, 172, 114 and 150
+        # cold, 0 warm (now and then 2-3, when AQE picks another join
+        # strategy by stage timing).  Guava splits the capacity over 4
+        # segments and evicts LRU within each one, so the value is ~4.7x the
+        # largest unit, not just above it.  Evicted classes are not
+        # unloaded, so the bigger cache loads fewer classes, not more.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # No stage number in whole-stage class names: AQE numbers stages
+        # in the order it plans them, which varies between runs of one
+        # plan, and a renumbered class misses the cache (sheet_workload
+        # made 2-26 such compiles per warm operation).
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
