@@ -43,14 +43,46 @@ def test_star_join_broadcasts_all_dims(spark, sf_dir):
 
 
 def test_combine_has_no_nested_loop_on_ranges(spark, sf_dir):
-    """The alignment is carry-forward windows; the only nested-loop allowed
-    is the broadcast cross join of timeline points × the tiny alias list."""
+    """The alignment is a pivot and a carry-forward window: no join at all,
+    so no nested loop over the ranges."""
     from tsatool_app_spark.plans.driver_queries import _condition_and_df
 
     plan = executed_plan(_condition_and_df(spark, sf_dir))
-    bnl = re.findall(r"BroadcastNestedLoopJoin[^\n]*", plan)
-    assert len(bnl) <= 1  # the pts × aliases cross join only
+    assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_combine_tagged_single_cond_id_exchange(spark):
+    """A level of conditions combines over ONE exchange, on cond_id: the
+    pivot's aggregates and the carry-forward window reuse it, and nothing
+    is broadcast."""
+    from datetime import datetime, timedelta
+
+    from tsatool_app_spark.operators.combine import combine_tagged
+
+    t0 = datetime(2018, 3, 1)
+    rows = [
+        ("c1", "c1__a1", 0, 10, 1), ("c1", "c1__a1", 10, 20, -1),
+        ("c1", "c1__a2", 5, 15, 0), ("c2", "c2__a1", 0, 30, 1),
+        ("c2", "c2__a2", 30, 40, 0),
+    ]
+    tagged = spark.createDataFrame(
+        [
+            (c, u, t0 + timedelta(minutes=a), t0 + timedelta(minutes=b), s)
+            for c, u, a, b, s in rows
+        ],
+        "cond_id string, ualias string, vfrom timestamp, vuntil timestamp, "
+        "s_start int",
+    )
+    df = combine_tagged(
+        tagged,
+        {"c1": "a1 AND a2", "c2": "a1 OR NOT a2"},
+        {"c1": ["a1", "a2"], "c2": ["a1", "a2"]},
+    )
+    plan = executed_plan(df)
+    assert re.findall(r"\bExchange hashpartitioning\((\w+)", plan) == ["cond_id"]
+    for node in ("BroadcastExchange", "BroadcastNestedLoopJoin", "CartesianProduct"):
+        assert node not in plan
 
 
 def test_text_ops_scan_only_needed_columns(spark, sf_dir):
@@ -86,9 +118,10 @@ def test_brute_force_topk_uses_take_ordered(spark, sf_dir):
 
 
 def test_pack_ranges_multi_single_shuffle(spark):
-    """The whole-sheet packing pass adds ONE hash exchange (on block_id)
-    to the stepping one: the in-plan sensor-key lookup adds none, and the
-    islands agg reuses the block_id partitioning."""
+    """The whole-sheet packing pass adds NO hash exchange to the stepping
+    one: the in-plan sensor-key lookup adds none, and since a block reads
+    one sensor key, the islands windows and agg, keyed by (sensor key,
+    block_id), reuse the stepping pass's (statid, seid) partitioning."""
     from datetime import datetime, timedelta
 
     from tsatool_app_spark.operators.ranges import (
@@ -108,7 +141,7 @@ def test_pack_ranges_multi_single_shuffle(spark):
         stepped, [(0, 1, 3, ">=", 10.0), (1, 2, 3, "<", 20.0)]
     )
     plan = executed_plan(df)
-    assert len(re.findall(r"\bExchange hashpartitioning", plan)) <= 2
+    assert len(re.findall(r"\bExchange hashpartitioning", plan)) == 1
     assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
 
 

@@ -123,6 +123,130 @@ FROM w5 GROUP BY island
     assert got == want
 
 
+# -- Combine: random tri-state blocks against the reference combine SQL ----
+
+# One block: cut points on a small minute grid (so blocks share endpoints),
+# each span between neighbours a gap or a TRUE/FALSE/NULL range — touching
+# ranges where two non-gap spans meet.
+_block_ranges = st.lists(
+    st.integers(min_value=0, max_value=12), min_size=2, max_size=6, unique=True
+).flatmap(
+    lambda pts: st.lists(
+        st.sampled_from(["gap", True, False, None]),
+        min_size=len(pts) - 1,
+        max_size=len(pts) - 1,
+    ).map(
+        lambda states: [
+            (a * 10, b * 10, s)
+            for a, b, s in zip(sorted(pts), sorted(pts)[1:], states)
+            if s != "gap"
+        ]
+    )
+)
+_MASTERS = {
+    1: ["NOT a1", "a1"],
+    2: ["a1 AND NOT a2", "a1 OR a2"],
+    3: ["(a1 OR NOT a2) AND a3", "a1 AND a2 OR NOT a3"],
+}
+_conditions = st.lists(
+    st.integers(min_value=1, max_value=3).flatmap(
+        lambda n: st.tuples(
+            st.lists(_block_ranges, min_size=n, max_size=n),
+            st.sampled_from(_MASTERS[n]),
+        )
+    ),
+    min_size=2,
+    max_size=2,
+)
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(_conditions)
+def test_combine_multi_matches_duckdb_random(spark, conds):
+    """combine_blocks_multi over two conditions equals the reference's
+    combine (condition.py:364-391) run in DuckDB: boundary union, LEAD
+    pairing, one containment LEFT JOIN per block, Kleene master."""
+    from tsatool_app_spark.operators.combine import combine_blocks_multi
+
+    rows = [
+        (f"c{i}", f"a{j + 1}", a, b, s)
+        for i, (blocks, _) in enumerate(conds)
+        for j, ranges in enumerate(blocks)
+        for a, b, s in ranges
+    ]
+    base = spark.createDataFrame(
+        [
+            (c, al, T0 + timedelta(minutes=a), T0 + timedelta(minutes=b), s)
+            for c, al, a, b, s in rows
+        ],
+        "cond_id string, alias string, vfrom timestamp, vuntil timestamp, "
+        "istrue boolean",
+    )
+    cond_blocks = {
+        f"c{i}": {
+            f"a{j + 1}": base.where(
+                f"cond_id = 'c{i}' AND alias = 'a{j + 1}'"
+            ).select("vfrom", "vuntil", "istrue")
+            for j in range(len(blocks))
+        }
+        for i, (blocks, _) in enumerate(conds)
+    }
+    out = combine_blocks_multi(
+        cond_blocks, {f"c{i}": m for i, (_, m) in enumerate(conds)}
+    ).collect()
+
+    def minute(ts):
+        return int((ts - T0).total_seconds() // 60)
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE r (cond_id VARCHAR, alias VARCHAR, vfrom INT, vuntil INT, "
+        "istrue BOOLEAN)"
+    )
+    if rows:
+        con.executemany("INSERT INTO r VALUES (?, ?, ?, ?, ?)", rows)
+    for i, (blocks, master) in enumerate(conds):
+        cid = f"c{i}"
+        aliases = [f"a{j + 1}" for j in range(len(blocks))]
+        got = sorted(
+            (
+                minute(r.vfrom), minute(r.vuntil), r.vdiff_s,
+                *[r[f"{cid}__{a}"] for a in aliases], r.master,
+            )
+            for r in out
+            if r.cond_id == cid
+        )
+        blk = ",".join(
+            f"blk_{a} AS (SELECT vfrom, vuntil, istrue FROM r "
+            f"WHERE cond_id = '{cid}' AND alias = '{a}')"
+            for a in aliases
+        )
+        joins = "\n".join(
+            f"LEFT JOIN blk_{a} ON m.vfrom >= blk_{a}.vfrom "
+            f"AND m.vfrom < blk_{a}.vuntil"
+            for a in aliases
+        )
+        want = sorted(
+            con.sql(
+                f"""
+WITH {blk},
+pts AS (SELECT DISTINCT vt FROM (
+  SELECT vfrom AS vt FROM r WHERE cond_id = '{cid}'
+  UNION ALL SELECT vuntil FROM r WHERE cond_id = '{cid}')),
+mr AS (SELECT vt AS vfrom, lead(vt) OVER (ORDER BY vt) AS vuntil FROM pts),
+m AS (SELECT * FROM mr WHERE vuntil IS NOT NULL),
+aligned AS (
+  SELECT m.vfrom, m.vuntil, (m.vuntil - m.vfrom) * 60 AS vdiff_s,
+         {", ".join(f"blk_{a}.istrue AS {a}" for a in aliases)}
+  FROM m
+  {joins}
+)
+SELECT aligned.*, ({master}) AS master FROM aligned"""
+            ).fetchall()
+        )
+        assert got == want, (cid, master)
+
+
 # -- DSL fuzzing: the parser must never crash, only record errors ---------
 
 dsl_tokens = st.lists(

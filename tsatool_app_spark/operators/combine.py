@@ -17,15 +17,18 @@ Reference semantics (/root/reference/tsa/condition.py:317-414, SURVEY §2.5 W6,
    so the expression transliterates directly.
 
 Spark-first design — the alignment join is rewritten as a carry-forward
-window (SURVEY §2.3 J4 option b): each block's ranges become start/end events
-on the shared boundary timeline; ``last(_, ignorenulls)`` carries each block's
-state forward; a pivot yields one boolean column per block. This is O(n log n)
-per condition with NO theta join (Spark would plan the `&&` overlap as
-BroadcastNestedLoopJoin — O(n²) and a 100 TB cliff). Per-condition timelines
-are small (10²-10⁴ ranges after packing — SURVEY §4), so the single-partition
-windows here are bounded by design; many conditions run as independent
-parallel jobs (see runner.py). For *general* interval joins (arbitrary
-overlap, not alignment) see operators/intervals.py.
+window (SURVEY §2.3 J4 option b): each block's ranges become a start and an
+end event; a pivot yields one row per timeline point (the event times ARE
+the boundary union, so no separate point set or grid is needed) with one
+event column per block; ``last(_, ignorenulls)`` over the condition's
+points carries each block's state forward. This is O(n log n) per condition
+with NO theta join (Spark would plan the `&&` overlap as
+BroadcastNestedLoopJoin — O(n²) and a 100 TB cliff), and every step runs
+within one condition, so a whole level of conditions shuffles ONCE, on
+cond_id. Per-condition timelines are small (10²-10⁴ ranges after packing —
+SURVEY §4), so each condition's window partition is bounded by design. For
+*general* interval joins (arbitrary overlap, not alignment) see
+operators/intervals.py.
 
 The reference's single-block shortcut (condition.py:355-363) indexes
 ``blocks.keys()[0]`` — a latent Py3 crash; the intent is clear from the
@@ -34,6 +37,7 @@ multi-block path and is implemented correctly here (SURVEY §7.2.4).
 
 from __future__ import annotations
 
+import re
 from functools import reduce
 
 from pyspark.sql import DataFrame, Window
@@ -46,6 +50,9 @@ from pyspark.sql import functions as F
 # both uncovered master ranges and covered-but-unknown ones).
 _ENC_GAP = -2
 
+# combine_blocks' condition id: the multi-condition plan under one key.
+_ONE_CID = "c"
+
 
 def _encode(istrue_col):
     return F.coalesce(istrue_col.cast("int"), F.lit(-1))
@@ -53,14 +60,6 @@ def _encode(istrue_col):
 
 #: Public name for callers building pre-tagged input for combine_tagged.
 encode_tristate = _encode
-
-
-def _decode(s_col):
-    return (
-        F.when(s_col == 1, F.lit(True))
-        .when(s_col == 0, F.lit(False))
-        .otherwise(F.lit(None).cast("boolean"))
-    )
 
 
 def boundary_segmentation(tagged_ranges: DataFrame) -> DataFrame:
@@ -93,7 +92,8 @@ def combine_blocks(blocks: dict[str, DataFrame], alias_condition: str) -> DataFr
 
     Returns (vfrom, vuntil, vdiff_s, <alias...>, master) — the reference's
     per-condition temp-table schema (condition.py:349-391) with ``vdiff`` as
-    seconds (LongType) instead of a Postgres interval (SURVEY §1.4).
+    seconds (LongType) instead of a Postgres interval (SURVEY §1.4). Two or
+    more blocks run :func:`combine_blocks_multi` as a one-condition plan.
     """
     if not blocks:
         raise ValueError("combine_blocks requires at least one block")
@@ -107,77 +107,15 @@ def combine_blocks(blocks: dict[str, DataFrame], alias_condition: str) -> DataFr
         return df.select(
             "vfrom",
             "vuntil",
-            _vdiff_s().alias("vdiff_s"),
+            (F.col("vuntil").cast("long") - F.col("vfrom").cast("long")).alias(
+                "vdiff_s"
+            ),
             F.col("istrue").alias(alias),
             F.col("istrue").alias("master"),
         )
 
-    # Tag and union all blocks' ranges (U1); sentinel-encode the tri-state.
-    tagged = reduce(
-        DataFrame.unionByName,
-        [
-            df.select(
-                F.lit(alias).alias("alias"),
-                "vfrom",
-                "vuntil",
-                _encode(F.col("istrue")).alias("s_start"),
-            )
-            for alias, df in blocks.items()
-        ],
-    )
-
-    # Boundary timeline points (W6). explode+distinct ≡ the reference's
-    # unnest(array[..]) UNION dedup (U1/U2, condition.py:365-369).
-    pts = tagged.select(F.explode(F.array("vfrom", "vuntil")).alias("vt")).distinct()
-
-    # Start/end events per block. At equal vt a start (prio 1) beats the
-    # preceding range's end (prio 0) — adjacent half-open ranges hand over
-    # state exactly at the boundary.
-    starts = tagged.select(
-        "alias", F.col("vfrom").alias("vt"), F.lit(1).alias("prio"), F.col("s_start").alias("s")
-    )
-    ends = tagged.select(
-        "alias", F.col("vuntil").alias("vt"), F.lit(0).alias("prio"), F.lit(_ENC_GAP).alias("s")
-    )
-    events = (
-        starts.unionByName(ends)
-        .groupBy("alias", "vt")
-        .agg(F.max(F.struct("prio", "s")).alias("ps"))
-        .select("alias", "vt", F.col("ps.s").alias("s"))
-    )
-
-    # Evaluate each block's state at EVERY timeline point: grid = points ×
-    # aliases (a literal array exploded per point — no driver-side
-    # relation, no broadcast), left-join events, carry the last event
-    # forward per block.
-    grid = pts.select(
-        "vt", F.explode(F.array(*[F.lit(a) for a in aliases])).alias("alias")
-    ).join(events, ["alias", "vt"], "left")
-    wfill = (
-        Window.partitionBy("alias")
-        .orderBy("vt")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    filled = grid.withColumn("sf", F.last("s", ignorenulls=True).over(wfill))
-
-    # One row per timeline point, one sentinel column per alias.
-    wide = filled.groupBy("vt").pivot("alias", aliases).agg(F.first("sf"))
-
-    # Pair adjacent points (LEAD) → master ranges; decode sentinels; evaluate
-    # the Kleene master expression (§2.8) as a Spark SQL expr.
-    wlead = Window.orderBy("vt")
-    ranged = (
-        wide.withColumn("vuntil", F.lead("vt").over(wlead))
-        .where(F.col("vuntil").isNotNull())
-        .withColumnRenamed("vt", "vfrom")
-    )
-    decoded = ranged.select(
-        "vfrom",
-        "vuntil",
-        _vdiff_s().alias("vdiff_s"),
-        *[_decode(F.col(a)).alias(a) for a in aliases],
-    )
-    return decoded.withColumn("master", F.expr(alias_condition))
+    multi = combine_blocks_multi({_ONE_CID: blocks}, {_ONE_CID: alias_condition})
+    return condition_view(multi, _ONE_CID, aliases)
 
 
 def combine_blocks_multi(
@@ -189,11 +127,10 @@ def combine_blocks_multi(
     ``cond_blocks``: cond_id → (alias → ranges DF); ``alias_conditions``:
     cond_id → boolean expression over that condition's aliases.
 
-    Same algorithm as :func:`combine_blocks`, with every window/groupBy
-    partitioned by ``cond_id`` — a sheet of N conditions costs the SAME
-    ~6 exchanges as one condition, with per-condition timelines as
-    independent partitions (the single-condition path costs ~13 small
-    exchanges × N jobs). Block columns live in a global namespace
+    Every step of :func:`combine_tagged` runs within one condition, so a
+    sheet of N conditions shuffles its ranges ONCE, on cond_id, the same
+    as one condition, with per-condition timelines as independent window
+    partitions. Block columns live in a global namespace
     ``<cond_id>__<alias>`` (aliases are only unique within a condition);
     the master expression is rewritten accordingly and evaluated per
     condition via a CASE over cond_id.
@@ -204,16 +141,12 @@ def combine_blocks_multi(
     if not cond_blocks:
         raise ValueError("combine_blocks_multi requires at least one condition")
 
-    ualias = {
-        (cid, a): f"{cid}__{a}" for cid, blocks in cond_blocks.items() for a in blocks
-    }
-
     tagged = reduce(
         DataFrame.unionByName,
         [
             df.select(
                 F.lit(cid).alias("cond_id"),
-                F.lit(ualias[(cid, a)]).alias("ualias"),
+                F.lit(f"{cid}__{a}").alias("ualias"),
                 "vfrom",
                 "vuntil",
                 _encode(F.col("istrue")).alias("s_start"),
@@ -238,82 +171,52 @@ def combine_tagged(
     Callers that already hold an id-keyed ranges relation (the runner's
     pack_ranges_multi output) build ``tagged`` with one literal-map lookup
     on the block id instead of a per-block union — Catalyst analysis cost
-    stays constant in the number of blocks."""
-    import re
+    stays constant in the number of blocks.
 
+    The plan has ONE exchange: ``tagged`` is hash-partitioned on cond_id,
+    and the pivot's aggregates and the window all reuse that partitioning.
+    It is exact because:
+
+    - a block's ranges are disjoint, so a (block, point) holds at most one
+      start (encoded -1/0/1) and one end (-2): ``max`` makes the start win,
+      the hand-over of adjacent half-open ranges;
+    - the timeline points are exactly the event times (the boundary union);
+    - carrying each block's last event forward over ALL of its condition's
+      points equals carrying it over that block's own alignment.
+    """
     ualias = {
         (cid, a): f"{cid}__{a}" for cid, aliases in cond_aliases.items() for a in aliases
     }
     all_ucols = list(ualias.values())
 
-    pts = tagged.select(
-        "cond_id", F.explode(F.array("vfrom", "vuntil")).alias("vt")
-    ).distinct()
-
-    starts = tagged.select(
-        "cond_id", "ualias", F.col("vfrom").alias("vt"),
-        F.lit(1).alias("prio"), F.col("s_start").alias("s"),
-    )
-    ends = tagged.select(
-        "cond_id", "ualias", F.col("vuntil").alias("vt"),
-        F.lit(0).alias("prio"), F.lit(_ENC_GAP).alias("s"),
-    )
-    events = (
-        starts.unionByName(ends)
-        .groupBy("cond_id", "ualias", "vt")
-        .agg(F.max(F.struct("prio", "s")).alias("ps"))
-        .select("cond_id", "ualias", "vt", F.col("ps.s").alias("s"))
-    )
-
-    # cond_id → its ualias columns as a literal map: each timeline point
-    # fans out to its own condition's blocks inside the plan.
-    alias_map = F.create_map(
-        *[
-            col
-            for cid, aliases in cond_aliases.items()
-            for col in (
-                F.lit(cid),
-                F.array(*[F.lit(ualias[(cid, a)]) for a in aliases]),
+    events = tagged.repartition("cond_id").select(
+        "cond_id",
+        "ualias",
+        F.inline(
+            F.array(
+                F.struct(F.col("vfrom").alias("vt"), F.col("s_start").alias("s")),
+                F.struct(F.col("vuntil").alias("vt"), F.lit(_ENC_GAP).alias("s")),
             )
-        ]
+        ),
     )
-    grid = pts.select(
-        "cond_id",
-        "vt",
-        F.explode(F.element_at(alias_map, F.col("cond_id"))).alias("ualias"),
-    ).join(events, ["cond_id", "ualias", "vt"], "left")
-    wfill = (
-        Window.partitionBy("cond_id", "ualias")
-        .orderBy("vt")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    filled = grid.withColumn("sf", F.last("s", ignorenulls=True).over(wfill))
+    wide = events.groupBy("cond_id", "vt").pivot("ualias", all_ucols).agg(F.max("s"))
 
-    wide = filled.groupBy("cond_id", "vt").pivot("ualias", all_ucols).agg(F.first("sf"))
-
-    wlead = Window.partitionBy("cond_id").orderBy("vt")
-    ranged = (
-        wide.withColumn("vuntil", F.lead("vt").over(wlead))
-        .where(F.col("vuntil").isNotNull())
-        .withColumnRenamed("vt", "vfrom")
-    )
-    # Decode + master as TWO parser calls instead of ~8 Column-builder
-    # round trips per block column: each py4j call costs ~1-3 ms on the
-    # driver, and at 23 block columns the per-column when/otherwise/alias
-    # chains were a measurable slice of the sheet's plan-construction
-    # wall (profiled r7).  The SQL is semantically identical: CASE with
-    # no ELSE yields NULL boolean, matching _decode.
-    decoded = ranged.selectExpr(
+    # Window, decode and master as THREE parser calls instead of several
+    # Column-builder round trips per block column: each py4j call costs
+    # ~1-3 ms on the driver, and at 23 block columns the per-column chains
+    # were a measurable slice of the sheet's plan-construction wall
+    # (profiled r7).
+    win = "OVER (PARTITION BY cond_id ORDER BY vt"
+    ranged = wide.selectExpr(
         "cond_id",
-        "vfrom",
-        "vuntil",
-        "(CAST(vuntil AS LONG) - CAST(vfrom AS LONG)) AS vdiff_s",
+        "vt AS vfrom",
+        f"lead(vt) {win}) AS vuntil",
         *[
-            f"CASE WHEN `{u}` = 1 THEN true WHEN `{u}` = 0 THEN false "
-            f"END AS `{u}`"
+            f"last(`{u}`, true) {win} ROWS BETWEEN UNBOUNDED PRECEDING "
+            f"AND CURRENT ROW) AS `{u}`"
             for u in all_ucols
         ],
-    )
+    ).where("vuntil IS NOT NULL")
 
     branches = []
     for cid, aliases in cond_aliases.items():
@@ -328,8 +231,18 @@ def combine_tagged(
         # quote, so arbitrary public-API cond_ids can't break the CASE.
         cid_lit = cid.replace("\\", "\\\\").replace("'", "\\'")
         branches.append(f"WHEN cond_id = '{cid_lit}' THEN ({expr_str})")
-    master = F.expr("CASE " + " ".join(branches) + " END")
-    return decoded.withColumn("master", master)
+    return ranged.selectExpr(
+        "cond_id",
+        "vfrom",
+        "vuntil",
+        "(CAST(vuntil AS LONG) - CAST(vfrom AS LONG)) AS vdiff_s",
+        # CASE with no ELSE: the -1/-2 sentinels, and a block with no
+        # event yet, decode to a NULL boolean.
+        *[
+            f"CASE WHEN `{u}` = 1 THEN true WHEN `{u}` = 0 THEN false END AS `{u}`"
+            for u in all_ucols
+        ],
+    ).selectExpr("*", "CASE " + " ".join(branches) + " END AS master")
 
 
 def condition_view(
@@ -344,11 +257,3 @@ def condition_view(
         *[F.col(f"{cond_id}__{a}").alias(a) for a in aliases],
         "master",
     )
-
-
-def _vdiff_s():
-    # vdiff as exact whole seconds (LongType); the reference's interval
-    # subtraction upper-lower (condition.py:360, 389) summed in pandas.
-    return (
-        F.col("vuntil").cast("long") - F.col("vfrom").cast("long")
-    ).cast("long")

@@ -250,9 +250,11 @@ def pack_ranges_multi(
     per block id found there — a row is duplicated only for blocks sharing
     its key, and a row of an unknown key is dropped. Then a single
     generated CASE evaluates each block's predicate, and the islands merge
-    runs partitioned by block_id: ONE shuffle for all blocks, however many
-    the sheet has. Output: (block_id, vfrom, vuntil, istrue) — small
-    (runs, not readings); cache THIS, not the stepped readings.
+    runs partitioned by (sensor key, block_id). A block reads one sensor
+    key, so that partitioning is the stepping pass's own: for all blocks,
+    however many the sheet has, the pack adds NO shuffle. Output:
+    (block_id, vfrom, vuntil, istrue) — small (runs, not readings); cache
+    THIS, not the stepped readings.
 
     The lookup is an expression inside the plan, not a driver-side
     relation: a ``createDataFrame`` table is parallelized through Python
@@ -262,7 +264,7 @@ def pack_ranges_multi(
 
     The reference executes one pack_ranges SQL call per block
     (condition.py:329-354): O(#blocks) scans. This is the 100 TB shape:
-    O(1) scans, O(1) shuffles per sheet.
+    one scan and one shuffle per sheet.
     """
     k0, k1 = key_cols
     t0, t1 = dict(stepped.dtypes)[k0], dict(stepped.dtypes)[k1]
@@ -289,6 +291,8 @@ def pack_ranges_multi(
         ]
     )
     joined = stepped.select(
+        k0,
+        k1,
         F.explode(F.element_at(F.element_at(key_map, F.col(k0)), F.col(k1))).alias(
             "block_id"
         ),
@@ -306,12 +310,14 @@ def pack_ranges_multi(
             else pred.when(F.col("block_id") == int(b), branch)
         )
     sent = joined.select(
+        k0,
+        k1,
         "block_id",
         "vfrom",
         "vuntil",
         F.coalesce(pred.cast("int"), F.lit(-1)).alias("s"),
     )
-    wk = Window.partitionBy("block_id").orderBy("vfrom")
+    wk = Window.partitionBy(k0, k1, "block_id").orderBy("vfrom")
     chg = F.when(
         F.lag("s").over(wk).isNull() | (F.lag("s").over(wk) != F.col("s")), 1
     ).otherwise(0)
@@ -319,7 +325,7 @@ def pack_ranges_multi(
         "island", F.sum(chg).over(wk.rowsBetween(Window.unboundedPreceding, 0))
     )
     return (
-        islands.groupBy("block_id", "island")
+        islands.groupBy(k0, k1, "block_id", "island")
         .agg(
             F.min("vfrom").alias("vfrom"),
             F.max("vuntil").alias("vuntil"),

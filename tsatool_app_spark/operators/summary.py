@@ -31,30 +31,31 @@ def validity_summary(
       percentages      = each / tottime
     Durations are exact whole seconds (long); percentages double.
 
-    ``keys`` (requires ``group_cols``): a one-row-per-expected-group frame
-    holding exactly the ``group_cols`` columns. It is left-joined onto the
-    grouped aggregate so a group with NO input rows still yields one row,
-    with the same shape the ungrouped rollup produces on empty input:
-    NULL data_from/data_until/tottime, zero valid/notvalid, NULL
-    percentages. This preserves the reference's one-row-per-condition
-    contract (condition.py:435-446 always emits a row) when many
-    conditions share one grouped rollup.
+    ``keys`` (requires ``group_cols``): a frame holding exactly the
+    ``group_cols`` columns, and it must name EVERY group, those of
+    ``cond_df`` included: it adds the groups that have no rows and filters
+    out none. Its rows are unioned onto
+    ``cond_df`` with NULL values before the grouping, so a group with NO
+    input rows still yields one row, with the same shape the ungrouped
+    rollup produces on empty input: NULL data_from/data_until/tottime,
+    zero valid/notvalid, NULL percentages (min, max and sum skip NULLs).
+    This preserves the reference's one-row-per-condition contract
+    (condition.py:435-446 always emits a row) when many conditions share
+    one grouped rollup, with one aggregation and no join.
     """
     gcols = group_cols or []
     if keys is not None and not gcols:
         raise ValueError("keys requires group_cols")
+    if keys is not None:
+        cond_df = cond_df.select(
+            *gcols, "vfrom", "vuntil", "vdiff_s", "master"
+        ).unionByName(keys.select(*gcols), allowMissingColumns=True)
     agg = cond_df.groupBy(*gcols).agg(
         F.min("vfrom").alias("data_from"),
         F.max("vuntil").alias("data_until"),
         F.sum(F.when(F.col("master") == True, F.col("vdiff_s"))).alias("_valid"),  # noqa: E712
         F.sum(F.when(F.col("master") == False, F.col("vdiff_s"))).alias("_notvalid"),  # noqa: E712
     )
-    if keys is not None:
-        # Broadcast the BUILD side: `agg` is one row per group — tiny —
-        # and a left-outer BroadcastHashJoin can only build from the
-        # non-preserved (right) side; a hint on the preserved `keys` side
-        # would be silently unusable (r9, ADVICE r8).
-        agg = keys.select(*gcols).join(F.broadcast(agg), gcols, "left")
     tot = F.col("data_until").cast("long") - F.col("data_from").cast("long")
     valid = F.coalesce(F.col("_valid"), F.lit(0)).cast("long")
     notvalid = F.coalesce(F.col("_notvalid"), F.lit(0)).cast("long")

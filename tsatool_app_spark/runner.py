@@ -176,16 +176,16 @@ class CondCollection:
         relation is localCheckpoint-ed — the right trade when results are
         read MANY times (reports, per-condition exports, deep secondary
         chains: lineage truncation keeps driver-side re-analysis flat in
-        sheet size).  Even a lazy checkpoint does most of its work inside
-        this call: under AQE, ``localCheckpoint(eager=False)`` runs every
-        shuffle map stage of the level as its own job before returning,
-        and only the final result stage waits for the first action.  For
-        a summaries-only run (ONE action over
-        summaries_df) the checkpoint materialization is pure overhead —
-        measured r9 at sf0.1, warm interleaved best-of-3: default 5.19 s,
-        all-lazy checkpoints 5.55 s, cache_results=False 4.01 s — so
-        summaries-only callers should pass False; outputs are identical
-        (every level relation is deterministic, recomputes included).
+        sheet size).  Even a lazy checkpoint does part of its work inside
+        this call: under AQE, ``localCheckpoint(eager=False)`` runs the
+        level's shuffle map stage (combine_tagged's one cond_id exchange)
+        as a job before returning, and only the final result stage waits
+        for the first action.  False skips the materialization; outputs
+        are identical (every level relation is deterministic, recomputes
+        included), but a secondary level then recomputes the levels it
+        reads.  Summaries-only timing of the registry's 10-condition
+        sheet_workload at sf0.1 (4 cores, warm, median of 6): checkpointed
+        0.88 s, False 1.03 s.
         """
         windowed = obs.where(
             F.col(time_col).between(F.lit(self.time_from), F.lit(self.time_until))
@@ -258,8 +258,8 @@ class CondCollection:
 
         # Topological LEVELS: every condition in a level depends only on
         # earlier levels, so each level combines as ONE multi-condition
-        # plan (combine_blocks_multi — N conditions for the exchange cost
-        # of one). Level counts are small in practice (0 = primaries,
+        # plan (combine_tagged — one cond_id exchange for all N
+        # conditions). Level counts are small in practice (0 = primaries,
         # 1+ = secondary chains).
         level_of: dict[str, int] = {}
         for cid in order:
@@ -273,11 +273,10 @@ class CondCollection:
         # downstream plan branches — an unmaterialized cache would be
         # recomputed concurrently inside the fan-out job).  Every other
         # level — in particular the ONLY level of a secondary-free sheet,
-        # the common case — checkpoints lazily, which saves only the final
-        # result stage: under AQE the lazy call still runs each shuffle
-        # map stage of the level as a job inside localCheckpoint (profiled
-        # on a 4-condition sheet: 8 jobs, 1.1 s), and only the result
-        # stage folds into the first consuming job (normally the
+        # the common case — checkpoints lazily, which saves the final
+        # result stage: under AQE the lazy call still runs the level's one
+        # shuffle map stage as a job inside localCheckpoint, and the
+        # result stage folds into the first consuming job (normally the
         # sheet-summary collect).
         eager_levels = {
             level_of[b.source_condition_id]

@@ -49,7 +49,15 @@ def get_spark(
     ``master``/``shuffle_partitions`` default from env (SPARK_GRAFT_CPUS) so
     tests, bench.py, and the driver harness share one code path. On a real
     cluster, pass ``master=None`` with spark-submit providing the master.
+
+    An active session is returned as it is: the defaults and ``extra_conf``
+    apply only when a session is built. (The builder's getOrCreate would
+    re-apply every runtime option to the live session, undoing what its
+    first caller set.)
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
         master = f"local[{cpus}]"
