@@ -385,8 +385,8 @@ def test_corpus_datacard_values(spark):
 def test_pretraining_mix_seams(spark):
     """r9 (VERDICT r8 ask #7): the composed pipeline drops each planted
     document at exactly the stage built to catch it, carries the
-    id/schema contract between stages, and the checkpoint knob is
-    output-inert."""
+    id/schema contract between stages, the checkpoint knob is
+    output-inert, and the pipeline stays under its job floor."""
     from tsatool_app_spark.functions.corpus import pretraining_mix
 
     # a base corpus of good-quality english docs in two sources; bodies
@@ -425,10 +425,19 @@ def test_pretraining_mix_seams(spark):
     bench = spark.createDataFrame(
         [(1000, bench_text)], "doc_id long, text string"
     )
-    out = pretraining_mix(
-        docs, bench, {"srcA": 10_000, "srcB": 10_000}, n_shards=2
-    )
-    got = {r.doc_id: r for r in out.collect()}
+    sc = spark.sparkContext
+    sc.setJobGroup("pretraining-mix-seams", "pretraining-mix-seams")
+    try:
+        out = pretraining_mix(
+            docs, bench, {"srcA": 10_000, "srcB": 10_000}, n_shards=2
+        )
+        got = {r.doc_id: r for r in out.collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+    # The job floor: 35 jobs with the row-wise near-dup verify and no
+    # re-dedup of the distinct survivors, 51 before.
+    assert len(sc.statusTracker().getJobIdsForGroup("pretraining-mix-seams")) <= 40
     assert 100 not in got  # exact clone: min-id survivor is doc 0
     assert 101 not in got  # near-dup cluster: min-id survivor is doc 2
     assert 102 not in got  # contaminated: n-gram and span filters

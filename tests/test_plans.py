@@ -468,3 +468,30 @@ def test_grouped_topk_window_group_limit(spark):
     assert sorted(map(tuple, out.collect())) == sorted(
         map(tuple, arrow.collect())
     )
+
+
+def test_ngram_jaccard_verifies_row_wise(spark):
+    """ngram_jaccard_pairs builds both shingle sets on the joined pair
+    row: no Generate (no shingle explode) and every shuffle keyed on a
+    pair id, never on a shingle.  Broadcast is off so the joins show
+    their exchanges."""
+    from pyspark.sql import functions as F
+
+    from tsatool_app_spark.functions.dedup import ngram_jaccard_pairs
+
+    docs = spark.range(0, 200).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("document number "), F.col("id").cast("string")).alias("text"),
+    )
+    pairs = spark.range(0, 199).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        plan = executed_plan(ngram_jaccard_pairs(docs, pairs))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "Generate" not in plan, plan
+    keys = re.findall(r"hashpartitioning\((\w+)#", plan)
+    assert keys and set(keys) <= {"id_a", "id_b"}, plan

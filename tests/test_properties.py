@@ -18,7 +18,7 @@ from datetime import datetime, timedelta
 
 import duckdb
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from tsatool_app_spark.operators.ranges import pack_ranges_all_keys
@@ -528,3 +528,63 @@ def test_dedup_first_equivalence_random(spark, corpus):
         ).collect()
     }
     assert fast == raw
+
+
+# Texts for the pair-verify reference: NULL, "", shorter than k, repeated
+# shingles (tiny alphabet), a newline and a surrogate-pair character.
+_verify_texts = st.one_of(st.none(), st.text(alphabet="ab \n😀", max_size=10))
+
+
+def _shingle_set(text, k):
+    if len(text) < k:
+        return {text}
+    return {text[i:i + k] for i in range(len(text) - k + 1)}
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    texts=st.lists(_verify_texts, min_size=1, max_size=6),
+    pairs=st.lists(
+        st.tuples(st.integers(0, 7), st.integers(0, 7)), max_size=10
+    ),
+    k=st.integers(1, 4),
+)
+@example(
+    texts=[None, "", "ab", "aaaaaa", "ab\n😀ab"],
+    # self pair, reversed pair, duplicate pair, an id with no text
+    pairs=[(0, 0), (1, 1), (2, 3), (3, 2), (3, 3), (3, 4), (3, 4), (0, 4), (4, 7)],
+    k=3,
+)
+def test_pair_overlap_matches_set_reference(spark, texts, pairs, k):
+    """ngram_jaccard_pairs and ngram_containment_pairs equal a pure-Python
+    shingle-set reference, one output row per candidate row whose two ids
+    have a text.  A text shorter than k is its own one shingle; a NULL
+    text has one shingle that matches nothing."""
+    from tsatool_app_spark.functions.dedup import (
+        ngram_containment_pairs,
+        ngram_jaccard_pairs,
+    )
+
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    cands = spark.createDataFrame(pairs, "id_a long, id_b long")
+    jac, con = [], []
+    for a, b in pairs:
+        if a >= len(texts) or b >= len(texts):
+            continue
+        ta, tb = texts[a], texts[b]
+        n_a = 1 if ta is None else len(_shingle_set(ta, k))
+        n_b = 1 if tb is None else len(_shingle_set(tb, k))
+        inter = (
+            0 if ta is None or tb is None
+            else len(_shingle_set(ta, k) & _shingle_set(tb, k))
+        )
+        jac.append((a, b, inter / (n_a + n_b - inter)))
+        con.append((a, b, inter, min(n_a, n_b), inter / min(n_a, n_b)))
+    got_jac = sorted(
+        map(tuple, ngram_jaccard_pairs(docs, cands, shingle_k=k).collect())
+    )
+    got_con = sorted(
+        map(tuple, ngram_containment_pairs(docs, cands, shingle_k=k).collect())
+    )
+    assert got_jac == sorted(jac)
+    assert got_con == sorted(con)

@@ -908,17 +908,18 @@ def pretraining_mix(
 
     Plan shape at 100 TB: the composition adds only left-semi/left-anti
     joins on doc_id between stages — id-only shuffles; text rides only
-    the stages that hash it (near-dup shingles over one representative
-    per distinct text, decontamination probes against BROADCAST
+    the stages that hash it (near-dup shingles over the exact-dedup
+    survivors, one doc per distinct text, decontamination probes against BROADCAST
     benchmark keys — and BOTH decon probes, word grams and span
     fingerprints, stream from ONE text pass via :func:`decon_probe`, so
     decontamination costs one corpus read, not two).  ``impl="arrow"`` switches the span hashing to the
     mapInPandas bulk path (byte-identical; ~11×).  ``checkpoint``
-    (default on) truncates the lineage of six frames with
+    (default on) truncates the lineage of five frames with
     ``localCheckpoint(eager=False)``: the input ``docs``, the clean
-    survivors ``surv``, the near-dup ``losers``, the survivors ``kept``,
-    the decontaminated ``decon_df`` and the budgeted ``mix``, so no
-    stage is recomputed per consumer.  "Lazy" does not mean free: under
+    survivors ``surv``, the near-dup survivors ``kept``, the
+    decontaminated ``decon_df`` and the budgeted ``mix``, so no stage is
+    recomputed per consumer (the near-dup loser ids are the components
+    loop's last checkpointed labels already).  "Lazy" does not mean free: under
     AQE each call runs the frame's shuffle map stages as jobs before it
     returns, and only the final result stage waits for the first action
     — so much of the pipeline's wall time is spent inside these calls,
@@ -957,20 +958,13 @@ def pretraining_mix(
         # 2.5x the staged sum at sf1 before these checkpoints).
         surv = surv.localCheckpoint(eager=False)
 
-    # Near-dup survivorship at REPRESENTATIVE level (r13): identical
-    # loser set to connected_components over the expanded doc-level pair
-    # graph (near_dedup_loser_ids docstring has the proof; pinned by
-    # test_near_dedup_loser_ids_matches_expanded), without materializing
-    # the O(Σ clone_group²) pair expansion the components loop would
-    # immediately contract away.
-    losers = near_dedup_loser_ids(surv, min_jaccard=min_jaccard)
-    if checkpoint:
-        losers = losers.localCheckpoint(eager=False)
-    # loser-set size is dup-rate-dependent (O(corpus) on web crawls):
-    # broadcast only under the counted bound; past it, anti-join on
-    # 8-byte ids with no hint (anti_join_ids rationale).  The count job
-    # doubles as the losers-checkpoint materialization.
-    kept = anti_join_ids(surv, losers, "doc_id")
+    # Near-dup survivorship over the survivors themselves: they are one
+    # doc per distinct text already (clean_corpus keeps the min id per
+    # md5), which is near_dedup_loser_ids' precondition.  The loser count
+    # comes out of the components loop, so the counted broadcast gate
+    # (anti_join_ids rationale) runs no job of its own.
+    losers, n_losers = near_dedup_loser_ids(surv, min_jaccard=min_jaccard)
+    kept = anti_join_ids(surv, losers, "doc_id", n_ids=n_losers)
     if checkpoint:
         kept = kept.localCheckpoint(eager=False)
 

@@ -12,8 +12,9 @@ Training-data-pipeline operators (BASELINE.json north star), designed for
 - SimHash: 3-gram hashes → per-bit vote aggregation → 56/64-bit signature;
   near-dups = signatures at small Hamming distance, found by COMBINATION
   block probing (Manku §3) with capped + audited probe buckets;
-- n-gram Jaccard: exact verification of candidate pairs (explode + join) —
-  run AFTER LSH pruning, never all-pairs.
+- n-gram Jaccard: exact verification of candidate pairs, row by row (each
+  pair joins its two texts; array_distinct/array_intersect of their
+  shingles on the joined row) — run AFTER LSH pruning, never all-pairs.
 """
 
 from __future__ import annotations
@@ -42,12 +43,22 @@ def exact_dedup_groups(
 
 
 def shingles(text_col: Column, k: int = 5) -> Column:
-    """Character k-shingles as an array column (built-ins only):
-    transform(sequence(1, len-k+1), i -> substring(text, i, k))."""
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(text_col) - (k - 1), F.lit(1))),
-        lambda i: F.substring(text_col, i, k),
-    )
+    """Character k-shingles as an array column, in text order: the
+    ``k``-character substring at every position with ``k`` characters
+    left, or ``[text]`` when the text is shorter than ``k`` (``[NULL]``
+    for NULL) — the values of ``transform(sequence(1, greatest(len-k+1,
+    1)), i -> substring(text, i, k))``.
+
+    One ``regexp_extract_all`` pass: the lookahead captures the next k
+    characters and ``.`` steps one code point, so a surrogate pair is one
+    character, as it is to ``length`` and ``substring``.  The lambda form
+    is evaluated element by element without codegen; on 100k 300-char
+    texts (4 cores) ``size(array_distinct(..))`` took 5.2 s with it and
+    0.9-1.4 s with the regexp."""
+    return F.when(
+        F.length(text_col) >= k,
+        F.regexp_extract_all(text_col, F.lit(f"(?s)(?=(.{{{k}}}))."), F.lit(1)),
+    ).otherwise(F.array(text_col))
 
 
 def minhash_signatures(
@@ -86,10 +97,10 @@ def minhash_signatures(
     exploded = narrow.select(
         F.col(id_col), F.explode(shingles(F.col(text_col), shingle_k)).alias("sh")
     ).select(id_col, F.pmod(F.xxhash64("sh"), F.lit(p)).alias("x"))
+    # SQL text: one py4j call per aggregate where the Column builders
+    # make about nine (a, b < p fit INT literals, as F.lit gives them).
     mins = [
-        F.min(
-            F.pmod(F.lit(int(a[i])) * F.col("x") + F.lit(int(b[i])), F.lit(p))
-        ).alias(f"h{i}")
+        F.expr(f"min(pmod({int(a[i])} * x + {int(b[i])}, {p})) AS h{i}")
         for i in range(num_hashes)
     ]
     return exploded.groupBy(id_col).agg(*mins)
@@ -459,116 +470,51 @@ def _pair_overlap_counts(
     text_col: str = "text",
     id_col: str = "doc_id",
     shingle_k: int = 5,
-    dedup_texts: bool = True,
 ) -> DataFrame:
     """Shared core of the exact pair-overlap family: for candidate pairs
     (id_a, id_b), the distinct-shingle intersection size and both set
-    sizes — (id_a, id_b, n_inter, n_a, n_b).
+    sizes — (id_a, id_b, n_inter, n_a, n_b), one row per candidate row
+    whose two ids both have a text in ``df`` (absent ids drop).
 
-    Intersection via equi-join of exploded distinct shingles restricted to
-    candidate ids (semi-join pushdown); derived measures (Jaccard,
-    containment) are one expression on these three integers.
-
-    ``dedup_texts`` (default on): the three counts are pure functions of
-    the two TEXTS, so the expensive stages — shingle explode, distinct,
-    and the intersection join — run over one min-id representative per
-    distinct md5(text) and the per-rep-pair counts join back to the
-    original id pairs.  On clone-heavy corpora (the sf1 bench tier is 10
-    copies of every text; web corpora at 100 TB are worse) this shrinks
-    the shingle relation and the verify join by the duplication factor
-    while changing nothing about the output (identical-text docs have
-    identical shingle sets).  Callers whose ``df`` is already one row per
-    distinct text (e.g. :func:`near_dup_pairs_dedup_first`) pass False to
-    skip the no-op mapping joins.
-
-    ``candidate_pairs`` is referenced three times below; it is checkpointed
-    lazily so the (potentially expensive: LSH banding) candidate subtree
-    computes ONCE. The shingle relation is deliberately NOT materialized:
-    its consumers all sit behind the dropDuplicates exchange, which Spark
-    already shares via ReusedExchange — forcing a checkpoint there was
-    measured slower (it blocks the reuse and re-shuffles per consumer)."""
-    candidate_pairs = candidate_pairs.localCheckpoint(eager=False)
-    ids = candidate_pairs.select(F.col("id_a").alias(id_col)).union(
-        candidate_pairs.select(F.col("id_b"))
-    ).distinct()
-    from tsatool_app_spark.model import spread_small_input
-
-    # Spread the SCAN-side projection, then semi-join: the candidate id set
-    # is small (broadcast), so the left partitioning survives the join and
-    # the explode below still fans out.  Spreading the join output instead
-    # would make spread_small_input probe a plan with exchanges — under AQE
-    # that materializes the candidate subtree eagerly just to read a
-    # partition count (r2 ADVICE).
-    docs = spread_small_input(
-        df.select(F.col(id_col), F.col(text_col)), key=id_col
-    ).join(ids, id_col, "leftsemi")
-
-    if dedup_texts:
-        # docs feeds the md5 grouping AND the rep-restricted recursion;
-        # id2rep maps both pair sides — lazy checkpoints keep each to one
-        # computation (full-corpus re-scans otherwise; see
-        # _dedup_groups_reps).
-        docs = docs.localCheckpoint(eager=False)
-        groups = docs.select(F.col(id_col), F.md5(F.col(text_col)).alias("_h"))
-        rep = groups.groupBy("_h").agg(F.min(id_col).alias("_r"))
-        id2rep = groups.join(rep, "_h").select(
-            F.col(id_col), F.col("_r")
-        ).localCheckpoint(eager=False)
-        # Original pairs mapped to rep pairs (inner joins drop textless ids,
-        # exactly as the sizes joins below do on the direct path).
-        mapped = (
-            candidate_pairs.join(
-                id2rep.select(F.col(id_col).alias("id_a"), F.col("_r").alias("_ra")),
-                "id_a",
-            )
-            .join(
-                id2rep.select(F.col(id_col).alias("id_b"), F.col("_r").alias("_rb")),
-                "id_b",
-            )
-            .localCheckpoint(eager=False)
-        )
-        rep_docs = docs.join(
-            rep.select(F.col("_r").alias(id_col)), id_col, "leftsemi"
-        )
-        rep_counts = _pair_overlap_counts(
-            rep_docs,
-            mapped.select(F.col("_ra").alias("id_a"), F.col("_rb").alias("id_b"))
-            .distinct(),
-            text_col=text_col,
-            id_col=id_col,
-            shingle_k=shingle_k,
-            dedup_texts=False,
-        )
-        return mapped.select("id_a", "id_b", "_ra", "_rb").join(
-            rep_counts.select(
-                F.col("id_a").alias("_ra"),
-                F.col("id_b").alias("_rb"),
-                "n_inter",
-                "n_a",
-                "n_b",
-            ),
-            ["_ra", "_rb"],
-        ).select("id_a", "id_b", "n_inter", "n_a", "n_b")
-
-    sh = docs.select(
-        F.col(id_col), F.explode(shingles(F.col(text_col), shingle_k)).alias("sh")
-    ).dropDuplicates([id_col, "sh"])
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        candidate_pairs.join(sh.alias("sa"), F.col("id_a") == F.col(f"sa.{id_col}"))
-        .join(
-            sh.alias("sb"),
-            (F.col("id_b") == F.col(f"sb.{id_col}")) & (F.col("sa.sh") == F.col("sb.sh")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return (
+    Verified row by row: each pair joins its two texts, and the shingle
+    sets are built on the joined row — ``n_a = size(array_distinct(..))``
+    and ``n_inter = size(array_intersect(..))``.  The shuffles carry the
+    texts, never the ~k×-larger shingle relation, and no stage explodes
+    or groups on a shingle.  Derived measures (Jaccard, containment) are
+    one expression on the three integers.  A NULL text has one NULL
+    shingle that matches nothing (n = 1, n_inter = 0), so every
+    denominator downstream is ≥ 1."""
+    texts = df.select(F.col(id_col), F.col(text_col))
+    # Spread the pairs on id_a first (a hash join on id_a reuses it): AQE
+    # coalesces a shuffle by bytes, and an id-pair relation is small while
+    # its per-row shingle work is not — the 14k candidate pairs of
+    # incremental_minhash_dedup at sf1 arrived in one partition, and the
+    # verify took 2.4 s on one core against 0.9 s spread over four.
+    n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    joined = (
         candidate_pairs.select("id_a", "id_b")
-        .join(inter, ["id_a", "id_b"], "left")
-        .na.fill({"n_inter": 0})
-        .join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
+        .repartition(n_parts, "id_a")
+        .join(
+            texts.select(F.col(id_col).alias("id_a"), F.col(text_col).alias("_ta")),
+            "id_a",
+        )
+        .join(
+            texts.select(F.col(id_col).alias("id_b"), F.col(text_col).alias("_tb")),
+            "id_b",
+        )
+    )
+    sets = joined.select(
+        "id_a",
+        "id_b",
+        F.array_distinct(shingles(F.col("_ta"), shingle_k)).alias("_sa"),
+        F.array_distinct(shingles(F.col("_tb"), shingle_k)).alias("_sb"),
+    )
+    return sets.select(
+        "id_a",
+        "id_b",
+        F.size(F.array_compact(F.array_intersect("_sa", "_sb"))).alias("n_inter"),
+        F.size("_sa").alias("n_a"),
+        F.size("_sb").alias("n_b"),
     )
 
 
@@ -579,15 +525,13 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     shingle_k: int = 5,
-    dedup_texts: bool = True,
 ) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs (id_a, id_b):
     |A∩B| / (|A| + |B| − |A∩B|), union by inclusion-exclusion so no
-    giant union materialization (plan notes + the ``dedup_texts``
-    distinct-text fast path: _pair_overlap_counts)."""
+    giant union materialization (plan notes: _pair_overlap_counts)."""
     counts = _pair_overlap_counts(
         df, candidate_pairs, text_col=text_col, id_col=id_col,
-        shingle_k=shingle_k, dedup_texts=dedup_texts,
+        shingle_k=shingle_k,
     )
     return counts.select(
         "id_a",
@@ -606,7 +550,6 @@ def ngram_containment_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     shingle_k: int = 5,
-    dedup_texts: bool = True,
 ) -> DataFrame:
     """ASYMMETRIC overlap for candidate pairs: containment
     |A∩B| / min(|A|, |B|) — the quote/subsumption detector.  A short
@@ -616,7 +559,7 @@ def ngram_containment_pairs(
     integer counts too, so thresholds stay engine-exact."""
     counts = _pair_overlap_counts(
         df, candidate_pairs, text_col=text_col, id_col=id_col,
-        shingle_k=shingle_k, dedup_texts=dedup_texts,
+        shingle_k=shingle_k,
     )
     return counts.select(
         "id_a",
@@ -744,7 +687,6 @@ def near_dup_pairs_dedup_first(
             text_col=text_col,
             id_col="_rep",
             shingle_k=shingle_k,
-            dedup_texts=False,  # reps are one row per distinct text already
         )
         .where(F.col("jaccard") >= min_jaccard)
         .select(
@@ -769,40 +711,31 @@ def near_dedup_loser_ids(
     bands: int = 8,
     shingle_k: int = 5,
     max_bucket_size: int | None = 512,
-) -> DataFrame:
-    """The ids cluster-level near-dedup DROPS from ``df`` — exactly
+) -> tuple[DataFrame, int]:
+    """The ids cluster-level near-dedup DROPS from ``df``, and how many —
+    ``(ids, n_ids)`` with ids exactly
 
     ``connected_components(near_dup_pairs_dedup_first(df, ...))
     .where(node != component)``
 
-    (pinned by test_near_dedup_loser_ids_matches_expanded), computed
-    WITHOUT ever materializing the doc-level pair expansion (r13).
+    (pinned by test_near_dedup_loser_ids_matches_expanded): MinHash-LSH
+    candidates over ``df``, exact-Jaccard verify at ``min_jaccard``, and
+    connected components over the verified pairs; the losers are every
+    node whose component label (the min id reachable) is not itself.
+    ``n_ids`` is read off the components loop's last aggregate, so an
+    ``anti_join_ids(..., n_ids=n_ids)`` next costs no count job.
 
-    Why it exists: survivorship callers (``pretraining_mix``) fed the
-    expanded pair set — O(Σ d²) rows on clone-heavy corpora, d = clone
-    group size — into connected components, which immediately
-    CONTRACTED it back to one label per doc.  The label is decidable at
-    REPRESENTATIVE level: reps are the min id per distinct-text group,
-    so every group's min doc id IS its rep, and the min doc id reachable
-    from any doc equals the min rep id reachable from its rep:
-
-    - within-group edges connect each doc to its rep (J = 1.0, emitted
-      unconditionally by the expansion — mirrored here by routing every
-      doc through its group's rep);
-    - cross-group edges exist doc-level iff the rep pair verified at
-      ``min_jaccard`` (identical texts ⟹ identical shingle sets, so the
-      rep pair's Jaccard is every cross pair's Jaccard).
-
-    Hence doc component = component(rep) under rep-level connected
-    components over the verified rep pairs, and the losers are every doc
-    whose rep-component label is not itself.  The components loop runs
-    over the rep pair set (bounded by distinct-text near-dup density),
-    not the d²-expanded one."""
-    groups, reps = _dedup_groups_reps(df, text_col, id_col)
+    Precondition: no text has more copies in ``df`` than
+    ``max_bucket_size``.  Such a clone group fills every band bucket past
+    the cap, drops out of the candidate join, and all its copies survive;
+    exact-dedup such corpora first.  Smaller clone groups come out right
+    (they verify at J = 1.0 and join one component).  The one caller,
+    ``pretraining_mix``, passes exact-dedup survivors, one doc per text
+    (``clean_corpus`` keeps the min id per md5)."""
     cands = minhash_near_dup_pairs(
-        reps,
+        df,
         text_col=text_col,
-        id_col="_rep",
+        id_col=id_col,
         num_hashes=num_hashes,
         bands=bands,
         shingle_k=shingle_k,
@@ -810,31 +743,20 @@ def near_dedup_loser_ids(
     )
     verified = (
         ngram_jaccard_pairs(
-            reps,
+            df,
             cands.select("id_a", "id_b"),
             text_col=text_col,
-            id_col="_rep",
+            id_col=id_col,
             shingle_k=shingle_k,
-            dedup_texts=False,  # reps are one row per distinct text already
         )
         .where(F.col("jaccard") >= min_jaccard)
         .select("id_a", "id_b")
     )
-    rep_cc, _ = _connected_components_stats(verified)
-    # component label per distinct-text group: the rep's component when
-    # the rep appears in a verified pair, else the rep itself (singleton)
-    rep_label = (
-        reps.select("_h", "_rep")
-        .join(rep_cc.withColumnRenamed("node", "_rep"), "_rep", "left")
-        .select(
-            "_h", F.coalesce("component", F.col("_rep")).alias("_comp")
-        )
+    cc, n_losers = _connected_components_stats(verified)
+    losers = cc.where(F.col("node") != F.col("component")).select(
+        F.col("node").alias(id_col)
     )
-    return (
-        groups.join(rep_label, "_h")
-        .where(F.col(id_col) != F.col("_comp"))
-        .select(id_col)
-    )
+    return losers, n_losers
 
 
 def simhash_pairs_dedup_first(

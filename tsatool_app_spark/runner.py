@@ -164,7 +164,6 @@ class CondCollection:
         key_cols: tuple[str, str] = ("statid", "seid"),
         time_col: str = "tfrom",
         sensor_name_to_id: dict[str, int] | None = None,
-        cache_results: bool = True,
     ) -> dict[str, ConditionResult]:
         """Execute all runnable conditions against an observations DF.
 
@@ -172,20 +171,13 @@ class CondCollection:
         window (P1) is applied here once; with date-partitioned storage the
         filter prunes partitions before any shuffle.
 
-        ``cache_results``: with True (default) each level's combined runs
-        relation is localCheckpoint-ed — the right trade when results are
-        read MANY times (reports, per-condition exports, deep secondary
-        chains: lineage truncation keeps driver-side re-analysis flat in
-        sheet size).  Even a lazy checkpoint does part of its work inside
-        this call: under AQE, ``localCheckpoint(eager=False)`` runs the
-        level's shuffle map stage (combine_tagged's one cond_id exchange)
-        as a job before returning, and only the final result stage waits
-        for the first action.  False skips the materialization; outputs
-        are identical (every level relation is deterministic, recomputes
-        included), but a secondary level then recomputes the levels it
-        reads.  Summaries-only timing of the registry's 10-condition
-        sheet_workload at sf0.1 (4 cores, warm, median of 6): checkpointed
-        0.88 s, False 1.03 s.
+        Each level's combined runs relation is localCheckpoint-ed, so a
+        secondary level, the summaries and the reports read it without
+        recomputing the levels below.  Even a lazy checkpoint does part of
+        its work inside this call: under AQE, ``localCheckpoint(eager=
+        False)`` runs the level's shuffle map stage (combine_tagged's one
+        cond_id exchange) as a job before returning, and only the final
+        result stage waits for the first action.
         """
         windowed = obs.where(
             F.col(time_col).between(F.lit(self.time_from), F.lit(self.time_until))
@@ -371,15 +363,14 @@ class CondCollection:
                 )
             tagged = reduce(DataFrame.unionByName, tagged_parts)
             multi = combine_tagged(tagged, exprs, cond_aliases)
-            if cache_results:
-                # One materialized relation per level replaces the
-                # reference's per-condition temp tables (condition.py:338);
-                # it holds RUNS (small), and every downstream read —
-                # summaries, secondary references, reports — derives from
-                # it. Lineage truncated for the same planning-cost reason
-                # as packed_all above; eager only when a later level will
-                # fan out over it (see eager_levels above).
-                multi = multi.localCheckpoint(eager=lvl in eager_levels)
+            # One materialized relation per level replaces the
+            # reference's per-condition temp tables (condition.py:338);
+            # it holds RUNS (small), and every downstream read —
+            # summaries, secondary references, reports — derives from
+            # it. Lineage truncated for the same planning-cost reason
+            # as packed_all above; eager only when a later level will
+            # fan out over it (see eager_levels above).
+            multi = multi.localCheckpoint(eager=lvl in eager_levels)
             # ONE cond_id-grouped rollup per level: every condition's
             # summary is a cheap filter of it.  Building the A3 aggregate
             # once per LEVEL instead of once per condition keeps driver-

@@ -15,6 +15,9 @@ runs on local[N] for tests and on a large cluster:
 - Generated-class cache sized to the pipelines: a repeated plan compiles
   each of its generated classes once per session, not on every repeat
   (measured class counts at the config).
+- DataFrame debugging off: recording the Python call site of every Column
+  and DataFrame call costs py4j round trips per call; SQL errors lose that
+  call site from their DataFrame context.
 """
 
 from __future__ import annotations
@@ -137,6 +140,16 @@ def get_spark(
         # plan, and a renumbered class misses the cache (sheet_workload
         # made 2-26 such compiles per warm operation).
         .config("spark.sql.codegen.useIdInClassName", "false")
+        # PySpark wraps every Column and DataFrame method to record its
+        # Python call site for error messages: per call an active-session
+        # lookup, a conf read, setting and clearing the JVM-side origin,
+        # and a stack walk.  py4j round trips of one warm e2ebench
+        # corpus_mix operation (1,500 docs, 4 cores), on -> off: about
+        # 14,600 -> 7,400 before pretraining_mix's near-dup stage was
+        # slimmed, 9,200 -> 5,000 after.  The cost of turning it off: SQL
+        # errors no longer name the Python line in their DataFrame
+        # context (nothing here reads that context).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
