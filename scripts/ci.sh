@@ -2,7 +2,7 @@
 # CI gate: the two long verifications that form the regression net, as ONE
 # command (r5 VERDICT next-round #8).
 #
-#   1. full pytest suite (~470 tests, ~13 min on local[32])
+#   1. full pytest suite (575 tests, ~10 min on 4 cores)
 #   2. scripts/selfcheck.py — every registry query's Spark plan vs its
 #      DuckDB oracle at sf0.01, value-compared (~11 min); output is diffed
 #      against the expected-green manifest scripts/ci_expected.txt so a

@@ -19,3 +19,19 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def checkpointed(spark, monkeypatch):
+    """The frames passed to ``DataFrame.localCheckpoint`` during the test,
+    in call order: their plans are the ones a checkpoint hides."""
+    cls = type(spark.range(0))  # the session's concrete DataFrame class
+    frames = []
+    checkpoint = cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        frames.append(self)
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    return frames

@@ -53,36 +53,75 @@ def test_combine_has_no_nested_loop_on_ranges(spark, sf_dir):
 
 
 def test_combine_tagged_single_cond_id_exchange(spark):
-    """A level of conditions combines over ONE exchange, on cond_id: the
+    """A sheet of conditions combines over ONE exchange, on cond_id: the
     pivot's aggregates and the carry-forward window reuse it, and nothing
-    is broadcast."""
+    is broadcast.  c3 reads c1's master (a secondary block) and so holds
+    c1's blocks under its own cond_id."""
     from datetime import datetime, timedelta
 
     from tsatool_app_spark.operators.combine import combine_tagged
 
     t0 = datetime(2018, 3, 1)
     rows = [
-        ("c1", "c1__a1", 0, 10, 1), ("c1", "c1__a1", 10, 20, -1),
-        ("c1", "c1__a2", 5, 15, 0), ("c2", "c2__a1", 0, 30, 1),
-        ("c2", "c2__a2", 30, 40, 0),
+        ("c1", 0, 0, 10, 1), ("c1", 0, 10, 20, -1),
+        ("c1", 1, 5, 15, 0), ("c2", 2, 0, 30, 1),
+        ("c2", 3, 30, 40, 0),
+        ("c3", 0, 0, 10, 1), ("c3", 0, 10, 20, -1),
+        ("c3", 1, 5, 15, 0), ("c3", 2, 0, 30, 1),
     ]
     tagged = spark.createDataFrame(
         [
-            (c, u, t0 + timedelta(minutes=a), t0 + timedelta(minutes=b), s)
-            for c, u, a, b, s in rows
+            (c, b, t0 + timedelta(minutes=a), t0 + timedelta(minutes=e), s)
+            for c, b, a, e, s in rows
         ],
-        "cond_id string, ualias string, vfrom timestamp, vuntil timestamp, "
+        "cond_id string, block_id int, vfrom timestamp, vuntil timestamp, "
         "s_start int",
     )
     df = combine_tagged(
         tagged,
-        {"c1": "a1 AND a2", "c2": "a1 OR NOT a2"},
-        {"c1": ["a1", "a2"], "c2": ["a1", "a2"]},
+        {"c1": "a1 AND a2", "c2": "a1 OR NOT a2", "c3": "d1 OR a1"},
+        {"c1": {"a1": 0, "a2": 1}, "c2": {"a1": 2, "a2": 3}, "c3": {"d1": "c1", "a1": 2}},
     )
     plan = executed_plan(df)
     assert re.findall(r"\bExchange hashpartitioning\((\w+)", plan) == ["cond_id"]
     for node in ("BroadcastExchange", "BroadcastNestedLoopJoin", "CartesianProduct"):
         assert node not in plan
+
+
+def test_sheet_runs_single_cond_id_exchange(spark, checkpointed):
+    """A sheet with a chain and a diamond of secondaries runs as ONE
+    combine plan: run() checkpoints the packed blocks and the sheet's runs,
+    nothing per dependency level, and the runs relation has exactly one
+    hash exchange, on cond_id."""
+    from datetime import datetime, timedelta
+
+    from tsatool_app_spark.runner import CondCollection
+
+    t0 = datetime(2018, 3, 1)
+    obs = spark.createDataFrame(
+        [
+            (t0 + timedelta(minutes=5 * i), 1122, 3 + 24 * (i % 2), float(i % 7))
+            for i in range(24)
+        ],
+        "tfrom timestamp, statid int, seid int, seval float",
+    )
+    coll = CondCollection.from_rows(
+        "sheet", t0, t0,
+        [
+            ("x", "A1", "s1122#tie_1 < 3"),
+            ("x", "A2", "s1122#keli_1 >= 2 AND s1122#tie_1 >= 1"),
+            ("x", "B1", "A1 AND A2"),
+            ("x", "B2", "NOT A1 OR A2"),
+            ("x", "C1", "B1 OR NOT B2"),
+            ("x", "D1", "C1 AND s1122#tie_1 < 5"),
+        ],
+    )
+    res = coll.run(obs, sensor_name_to_id={"tie_1": 3, "keli_1": 27})
+    assert all(r.ranges is not None for r in res.values())
+    assert len(checkpointed) == 2
+    # run() already ran the shuffle map stage: read AQE's final plan only
+    plan = executed_plan(checkpointed[1]).split("== Initial Plan ==")[0]
+    assert re.findall(r"\bExchange hashpartitioning\((\w+)", plan) == ["cond_id"]
 
 
 def test_text_ops_scan_only_needed_columns(spark, sf_dir):

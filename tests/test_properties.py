@@ -221,30 +221,211 @@ def test_combine_multi_matches_duckdb_random(spark, conds):
             f"WHERE cond_id = '{cid}' AND alias = '{a}')"
             for a in aliases
         )
-        joins = "\n".join(
-            f"LEFT JOIN blk_{a} ON m.vfrom >= blk_{a}.vfrom "
-            f"AND m.vfrom < blk_{a}.vuntil"
-            for a in aliases
-        )
+        sources = {a: (f"blk_{a}", "istrue") for a in aliases}
         want = sorted(
             con.sql(
-                f"""
-WITH {blk},
-pts AS (SELECT DISTINCT vt FROM (
-  SELECT vfrom AS vt FROM r WHERE cond_id = '{cid}'
-  UNION ALL SELECT vuntil FROM r WHERE cond_id = '{cid}')),
-mr AS (SELECT vt AS vfrom, lead(vt) OVER (ORDER BY vt) AS vuntil FROM pts),
-m AS (SELECT * FROM mr WHERE vuntil IS NOT NULL),
-aligned AS (
-  SELECT m.vfrom, m.vuntil, (m.vuntil - m.vfrom) * 60 AS vdiff_s,
-         {", ".join(f"blk_{a}.istrue AS {a}" for a in aliases)}
-  FROM m
-  {joins}
-)
-SELECT aligned.*, ({master}) AS master FROM aligned"""
+                f"WITH {blk} "
+                + _reference_combine_sql(sources, master, "(m.vuntil - m.vfrom) * 60")
             ).fetchall()
         )
         assert got == want, (cid, master)
+
+
+def _reference_combine_sql(sources, master, vdiff):
+    """The reference's combine (condition.py:364-391) as one DuckDB query:
+    boundary union, LEAD pairing, one containment LEFT JOIN per block,
+    Kleene master.  ``sources``: alias -> (relation, truth column), each
+    relation (vfrom, vuntil, <truth column>); ``vdiff``: the duration of
+    the master range ``m`` in seconds."""
+    pts = " UNION ALL ".join(
+        f"SELECT vfrom AS vt FROM {rel} UNION ALL SELECT vuntil FROM {rel}"
+        for rel, _ in sources.values()
+    )
+    joins = "\n".join(
+        f"LEFT JOIN {rel} AS j_{a} ON m.vfrom >= j_{a}.vfrom AND m.vfrom < j_{a}.vuntil"
+        for a, (rel, _) in sources.items()
+    )
+    cols = ", ".join(f"j_{a}.{tc} AS {a}" for a, (_, tc) in sources.items())
+    return f"""
+SELECT aligned.*, ({master}) AS master FROM (
+  SELECT m.vfrom, m.vuntil, {vdiff} AS vdiff_s, {cols}
+  FROM (SELECT * FROM (
+    SELECT vt AS vfrom, lead(vt) OVER (ORDER BY vt) AS vuntil
+    FROM (SELECT DISTINCT vt FROM ({pts}))) WHERE vuntil IS NOT NULL) m
+  {joins}) aligned"""
+
+
+# -- Secondary sheets: the runner against a level-by-level reference ------
+
+# Sensor keys (station, sensor id) of the random streams; the sheet names
+# the sensors by name.  Station 1115 has no observations at all.
+_SENSORS = {"tie_1": 3, "keli_1": 27}
+_KEYS = [(1122, "tie_1"), (1122, "keli_1"), (1120, "tie_1")]
+# One stream: minute gaps up to 45 (beyond the 30-minute validity cap, so
+# gaps leave no-data time) and readings with NULLs among them.
+_sensor_stream = st.lists(
+    st.tuples(
+        st.integers(min_value=1, max_value=45),
+        st.sampled_from([None, 1.0, 2.0, 3.0, 4.0, 8.0]),
+    ),
+    min_size=2,
+    max_size=12,
+)
+_primary_block = st.tuples(
+    st.integers(min_value=0, max_value=len(_KEYS) - 1),
+    st.sampled_from(["<", ">=", "="]),
+    st.sampled_from([2, 3, 4]),
+).map(lambda b: f"s{_KEYS[b[0]][0]}#{_KEYS[b[0]][1]} {b[1]} {b[2]}")
+_primary_masters = ["{0}", "NOT {0}", "{0} AND {1}", "{0} OR NOT {1}"]
+# A secondary reads one or two earlier conditions (indexes taken modulo the
+# number defined before it), so chains and diamonds both come up.
+_secondary_masters = [
+    "{a}", "NOT {a}", "{a} AND {b}", "{a} OR NOT {b}", "NOT ({a} AND {b})",
+    "{a} AND {p}", "NOT {a} OR {p}",
+]
+_secondary_sheets = st.tuples(
+    st.lists(_sensor_stream, min_size=len(_KEYS), max_size=len(_KEYS)),
+    st.lists(
+        st.tuples(
+            st.sampled_from(_primary_masters),
+            st.lists(_primary_block, min_size=2, max_size=2),
+        ),
+        min_size=2,
+        max_size=3,
+    ),
+    st.lists(
+        st.tuples(
+            st.sampled_from(_secondary_masters),
+            st.integers(min_value=0, max_value=5),
+            st.integers(min_value=0, max_value=5),
+            _primary_block,
+        ),
+        min_size=1,
+        max_size=3,
+    ),
+)
+
+
+def _secondary_rows(primaries, secondaries):
+    """Sheet rows (site, alias, condition), sources before readers.  N1,
+    on the observation-free station, is always defined and read only when
+    a secondary's index picks it."""
+    names, rows = ["N1"], [("x", "N1", "s1115#tie_1 < 3")]
+    for i, (master, blocks) in enumerate(primaries):
+        names.append(f"P{i + 1}")
+        rows.append(("x", names[-1], master.format(*blocks)))
+    for i, (master, ia, ib, block) in enumerate(secondaries):
+        a, b = names[ia % len(names)], names[ib % len(names)]
+        names.append(f"S{i + 1}")
+        rows.append(("x", names[-1], master.format(a=a, b=b, p=block)))
+    return rows
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(_secondary_sheets)
+@example(  # a diamond over a NOT-ed secondary, a chain, the no-data source
+    (
+        [[(5, 1.0), (5, None), (40, 4.0), (5, 2.0), (5, 8.0)]] * 3,
+        [("{0} AND {1}", ["s1122#tie_1 < 3", "s1122#keli_1 >= 4"]),
+         ("{0} OR NOT {1}", ["s1120#tie_1 >= 3", "s1122#tie_1 = 2"])],
+        [("NOT {a}", 1, 0, "s1122#tie_1 < 3"),
+         ("{a} AND {b}", 3, 2, "s1122#tie_1 < 3"),
+         ("NOT ({a} AND {b})", 3, 4, "s1122#tie_1 < 3")],
+    ),
+)
+@example(  # a secondary of the no-data source and of a chain of it
+    (
+        [[(10, 3.0), (10, 1.0), (35, None), (10, 2.0)]] * 3,
+        [("NOT {0}", ["s1122#keli_1 < 3", "s1122#keli_1 < 3"]),
+         ("{0}", ["s1120#tie_1 = 3", "s1120#tie_1 = 3"])],
+        [("{a} OR NOT {b}", 0, 2, "s1122#tie_1 < 3"),
+         ("NOT {a} OR {p}", 3, 0, "s1122#keli_1 >= 2")],
+    ),
+)
+def test_secondary_sheet_matches_level_reference_random(spark, sheet):
+    """CondCollection.run + summary_rows on random sheets with secondaries
+    equals a level-by-level DuckDB reference: every primary block is
+    ``_pack_sql_cte``, and every condition is the reference combine over
+    its blocks, a secondary block reading its source's REFERENCE runs
+    (block.py:195-207).  Each condition's runs, its secondary-alias
+    columns included, and its summary must match."""
+    from tsatool_app_spark import reports
+    from tsatool_app_spark.plans.driver_queries import _pack_sql_cte
+    from tsatool_app_spark.runner import CondCollection
+
+    streams, primaries, secondaries = sheet
+    obs = []
+    for (statid, sensor), stream in zip(_KEYS, streams):
+        t = 0
+        for gap, val in stream:
+            t += gap
+            obs.append((T0 + timedelta(minutes=t), statid, _SENSORS[sensor], val))
+    rows = _secondary_rows(primaries, secondaries)
+    coll = CondCollection.from_rows("sheet", T0, T0, rows[::-1])
+    got = {
+        r["cond_id"]: r
+        for r in reports.summary_rows(
+            coll.run(
+                spark.createDataFrame(
+                    obs, "tfrom timestamp, statid int, seid int, seval float"
+                ),
+                sensor_name_to_id=_SENSORS,
+            )
+        )
+    }
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE events (ts TIMESTAMP, user_id INT, event_type VARCHAR, "
+        "value DOUBLE)"
+    )
+    con.executemany(
+        "INSERT INTO events VALUES (?, ?, ?, ?)",
+        [(t, s, str(se), v) for t, s, se, v in obs],
+    )
+    for n, (_, alias, _) in enumerate(rows):
+        cid = f"x_{alias.lower()}"
+        spec = coll.conditions[cid]
+        ctes, sources = [], {}
+        for a, b in spec.blocks.items():
+            if b.secondary:
+                sources[a] = (f"ref_{b.source_condition_id}", "master")
+            else:
+                ctes.append(
+                    _pack_sql_cte(
+                        f"blk{n}_{a}", (b.station_id, b.sensor_id, b.operator, b.value)
+                    )
+                )
+                sources[a] = (f"blk{n}_{a}", "istrue")
+        combine = _reference_combine_sql(
+            sources,
+            spec.alias_condition,
+            "CAST(date_diff('second', m.vfrom, m.vuntil) AS BIGINT)",
+        )
+        con.execute(
+            f"CREATE TABLE ref_{cid} AS "
+            + (f"WITH {','.join(ctes)} " if ctes else "")
+            + combine
+        )
+        want = sorted(con.sql(f"SELECT * FROM ref_{cid}").fetchall())
+        runs = got[cid]["ranges"]
+        assert runs is not None, (cid, got[cid]["errors"])
+        assert [
+            (r["vfrom"], r["vuntil"], *[r[a] for a in spec.blocks], r["master"])
+            for r in runs
+        ] == [(w[0], w[1], *w[3:]) for w in want], (cid, rows)
+
+        valid = sum(w[2] for w in want if w[-1] is True)
+        notvalid = sum(w[2] for w in want if w[-1] is False)
+        summary = (None, None, valid, notvalid, None)
+        if want:
+            tot = int((want[-1][1] - want[0][0]).total_seconds())
+            summary = (want[0][0], want[-1][1], valid, notvalid, tot - valid - notvalid)
+        row = got[cid]
+        assert (
+            row["data_from"], row["data_until"], row["tottime_valid_s"],
+            row["tottime_notvalid_s"], row["tottime_nodata_s"], row["rows"],
+        ) == (*summary, len(want)), (cid, rows)
 
 
 # -- DSL fuzzing: the parser must never crash, only record errors ---------

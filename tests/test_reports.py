@@ -270,3 +270,27 @@ def test_sinks_read_the_sheet_once(spark, obs, sheet, results, tmp_path):
             reports.write_timeline_png(row, str(tmp_path / f"{row['cond_id']}.png"))
 
     assert _jobs_in_group(sc, "sinks", sinks) == 0
+
+
+def test_diamond_sheet_job_floor(spark, obs):
+    """A sheet whose secondaries form a diamond (C1 reads B1 and B2, both
+    read A1 and A2) runs and reports within a fixed job floor: the sheet
+    combines as one plan, with one checkpoint and one runs collect for
+    the whole sheet (one of each per dependency level takes 14 jobs
+    here)."""
+    coll = CondCollection.from_rows(
+        "diamond", T0, T0,
+        [
+            ("x", "C1", "B1 AND NOT B2"),
+            ("x", "B1", "A1 AND A2"),
+            ("x", "B2", "A1 OR NOT A2"),
+            ("x", "A1", "s1122#tie_1 < 3"),
+            ("x", "A2", "s1122#tie_1 >= 2"),
+        ],
+    )
+
+    def run_and_report():
+        rows = reports.summary_rows(coll.run(obs, sensor_name_to_id={"tie_1": 3}))
+        assert all(r["ranges"] for r in rows)
+
+    assert _jobs_in_group(spark.sparkContext, "diamond", run_and_report) <= 6

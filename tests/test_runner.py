@@ -119,9 +119,10 @@ def test_summaries_df_level_sharing_and_subset(spark, monkeypatch):
         m.setattr(SparkSession, "createDataFrame", no_driver_relations)
         res = coll.run(obs, sensor_name_to_id=SENSORS)
         full = {r.cond_id: r for r in CondCollection.summaries_df(res).collect()}
-    # level 0 conditions share the level object; B1 (level 1) has its own
-    assert res["x_a1"].level is res["x_a2"].level
-    assert res["x_b1"].level is not res["x_a1"].level
+    # every condition of the sheet, secondary B1 included, shares one
+    # sheet result: the sheet combines as one plan
+    assert res["x_a1"].sheet is res["x_a2"].sheet
+    assert res["x_b1"].sheet is res["x_a1"].sheet
     assert set(full) == {"x_a1", "x_a2", "x_b1", "x_a3", "x_a4"}
     assert full["x_a1"].tottime_valid_s == 900
     # the shared block gives both conditions the same values
@@ -144,6 +145,43 @@ def test_summaries_df_level_sharing_and_subset(spark, monkeypatch):
     before = compiled.METRIC_COMPILATION_TIME().getCount()
     CondCollection.summaries_df(coll.run(obs, sensor_name_to_id=SENSORS)).collect()
     assert compiled.METRIC_COMPILATION_TIME().getCount() - before < 10
+
+
+def _stacked_diamond(depth):
+    """Sheet rows: two primaries, then ``depth`` levels of two conditions,
+    each reading both conditions of the level below."""
+    rows = [("x", "L0A", "s1122#tie_1 < 3"), ("x", "L0B", "s1122#keli_1 = 8")]
+    for k in range(1, depth + 1):
+        a, b = f"L{k - 1}A", f"L{k - 1}B"
+        rows += [("x", f"L{k}A", f"{a} AND NOT {b}"), ("x", f"L{k}B", f"{a} OR {b}")]
+    return rows
+
+
+def test_deep_secondary_diamond_plan_stays_linear(spark, checkpointed):
+    """A stacked diamond of depth 10 runs, and its combine plan grows
+    linearly with depth: each read condition's master is one column that
+    its readers reference, so depth 10's analyzed plan is < 4x depth 5's
+    (substituting each source's expression as text would double it at
+    every level, about 32x)."""
+    obs = obs_fixture(spark)
+
+    def plan_chars(depth):
+        checkpointed.clear()
+        coll = CondCollection.from_rows("deep", T0, T0, _stacked_diamond(depth))
+        res = coll.run(obs, sensor_name_to_id=SENSORS)
+        assert not coll.errors and len(res) == 2 * depth + 2
+        # the runs relation's plan, before the checkpoint hides it
+        analyzed = checkpointed[-1]._jdf.queryExecution().analyzed()
+        return res, len(analyzed.treeString(False, False, 1 << 30, False, False))
+
+    _, shallow = plan_chars(5)
+    res, deep = plan_chars(10)
+    assert deep < 4 * shallow
+    full = {r.cond_id: r for r in CondCollection.summaries_df(res).collect()}
+    # L1A = tie_1 < 3 AND NOT keli_1 = 8 is false wherever keli_1 reads 8
+    # (all of [0, 35)), so every A on the way up is false there too
+    assert full["x_l10a"].tottime_valid_s == 0
+    assert full["x_l10a"].tottime_notvalid_s == 2100
 
 
 def test_no_data_condition_keeps_one_row_summary(spark):

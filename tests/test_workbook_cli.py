@@ -153,6 +153,7 @@ def test_cli_full_run(tmp_path, spark, capsys):
     sheets.mkdir()
     write_sheet(sheets / "s1.csv", CLEAN_SHEET)
 
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
     rc = main(
         [
             "-i", str(sheets), "-n", "run1", "-r", str(tmp_path / "res"),
@@ -162,6 +163,8 @@ def test_cli_full_run(tmp_path, spark, capsys):
         ]
     )
     assert rc == 0
+    # the sheet's checkpoints are released once its reports are written
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
     summary = list(csv.DictReader(open(tmp_path / "res" / "run1_s1.csv")))
     assert len(summary) == 2
     a1 = next(r for r in summary if r["master_alias"] == "a1")

@@ -18,6 +18,7 @@ import sys
 from pathlib import Path
 
 from tsatool_app_spark import reports
+from tsatool_app_spark.runner import CondCollection
 from tsatool_app_spark.sources.workbook import read_csv_workbook, read_xlsx_workbook
 
 
@@ -132,6 +133,9 @@ def main(argv: list[str] | None = None) -> int:
                 reports.write_timeline_json(row, str(results_dir / f"{stem}.json"))
                 if args.png:
                     reports.write_timeline_png(row, str(results_dir / f"{stem}.png"))
+        # every report is written: free the sheet's checkpointed partitions
+        # now, not whenever a JVM GC lets Spark's ContextCleaner find them
+        CondCollection.release(res)
         log.info("collection %s: %d conditions", coll.name, len(coll.conditions))
 
     reports.write_error_json(analysis, str(results_dir / f"{args.name}_ERRORS.json"))

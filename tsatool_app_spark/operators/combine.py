@@ -24,11 +24,12 @@ event column per block; ``last(_, ignorenulls)`` over the condition's
 points carries each block's state forward. This is O(n log n) per condition
 with NO theta join (Spark would plan the `&&` overlap as
 BroadcastNestedLoopJoin — O(n²) and a 100 TB cliff), and every step runs
-within one condition, so a whole level of conditions shuffles ONCE, on
-cond_id. Per-condition timelines are small (10²-10⁴ ranges after packing —
-SURVEY §4), so each condition's window partition is bounded by design. For
-*general* interval joins (arbitrary overlap, not alignment) see
-operators/intervals.py.
+within one condition, so a whole sheet of conditions shuffles ONCE, on
+cond_id — secondaries included, which read their sources' blocks on their
+own timelines (combine_tagged). Per-condition timelines are small (10²-10⁴
+ranges after packing — SURVEY §4), so each condition's window partition is
+bounded by design. For *general* interval joins (arbitrary overlap, not
+alignment) see operators/intervals.py.
 
 The reference's single-block shortcut (condition.py:355-363) indexes
 ``blocks.keys()[0]`` — a latent Py3 crash; the intent is clear from the
@@ -141,32 +142,40 @@ def combine_blocks_multi(
     if not cond_blocks:
         raise ValueError("combine_blocks_multi requires at least one condition")
 
-    tagged = reduce(
-        DataFrame.unionByName,
-        [
-            df.select(
-                F.lit(cid).alias("cond_id"),
-                F.lit(f"{cid}__{a}").alias("ualias"),
-                "vfrom",
-                "vuntil",
-                _encode(F.col("istrue")).alias("s_start"),
+    cond_refs: "dict[str, dict[str, int]]" = {}
+    parts = []
+    for cid, blocks in cond_blocks.items():
+        cond_refs[cid] = {}
+        for a, df in blocks.items():
+            bid = cond_refs[cid][a] = len(parts)
+            parts.append(
+                df.select(
+                    F.lit(cid).alias("cond_id"),
+                    F.lit(bid).alias("block_id"),
+                    "vfrom",
+                    "vuntil",
+                    _encode(F.col("istrue")).alias("s_start"),
+                )
             )
-            for cid, blocks in cond_blocks.items()
-            for a, df in blocks.items()
-        ],
-    )
-    cond_aliases = {cid: list(blocks) for cid, blocks in cond_blocks.items()}
-    return combine_tagged(tagged, alias_conditions, cond_aliases)
+    tagged = reduce(DataFrame.unionByName, parts)
+    return combine_tagged(tagged, alias_conditions, cond_refs)
 
 
 def combine_tagged(
     tagged: DataFrame,
     alias_conditions: "dict[str, str]",
-    cond_aliases: "dict[str, list[str]]",
+    cond_refs: "dict[str, dict[str, int | str]]",
 ) -> DataFrame:
-    """Core of combine_blocks_multi, taking a PRE-TAGGED ranges relation
-    ``(cond_id, ualias, vfrom, vuntil, s_start)`` where ualias =
-    ``<cond_id>__<alias>`` and s_start is the sentinel-encoded tri-state.
+    """Core of combine_blocks_multi and of the runner's sheet combine,
+    taking a PRE-TAGGED ranges relation ``(cond_id, block_id, vfrom,
+    vuntil, s_start)``, s_start being the sentinel-encoded tri-state.
+
+    ``cond_refs``: cond_id → (alias → what the alias reads): an int is a
+    block_id of ``tagged``; a str is another condition's cond_id, whose
+    master the alias reads (a secondary block, block.py:195-207). Sources
+    are listed before the conditions that read them. Under each cond_id,
+    ``tagged`` holds the ranges of every block the condition reads,
+    directly or through its sources, transitively (its closure).
 
     Callers that already hold an id-keyed ranges relation (the runner's
     pack_ranges_multi output) build ``tagged`` with one literal-map lookup
@@ -182,16 +191,23 @@ def combine_tagged(
       the hand-over of adjacent half-open ranges;
     - the timeline points are exactly the event times (the boundary union);
     - carrying each block's last event forward over ALL of its condition's
-      points equals carrying it over that block's own alignment.
+      points equals carrying it over that block's own alignment;
+    - a source's master, evaluated on a reader's finer timeline, equals
+      the source's runs read as a block: the source's runs span exactly
+      its closure's first to last event point, and outside that span all
+      of its blocks are NULL, so its master is NULL there too — the
+      grammar has no constants, and a Kleene formula over NULLs is NULL.
+      Each source's master is computed once per row, as a column its
+      readers reference, so plan size stays linear in the sheet (textual
+      substitution would double a diamond's expression at every level).
     """
-    ualias = {
-        (cid, a): f"{cid}__{a}" for cid, aliases in cond_aliases.items() for a in aliases
-    }
-    all_ucols = list(ualias.values())
+    bids = sorted(
+        {r for refs in cond_refs.values() for r in refs.values() if isinstance(r, int)}
+    )
 
     events = tagged.repartition("cond_id").select(
         "cond_id",
-        "ualias",
+        "block_id",
         F.inline(
             F.array(
                 F.struct(F.col("vfrom").alias("vt"), F.col("s_start").alias("s")),
@@ -199,50 +215,85 @@ def combine_tagged(
             )
         ),
     )
-    wide = events.groupBy("cond_id", "vt").pivot("ualias", all_ucols).agg(F.max("s"))
+    wide = events.groupBy("cond_id", "vt").pivot("block_id", bids).agg(F.max("s"))
 
-    # Window, decode and master as THREE parser calls instead of several
+    # Window, decode and master as parser calls instead of several
     # Column-builder round trips per block column: each py4j call costs
     # ~1-3 ms on the driver, and at 23 block columns the per-column chains
     # were a measurable slice of the sheet's plan-construction wall
     # (profiled r7).
     win = "OVER (PARTITION BY cond_id ORDER BY vt"
-    ranged = wide.selectExpr(
-        "cond_id",
-        "vt AS vfrom",
-        f"lead(vt) {win}) AS vuntil",
-        *[
-            f"last(`{u}`, true) {win} ROWS BETWEEN UNBOUNDED PRECEDING "
-            f"AND CURRENT ROW) AS `{u}`"
-            for u in all_ucols
-        ],
-    ).where("vuntil IS NOT NULL")
+    out = (
+        wide.selectExpr(
+            "cond_id",
+            "vt AS vfrom",
+            f"lead(vt) {win}) AS vuntil",
+            *[
+                f"last(`{b}`, true) {win} ROWS BETWEEN UNBOUNDED PRECEDING "
+                f"AND CURRENT ROW) AS _b{b}"
+                for b in bids
+            ],
+        )
+        .where("vuntil IS NOT NULL")
+        .selectExpr(
+            "cond_id",
+            "vfrom",
+            "vuntil",
+            "(CAST(vuntil AS LONG) - CAST(vfrom AS LONG)) AS vdiff_s",
+            # CASE with no ELSE: the -1/-2 sentinels, and a block with no
+            # event yet, decode to a NULL boolean.
+            *[
+                f"CASE WHEN _b{b} = 1 THEN true WHEN _b{b} = 0 THEN false END AS _b{b}"
+                for b in bids
+            ],
+        )
+    )
+
+    col: dict[str, str] = {}  # source cond_id -> the column of its master
+
+    def ref_col(r):
+        return col[r] if isinstance(r, str) else f"_b{r}"
+
+    def master(cid):
+        refs = cond_refs[cid]
+        pat = "|".join(re.escape(a) for a in sorted(refs, key=len, reverse=True))
+        # one pass, so a substituted column name is never re-matched
+        return re.sub(
+            rf"\b({pat})\b", lambda m: ref_col(refs[m.group(1)]), alias_conditions[cid]
+        )
+
+    # One projection per dependency depth: a source's master column is
+    # defined one projection below its readers'.
+    sources = {r for refs in cond_refs.values() for r in refs.values() if isinstance(r, str)}
+    depth: dict[str, int] = {}
+    stages: dict[int, list[str]] = {}
+    for cid, refs in cond_refs.items():
+        depth[cid] = max((depth[r] + 1 for r in refs.values() if isinstance(r, str)), default=0)
+        if cid in sources:
+            col[cid] = f"_m{len(col)}"
+            stages.setdefault(depth[cid], []).append(f"({master(cid)}) AS {col[cid]}")
+    for d in sorted(stages):
+        out = out.selectExpr("*", *stages[d])
 
     branches = []
-    for cid, aliases in cond_aliases.items():
-        expr_str = alias_conditions[cid]
-        for a in sorted(aliases, key=len, reverse=True):
-            # replacement via lambda: a literal, so backslashes in the
-            # cond_id (part of the ualias) aren't re-parsed as \-escapes
-            u = f"`{ualias[(cid, a)]}`"
-            expr_str = re.sub(rf"\b{re.escape(a)}\b", lambda _m, u=u: u, expr_str)
+    for cid in cond_refs:
         # Spark SQL string literals use BACKSLASH escapes (not the
         # SQL-standard doubled quote): escape backslash first, then the
         # quote, so arbitrary public-API cond_ids can't break the CASE.
         cid_lit = cid.replace("\\", "\\\\").replace("'", "\\'")
-        branches.append(f"WHEN cond_id = '{cid_lit}' THEN ({expr_str})")
-    return ranged.selectExpr(
+        branches.append(f"WHEN cond_id = '{cid_lit}' THEN ({col.get(cid) or master(cid)})")
+    return out.selectExpr(
         "cond_id",
         "vfrom",
         "vuntil",
-        "(CAST(vuntil AS LONG) - CAST(vfrom AS LONG)) AS vdiff_s",
-        # CASE with no ELSE: the -1/-2 sentinels, and a block with no
-        # event yet, decode to a NULL boolean.
+        "vdiff_s",
         *[
-            f"CASE WHEN `{u}` = 1 THEN true WHEN `{u}` = 0 THEN false END AS `{u}`"
-            for u in all_ucols
+            f"{ref_col(r)} AS `{cid}__{a}`"
+            for cid, refs in cond_refs.items()
+            for a, r in refs.items()
         ],
-    ).selectExpr("*", "CASE " + " ".join(branches) + " END AS master")
+        "CASE " + " ".join(branches) + " END AS master",
+    )
 
 
 def condition_view(

@@ -151,7 +151,8 @@ def _sheet_workload_sql() -> str:
     Primary conditions are the _condition_sql pattern (pack → boundary union
     → containment join → Kleene master); the secondary chain re-applies the
     same combine with the referenced conditions' master ranges as blocks —
-    exactly the engine's secondary semantics (runner.py:276-286)."""
+    the reference's level-by-level secondary semantics (block.py:195-207),
+    which the engine's one-plan combine reproduces (combine_tagged)."""
     time_pred = (
         " AND ts BETWEEN TIMESTAMP '2024-01-01 00:00:00'"
         " AND TIMESTAMP '2024-12-31 23:59:59'"
@@ -767,15 +768,10 @@ def q_pack_sequences(spark, sf_dir):
 def q_sheet_workload(spark, sf_dir):
     """The engine's headline workload: a 10-condition sheet (23 block
     evals, AND/OR/NOT, one secondary chain) executed end-to-end through the
-    runner — one-pass packing, level-wise multi-condition combine,
-    summaries. Oracle: _sheet_workload_sql() regenerates the whole sheet
-    (including the secondary chain) as portable SQL from the same sheet
-    definition.
-
-    The runner checkpoints each level's runs, as for the CLI: the
-    secondary chain reads the level below it without recomputing it.
-    Summaries only, warm, 4 cores: checkpointed 0.88 s against 1.03 s
-    uncheckpointed at sf0.1, 0.82 s against 0.99 s at sf1."""
+    runner — one-pass packing, one combine plan for the whole sheet
+    (secondary chain included), summaries. Oracle: _sheet_workload_sql()
+    regenerates the whole sheet (including the secondary chain) as
+    portable SQL from the same sheet definition, level by level."""
     from datetime import datetime
 
     from tsatool_app_spark.runner import CondCollection

@@ -69,7 +69,7 @@ def summary_rows(results: dict) -> list[dict]:
     report step that runs Spark, and the input of every sink.
 
     One collect of ``CondCollection.summaries_df`` reads every summary, and
-    one collect per level of the level's shared runs relation reads every
+    one collect of the sheet's shared runs relation reads every
     condition's ranges. A row holds the SUMMARY_COLUMNS plus ``cond_id``,
     the A3 seconds (``tottime_valid_s``, ``tottime_notvalid_s``,
     ``tottime_nodata_s``), ``errors`` (the condition's error messages) and
@@ -83,18 +83,18 @@ def summary_rows(results: dict) -> list[dict]:
         {r.cond_id: r for r in summaries_df.collect()} if summaries_df is not None else {}
     )
     ranges: dict[str, list[dict]] = {
-        cid: [] for cid, res in results.items() if res.level is not None
+        cid: [] for cid, res in results.items() if res.sheet is not None
     }
-    levels = dict.fromkeys(res.level for res in results.values() if res.level is not None)
-    for level in levels:
-        for r in level.runs.collect():
+    sheets = dict.fromkeys(res.sheet for res in results.values() if res.sheet is not None)
+    for sheet in sheets:
+        for r in sheet.runs.collect():
             cid = r.cond_id
             if cid in ranges:
                 ranges[cid].append(
                     {
                         "vfrom": r.vfrom,
                         "vuntil": r.vuntil,
-                        **{a: r[f"{cid}__{a}"] for a in level.aliases[cid]},
+                        **{a: r[f"{cid}__{a}"] for a in sheet.aliases[cid]},
                         "master": r.master,
                     }
                 )

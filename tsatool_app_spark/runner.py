@@ -11,18 +11,22 @@ Reference structure (one level per input granularity):
 
 Spark-first changes (no semantic impact, SURVEY §7.4):
 
-- conditions are lazy DataFrames; "temp tables" are just cached DFs;
+- a sheet runs as ONE combine plan instead of per-condition temp tables:
+  a secondary condition reads the primary blocks of the conditions it
+  references on its own timeline, so chains and diamonds of secondaries
+  cost one cond_id exchange and one checkpoint, whatever their depth;
 - secondary dependencies get a REAL topological sort with cycle detection —
   a strict improvement that preserves all accepted inputs;
-- the shared time-windowed observations DF (obs_main, P1) is built once per
-  collection and cached; Catalyst pushes the window filter into the scan;
+- the time-windowed observations (obs_main, P1) are read once per sheet;
+  Catalyst pushes the window filter into the scan, and only the packed
+  runs are checkpointed;
 - sheets (collections) are independent Spark jobs, parallelizable.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from datetime import datetime, time, timedelta
+from datetime import datetime, time
 from functools import reduce
 from graphlib import CycleError, TopologicalSorter
 
@@ -47,15 +51,16 @@ from tsatool_app_spark.operators.summary import validity_summary
 DEFAULT_MAX_MINUTES = 30
 
 
-@dataclass(eq=False)  # identity-hashed: readers group conditions by level
-class LevelResult:
-    """One topological level's shared relations, the same object on every
-    condition of the level: report and summary reads then make one plan
-    (and one collect) per LEVEL instead of one per condition."""
+@dataclass(eq=False)  # identity-hashed: readers group conditions by sheet
+class SheetResult:
+    """A sheet's shared relations, the same object on every condition that
+    ran: report and summary reads make one plan (and one collect) per
+    SHEET instead of one per condition."""
 
     runs: DataFrame  # (cond_id, vfrom, vuntil, vdiff_s, <cond_id>__<alias>..., master)
     summary: DataFrame  # cond_id-grouped validity rollup (cond_id + A3 columns)
     aliases: "dict[str, list[str]]"  # cond_id -> block aliases, column order
+    checkpoints: "tuple[DataFrame, ...]"  # the frames whose partitions run() pinned
 
 
 @dataclass
@@ -63,7 +68,7 @@ class ConditionResult:
     spec: ConditionSpec
     ranges: DataFrame | None = None  # (vfrom, vuntil, vdiff_s, <aliases...>, master)
     summary: DataFrame | None = None  # one-row validity rollup (A3)
-    level: LevelResult | None = None  # the level this condition ran in
+    sheet: SheetResult | None = None  # the sheet result this condition ran in
 
 
 @dataclass
@@ -171,13 +176,13 @@ class CondCollection:
         window (P1) is applied here once; with date-partitioned storage the
         filter prunes partitions before any shuffle.
 
-        Each level's combined runs relation is localCheckpoint-ed, so a
-        secondary level, the summaries and the reports read it without
-        recomputing the levels below.  Even a lazy checkpoint does part of
-        its work inside this call: under AQE, ``localCheckpoint(eager=
-        False)`` runs the level's shuffle map stage (combine_tagged's one
-        cond_id exchange) as a job before returning, and only the final
-        result stage waits for the first action.
+        The whole sheet runs as two checkpointed relations, whatever the
+        depth of its secondary chains: the packed runs of every primary
+        block (eager), and the combined runs of every condition (lazy —
+        under AQE the call still runs combine_tagged's one cond_id
+        shuffle map stage as a job, and the result stage folds into the
+        first consuming job, normally the sheet-summary collect). Release
+        them with :meth:`release` once the results have been read.
         """
         windowed = obs.where(
             F.col(time_col).between(F.lit(self.time_from), F.lit(self.time_until))
@@ -193,7 +198,39 @@ class CondCollection:
             cid: ConditionResult(spec=c) for cid, c in self.conditions.items()
         }
 
-        order = self.execution_order()
+        # What each runnable condition's aliases read, in dependency order:
+        # a packed block's id, or the id of the condition a secondary block
+        # reads. Identical (key, op, value) specs share one block id ACROSS
+        # conditions (the reference's CSE is per-condition only,
+        # condition.py:229-239).
+        spec_index: dict[tuple, int] = {}
+        refs: "dict[str, dict[str, int | str]]" = {}
+        for cid in self.execution_order():
+            spec = self.conditions[cid]
+            crefs: "dict[str, int | str]" = {}
+            for alias, block in spec.blocks.items():
+                if len(block.errors):
+                    # e.g. sensor-name resolution failed above (J5): the
+                    # reference skips the whole condition at temp-table
+                    # creation (condition.py:317-327); same here.
+                    break
+                if not block.secondary:
+                    seid_val = block.sensor_id if block.sensor_id is not None else block.sensor
+                    sig = (block.station_id, seid_val, block.operator, block.value)
+                    crefs[alias] = spec_index.setdefault(sig, len(spec_index))
+                elif block.source_condition_id in refs:
+                    crefs[alias] = block.source_condition_id
+                else:
+                    spec.errors.add(
+                        f'Secondary block "{alias}" references '
+                        f'unavailable condition "{block.source_condition_id}"'
+                    )
+                    break
+            else:
+                if crefs:
+                    refs[cid] = crefs
+        if not refs:
+            return results
 
         # The sheet's ENTIRE primary-block workload runs as one plan:
         # (a) one predicate-independent stepping pass (W1+W2) over the union
@@ -201,231 +238,126 @@ class CondCollection:
         #     table regardless of block count (the reference runs one
         #     pack_ranges SQL call per block, rescanning obs_main each
         #     time — condition.py:329-354);
-        # (b) one multi-block packing pass (W3-W5) keyed by block id, with
-        #     identical (key, op, value) specs deduplicated ACROSS
-        #     conditions (the reference's CSE is per-condition only,
-        #     condition.py:229-239).
+        # (b) one multi-block packing pass (W3-W5) keyed by block id.
         # Only the packed RUNS are cached — tiny — never raw readings.
-        spec_index: dict[tuple, int] = {}
-        block_ids: dict[tuple, int] = {}
-        for cid in order:
-            for b in self.conditions[cid].primary_blocks():
-                if len(b.errors):
-                    continue  # e.g. failed sensor resolution — skipped below
-                seid_val = b.sensor_id if b.sensor_id is not None else b.sensor
-                sig = (b.station_id, seid_val, b.operator, b.value)
-                if sig not in spec_index:
-                    spec_index[sig] = len(spec_index)
-                block_ids[(cid, b.alias)] = spec_index[sig]
-        packed_all = None
-        if spec_index:
-            needed_keys = {(sid, sev) for sid, sev, _, _ in spec_index}
-            combined = None
-            for sid, sev in needed_keys:
-                c = (F.col(key_cols[0]) == F.lit(sid)) & (
-                    F.col(key_cols[1]) == F.lit(sev)
-                )
-                combined = c if combined is None else (combined | c)
-            stepped = prepare_stepped_obs(
-                windowed.where(combined),
-                max_minutes,
-                key_cols=key_cols,
-                time_col=time_col,
+        combined = None
+        for sid, sev in {(sid, sev) for sid, sev, _, _ in spec_index}:
+            c = (F.col(key_cols[0]) == F.lit(sid)) & (F.col(key_cols[1]) == F.lit(sev))
+            combined = c if combined is None else (combined | c)
+        stepped = prepare_stepped_obs(
+            windowed.where(combined),
+            max_minutes,
+            key_cols=key_cols,
+            time_col=time_col,
+        )
+        specs = [
+            (bid, sid, sev, op, value)
+            for (sid, sev, op, value), bid in spec_index.items()
+        ]
+        # Materialize AND truncate lineage: the combine reads this relation
+        # through a fan-out over conditions — with lineage intact, Catalyst
+        # re-analyzes the full packing DAG per plan, and an unpopulated
+        # cache would be recomputed concurrently inside fan-out jobs.
+        # localCheckpoint pins the computed partitions and gives downstream
+        # plans a leaf-sized logical node.
+        packed_all = pack_ranges_multi(stepped, specs, key_cols=key_cols).localCheckpoint(
+            eager=True
+        )
+
+        # A secondary block is its source's master over the source's own
+        # primary blocks, on the same timeline (see combine_tagged). So each
+        # condition reads the CLOSURE of its primary blocks — its own and
+        # those of every condition it reads, transitively — and the whole
+        # sheet combines as ONE plan: one literal map fans each packed
+        # block out to every condition whose closure holds it (a
+        # CSE-shared block included), one cond_id exchange.
+        closure: dict[str, set[int]] = {}
+        for cid, crefs in refs.items():
+            closure[cid] = set().union(
+                *(closure[r] if isinstance(r, str) else {r} for r in crefs.values())
             )
-            specs = [
-                (bid, sid, sev, op, value)
-                for (sid, sev, op, value), bid in spec_index.items()
+        users: dict[int, list[str]] = {}
+        for cid, bids in closure.items():
+            for bid in bids:
+                users.setdefault(bid, []).append(cid)
+        block_users = F.create_map(
+            *[
+                col
+                for bid, cids in users.items()
+                for col in (F.lit(bid), F.array(*[F.lit(c) for c in cids]))
             ]
-            # Materialize AND truncate lineage: downstream plans reference
-            # this relation from dozens of branches — with lineage intact,
-            # Catalyst re-analyzes the full packing DAG per branch per
-            # action (driver-side planning grows superlinearly with sheet
-            # size; measured minutes at 25 conditions), and an unpopulated
-            # cache would be recomputed concurrently inside fan-out jobs.
-            # localCheckpoint pins the computed partitions and gives
-            # downstream plans a leaf-sized logical node.
-            packed_all = pack_ranges_multi(
-                stepped, specs, key_cols=key_cols
-            ).localCheckpoint(eager=True)
-
-        # Topological LEVELS: every condition in a level depends only on
-        # earlier levels, so each level combines as ONE multi-condition
-        # plan (combine_tagged — one cond_id exchange for all N
-        # conditions). Level counts are small in practice (0 = primaries,
-        # 1+ = secondary chains).
-        level_of: dict[str, int] = {}
-        for cid in order:
-            deps = [d for d in self.conditions[cid].dependencies() if d in level_of]
-            level_of[cid] = (max(level_of[d] for d in deps) + 1) if deps else 0
-        levels: dict[int, list[str]] = {}
-        for cid in order:
-            levels.setdefault(level_of[cid], []).append(cid)
-        # Levels whose ranges a LATER level's secondary blocks read: these
-        # are materialized EAGERLY (their partitions feed multiple
-        # downstream plan branches — an unmaterialized cache would be
-        # recomputed concurrently inside the fan-out job).  Every other
-        # level — in particular the ONLY level of a secondary-free sheet,
-        # the common case — checkpoints lazily, which saves the final
-        # result stage: under AQE the lazy call still runs the level's one
-        # shuffle map stage as a job inside localCheckpoint, and the
-        # result stage folds into the first consuming job (normally the
-        # sheet-summary collect).
-        eager_levels = {
-            level_of[b.source_condition_id]
-            for spec in self.conditions.values()
-            for b in spec.blocks.values()
-            if b.secondary and b.source_condition_id in level_of
-        }
-
-        for lvl in sorted(levels):
-            # Per level, assemble the tagged ranges relation for
-            # combine_tagged: ALL primary blocks come from packed_all via
-            # ONE literal map looked up by block_id and exploded (block_id
-            # → [(cond_id, ualias)] — a CSE-shared block fans out to every
-            # condition using it; blocks of other levels find no entry and
-            # drop out); secondary blocks add one small branch each.
-            primary_users: dict[int, list[tuple[str, str]]] = {}
-            secondary_parts: list[DataFrame] = []
-            cond_aliases: dict[str, list[str]] = {}
-            exprs: dict[str, str] = {}
-            for cid in levels[lvl]:
-                spec = self.conditions[cid]
-                aliases: list[str] = []
-                pmap: list[tuple[int, str]] = []
-                sparts: list[DataFrame] = []
-                failed = False
-                for alias, block in spec.blocks.items():
-                    if len(block.errors):
-                        # e.g. sensor-name resolution failed above (J5): the
-                        # reference skips the whole condition at temp-table
-                        # creation (condition.py:317-327); same here.
-                        failed = True
-                        break
-                    if block.secondary:
-                        dep = results.get(block.source_condition_id)
-                        if dep is None or dep.ranges is None:
-                            spec.errors.add(
-                                f'Secondary block "{alias}" references '
-                                f'unavailable condition "{block.source_condition_id}"'
-                            )
-                            failed = True
-                            break
-                        # Secondary block = the referenced condition's master
-                        # column over its ranges (block.py:195-207).
-                        sparts.append(
-                            dep.ranges.select(
-                                F.lit(cid).alias("cond_id"),
-                                F.lit(f"{cid}__{alias}").alias("ualias"),
-                                "vfrom",
-                                "vuntil",
-                                encode_tristate(F.col("master")).alias("s_start"),
-                            )
-                        )
-                    else:
-                        pmap.append((block_ids[(cid, alias)], f"{cid}__{alias}"))
-                    aliases.append(alias)
-                if failed or not aliases:
-                    continue
-                cond_aliases[cid] = aliases
-                exprs[cid] = spec.alias_condition
-                for bid, ualias in pmap:
-                    primary_users.setdefault(bid, []).append((cid, ualias))
-                secondary_parts.extend(sparts)
-            if not cond_aliases:
-                continue
-            tagged_parts = list(secondary_parts)
-            if primary_users:
-                block_users = F.create_map(
-                    *[
-                        col
-                        for bid, users in primary_users.items()
-                        for col in (
-                            F.lit(bid),
-                            F.array(
-                                *[
-                                    F.struct(
-                                        F.lit(c).alias("cond_id"),
-                                        F.lit(u).alias("ualias"),
-                                    )
-                                    for c, u in users
-                                ]
-                            ),
-                        )
-                    ]
-                )
-                tagged_parts.append(
-                    packed_all.select(
-                        F.inline(F.element_at(block_users, F.col("block_id"))),
-                        "vfrom",
-                        "vuntil",
-                        encode_tristate(F.col("istrue")).alias("s_start"),
-                    )
-                )
-            tagged = reduce(DataFrame.unionByName, tagged_parts)
-            multi = combine_tagged(tagged, exprs, cond_aliases)
-            # One materialized relation per level replaces the
-            # reference's per-condition temp tables (condition.py:338);
-            # it holds RUNS (small), and every downstream read —
-            # summaries, secondary references, reports — derives from
-            # it. Lineage truncated for the same planning-cost reason
-            # as packed_all above; eager only when a later level will
-            # fan out over it (see eager_levels above).
-            multi = multi.localCheckpoint(eager=lvl in eager_levels)
-            # ONE cond_id-grouped rollup per level: every condition's
-            # summary is a cheap filter of it.  Building the A3 aggregate
-            # once per LEVEL instead of once per condition keeps driver-
-            # side plan construction flat in sheet size (profiled: the
-            # per-condition aggregates were ~1.1 s of the 10-condition
-            # sheet's ~6.8 s warm wall), and the union the driver query
-            # reads (summaries_df) becomes one plan per level whose
-            # aggregation runs once over the checkpointed runs.
-            # The keys frame restores the one-row-per-condition contract:
-            # a condition whose blocks matched ZERO observations has no
-            # rows in `multi`, and a grouped agg would silently drop it —
-            # the report rows (reports.summary_rows) rely on its summary
-            # row existing, NULL-filled, for no-data conditions exactly as
-            # the ungrouped rollup produced.
-            cid_keys = obs.sparkSession.range(0, 1, 1, 1).select(
-                F.explode(F.array(*[F.lit(c) for c in cond_aliases])).alias("cond_id")
+        )
+        tagged = packed_all.select(
+            F.explode(F.element_at(block_users, F.col("block_id"))).alias("cond_id"),
+            "block_id",
+            "vfrom",
+            "vuntil",
+            encode_tristate(F.col("istrue")).alias("s_start"),
+        )
+        exprs = {cid: self.conditions[cid].alias_condition for cid in refs}
+        # One relation replaces the reference's per-condition temp tables
+        # (condition.py:338); it holds RUNS (small), and every downstream
+        # read — summaries, reports — derives from it.
+        multi = combine_tagged(tagged, exprs, refs).localCheckpoint(eager=False)
+        # ONE cond_id-grouped rollup per sheet: every condition's summary
+        # is a cheap filter of it, so driver-side plan construction stays
+        # flat in sheet size (profiled: per-condition aggregates were
+        # ~1.1 s of a 10-condition sheet's ~6.8 s warm wall).
+        # The keys frame restores the one-row-per-condition contract:
+        # a condition whose blocks matched ZERO observations has no
+        # rows in `multi`, and a grouped agg would silently drop it —
+        # the report rows (reports.summary_rows) rely on its summary
+        # row existing, NULL-filled, for no-data conditions exactly as
+        # the ungrouped rollup produced.
+        cid_keys = obs.sparkSession.range(0, 1, 1, 1).select(
+            F.explode(F.array(*[F.lit(c) for c in refs])).alias("cond_id")
+        )
+        summary = validity_summary(multi, group_cols=["cond_id"], keys=cid_keys)
+        aliases = {cid: list(crefs) for cid, crefs in refs.items()}
+        sheet = SheetResult(multi, summary, aliases, (packed_all, multi))
+        for cid in refs:
+            results[cid].ranges = condition_view(multi, cid, aliases[cid])
+            results[cid].summary = summary.where(F.col("cond_id") == F.lit(cid)).drop(
+                "cond_id"
             )
-            lvl_summary = validity_summary(
-                multi, group_cols=["cond_id"], keys=cid_keys
-            )
-            level = LevelResult(multi, lvl_summary, cond_aliases)
-            for cid in cond_aliases:
-                results[cid].ranges = condition_view(multi, cid, cond_aliases[cid])
-                results[cid].summary = lvl_summary.where(
-                    F.col("cond_id") == F.lit(cid)
-                ).drop("cond_id")
-                results[cid].level = level
+            results[cid].sheet = sheet
         return results
 
     @staticmethod
     def summaries_df(results: dict[str, ConditionResult]) -> DataFrame | None:
         """Union every condition's one-row validity summary into ONE
         DataFrame (cond_id + A3 columns) so the whole sheet's rollups run
-        as a single Spark job with concurrently-scheduled stages —
-        collecting summaries one `.collect()` at a time serializes ~10
-        small jobs per condition instead.
+        as a single Spark job — collecting summaries one `.collect()` at a
+        time serializes ~10 small jobs per condition instead.
 
-        Conditions of a level share one cond_id-grouped rollup
-        (``level.summary``), so the union is one branch per level — plan
+        A sheet's conditions share one cond_id-grouped rollup
+        (``sheet.summary``), so the union has one branch per sheet — plan
         size and execution stay flat in condition count.  Conditions that
-        did not run (no level) are left out."""
-        levels: dict[LevelResult, list[str]] = {}
+        did not run (no sheet result) are left out."""
+        sheets: dict[SheetResult, list[str]] = {}
         for cid, res in results.items():
-            if res.level is not None:
-                levels.setdefault(res.level, []).append(cid)
+            if res.sheet is not None:
+                sheets.setdefault(res.sheet, []).append(cid)
         # isin keeps the contract exact when the caller passes a SUBSET of
-        # a level's results; on the normal whole-sheet path it is a cheap
-        # always-true predicate on a per-level one-row-per-condition frame.
+        # a sheet's results; on the normal whole-sheet path it is a cheap
+        # always-true predicate on a one-row-per-condition frame.
         parts = [
-            level.summary.where(F.col("cond_id").isin(cids))
-            for level, cids in levels.items()
+            sheet.summary.where(F.col("cond_id").isin(cids))
+            for sheet, cids in sheets.items()
         ]
         if not parts:
             return None
         return reduce(DataFrame.unionByName, parts)
+
+    @staticmethod
+    def release(results: dict[str, ConditionResult]) -> None:
+        """Unpersist the partitions that ``run`` checkpointed for these
+        results. Every frame of the results reads them, so call this once
+        the last of them has been read: a read after the release fails with
+        ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``."""
+        for sheet in {res.sheet for res in results.values() if res.sheet is not None}:
+            for df in sheet.checkpoints:
+                df._jdf.logicalPlan().rdd().unpersist(False)
 
     def error_tree(self) -> dict:
         """S9: nested error dict (analysis_collection.py:149-187 shape)."""
