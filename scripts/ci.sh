@@ -2,7 +2,11 @@
 # CI gate: the two long verifications that form the regression net, as ONE
 # command (r5 VERDICT next-round #8).
 #
-#   1. full pytest suite (575 tests, ~10 min on 4 cores)
+#   1. full pytest suite (579 tests, ~8 min on 4 cores), then the
+#      end-to-end benchmark's self-tests (e2ebench/run.py --selftest for
+#      sheet_report and corpus_mix, ~30 s): the workbook CLI and the
+#      pretraining_mix pipeline each run once, checked against DuckDB, and
+#      an altered output must be caught
 #   2. scripts/selfcheck.py — every registry query's Spark plan vs its
 #      DuckDB oracle at sf0.01, value-compared (~11 min); output is diffed
 #      against the expected-green manifest scripts/ci_expected.txt so a
@@ -59,6 +63,10 @@ fi
 if [[ "$SF1" == 0 ]]; then
   echo "== pytest =="
   python -m pytest tests/ -q
+  for workload in sheet_report corpus_mix; do
+    echo "== e2ebench selftest: $workload =="
+    python3 e2ebench/run.py --workload "$workload" --selftest | tail -n 1
+  done
 fi
 
 echo "== selfcheck vs $EXPECTED =="

@@ -120,7 +120,46 @@ def test_dedup_insert_on_conflict_do_nothing(spark):
 
 def test_sensor_name_to_id(spark, dims):
     _, sensors = dims
-    assert sensor_name_to_id(sensors) == {"tie_1": 3, "keli_1": 27}
+    assert sensor_name_to_id(sensors.collect()) == {"tie_1": 3, "keli_1": 27}
+
+
+#: Sensor metadata as a careless export writes it: quoted and unquoted
+#: names, a backslash-escaped and a bare embedded quote, blank and
+#: whitespace-only lines, non-integer and out-of-range ids, a short row,
+#: an extra column, empty fields and a delimiter inside quotes.
+HOSTILE_METADATA = """3|18|"TIE_1"
+27|19|KELI_1
+
+x7|20|"bad id"
+8|21
+9|22|"EXTRA"|more
+11|24|A"B
+12|25|"A\\"B"
+13|26|
+14|27|""
+ 15|28| spaced 
+16||"no lotju"
+99999999999|31|big
++19|32|plus
+   
+20|33|"two|part"
+"""
+
+
+def test_read_metadata_csv_matches_spark(spark, tmp_path):
+    """The stdlib metadata reader returns what Spark's CSV reader returns
+    for the same schema and options, row for row."""
+    from tsatool_app_spark.sources.metadata import read_metadata_csv
+
+    path = tmp_path / "sensors.csv"
+    path.write_text(HOSTILE_METADATA)
+    oracle = spark.read.csv(
+        str(path), sep="|", header=False, schema="id int, lotjuid int, name string"
+    ).collect()
+    rows = read_metadata_csv(str(path))
+    assert [tuple(r) for r in rows] == [tuple(r) for r in oracle]
+    assert len(rows) == 14
+    assert sensor_name_to_id(rows) == sensor_name_to_id(oracle)
 
 
 def test_parse_finnish_timestamp_dst_edges(spark):

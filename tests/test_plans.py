@@ -90,9 +90,9 @@ def test_combine_tagged_single_cond_id_exchange(spark):
 
 def test_sheet_runs_single_cond_id_exchange(spark, checkpointed):
     """A sheet with a chain and a diamond of secondaries runs as ONE
-    combine plan: run() checkpoints the packed blocks and the sheet's runs,
-    nothing per dependency level, and the runs relation has exactly one
-    hash exchange, on cond_id."""
+    combine plan: run() checkpoints nothing, and the sheet's runs relation
+    has exactly one hash exchange on cond_id, nothing per dependency
+    level, and no broadcast."""
     from datetime import datetime, timedelta
 
     from tsatool_app_spark.runner import CondCollection
@@ -118,10 +118,11 @@ def test_sheet_runs_single_cond_id_exchange(spark, checkpointed):
     )
     res = coll.run(obs, sensor_name_to_id={"tie_1": 3, "keli_1": 27})
     assert all(r.ranges is not None for r in res.values())
-    assert len(checkpointed) == 2
-    # run() already ran the shuffle map stage: read AQE's final plan only
-    plan = executed_plan(checkpointed[1]).split("== Initial Plan ==")[0]
-    assert re.findall(r"\bExchange hashpartitioning\((\w+)", plan) == ["cond_id"]
+    assert checkpointed == []
+    plan = executed_plan(res["x_d1"].sheet.runs)
+    assert re.findall(r"\bExchange hashpartitioning\((\w+)", plan).count("cond_id") == 1
+    for node in ("BroadcastExchange", "BroadcastNestedLoopJoin", "CartesianProduct"):
+        assert node not in plan
 
 
 def test_text_ops_scan_only_needed_columns(spark, sf_dir):

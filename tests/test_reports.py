@@ -245,18 +245,23 @@ def _jobs_in_group(sc, group: str, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_sinks_read_the_sheet_once(spark, obs, sheet, results, tmp_path):
-    """summary_rows is the report path's only Spark reader: its job count
-    does not grow with the number of conditions in a level (the module
-    sheet's one runnable condition against four), and no sink runs a
-    Spark job."""
+def test_sinks_read_the_sheet_once(spark, obs, results, tmp_path):
+    """summary_rows is the report path's only Spark reader: the jobs of a
+    fresh run + summary_rows do not grow with the number of conditions in
+    a sheet (one runnable condition against four), and no sink runs a
+    Spark job.  Both sheets are fresh: a re-collect of a collected runs
+    relation reuses its shuffle files and runs fewer jobs."""
     sc = spark.sparkContext
-    four = CondCollection.from_rows(
-        "sheet4", T0, T0,
-        [("Sipoo", f"A{i}", f"s1122#tie_1 < {i + 2}") for i in range(4)],
-    ).run(obs, sensor_name_to_id={"tie_1": 3})
-    one_jobs = _jobs_in_group(sc, "summary-rows-1", lambda: reports.summary_rows(sheet[1]))
-    four_jobs = _jobs_in_group(sc, "summary-rows-4", lambda: reports.summary_rows(four))
+
+    def run_and_report(n):
+        coll = CondCollection.from_rows(
+            f"sheet{n}", T0, T0,
+            [("Sipoo", f"A{i}", f"s1122#tie_1 < {i + 2}") for i in range(n)],
+        )
+        reports.summary_rows(coll.run(obs, sensor_name_to_id={"tie_1": 3}))
+
+    one_jobs = _jobs_in_group(sc, "summary-rows-1", lambda: run_and_report(1))
+    four_jobs = _jobs_in_group(sc, "summary-rows-4", lambda: run_and_report(4))
     assert one_jobs == four_jobs > 0
 
     _, rows = results
@@ -275,9 +280,7 @@ def test_sinks_read_the_sheet_once(spark, obs, sheet, results, tmp_path):
 def test_diamond_sheet_job_floor(spark, obs):
     """A sheet whose secondaries form a diamond (C1 reads B1 and B2, both
     read A1 and A2) runs and reports within a fixed job floor: the sheet
-    combines as one plan, with one checkpoint and one runs collect for
-    the whole sheet (one of each per dependency level takes 14 jobs
-    here)."""
+    combines as one plan, and its runs collect is the one Spark action."""
     coll = CondCollection.from_rows(
         "diamond", T0, T0,
         [
@@ -293,4 +296,43 @@ def test_diamond_sheet_job_floor(spark, obs):
         rows = reports.summary_rows(coll.run(obs, sensor_name_to_id={"tie_1": 3}))
         assert all(r["ranges"] for r in rows)
 
-    assert _jobs_in_group(spark.sparkContext, "diamond", run_and_report) <= 6
+    assert _jobs_in_group(spark.sparkContext, "diamond", run_and_report) <= 3
+
+
+def test_summary_rows_fold_equals_validity_summary(spark):
+    """summary_rows folds each condition's A3 fields from the collected
+    runs; they equal the condition's summaries_df row exactly.  Readings
+    carry sub-second timestamps, so the observed extent must take whole
+    epoch seconds at each end as Spark's CAST(ts AS LONG) does.  A no-data
+    condition has zero valid and not-valid time; an errored one, which
+    did not run, has no summaries_df row and None in every field."""
+    rows = [
+        (T0 + timedelta(minutes=5 * i, microseconds=(i * 370_001 + 700_000) % 1_000_000),
+         1122, se, float(v))
+        for i, v in enumerate([5, 4, 2, 1, 2.5, 4, 5, 5, 1, 2])
+        for se, v in ((3, v), (27, 8.0 if i % 3 else 1.0))
+    ]
+    obs = spark.createDataFrame(rows, "tfrom timestamp, statid int, seid int, seval float")
+    coll = CondCollection.from_rows(
+        "fold", T0, T0,
+        [
+            ("x", "A1", "s1122#tie_1 < 3"),
+            ("x", "A2", "s1122#tie_1 >= 2 AND s1122#keli_1 = 8"),
+            ("x", "N1", "s1115#tie_1 < 3"),
+            ("x", "E1", "keli_10 = 8 AND"),
+            ("x", "S1", "A1 OR NOT A2"),
+            ("x", "S2", "S1 AND N1"),
+        ],
+    )
+    res = coll.run(obs, sensor_name_to_id={"tie_1": 3, "keli_1": 27})
+    expected = {r.cond_id: r.asDict() for r in CondCollection.summaries_df(res).collect()}
+    got = {r["cond_id"]: r for r in reports.summary_rows(res)}
+    assert set(got) == set(expected) | {"x_e1"}
+    assert any(r["data_from"].microsecond for r in got.values() if r["data_from"])
+    fields = reports._SUMMARY_FIELDS
+    for cid, s in expected.items():
+        assert {f: got[cid][f] for f in fields} == {f: s[f] for f in fields}, cid
+    assert all(got["x_e1"][f] is None for f in fields)
+    assert got["x_n1"]["tottime_valid_s"] == got["x_n1"]["tottime_notvalid_s"] == 0
+    assert got["x_n1"]["data_from"] is None
+    assert got["x_s1"]["tottime_valid_s"] > 0 and got["x_s1"]["tottime_notvalid_s"] > 0

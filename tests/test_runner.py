@@ -157,7 +157,7 @@ def _stacked_diamond(depth):
     return rows
 
 
-def test_deep_secondary_diamond_plan_stays_linear(spark, checkpointed):
+def test_deep_secondary_diamond_plan_stays_linear(spark):
     """A stacked diamond of depth 10 runs, and its combine plan grows
     linearly with depth: each read condition's master is one column that
     its readers reference, so depth 10's analyzed plan is < 4x depth 5's
@@ -166,12 +166,10 @@ def test_deep_secondary_diamond_plan_stays_linear(spark, checkpointed):
     obs = obs_fixture(spark)
 
     def plan_chars(depth):
-        checkpointed.clear()
         coll = CondCollection.from_rows("deep", T0, T0, _stacked_diamond(depth))
         res = coll.run(obs, sensor_name_to_id=SENSORS)
         assert not coll.errors and len(res) == 2 * depth + 2
-        # the runs relation's plan, before the checkpoint hides it
-        analyzed = checkpointed[-1]._jdf.queryExecution().analyzed()
+        analyzed = res["x_l0a"].sheet.runs._jdf.queryExecution().analyzed()
         return res, len(analyzed.treeString(False, False, 1 << 30, False, False))
 
     _, shallow = plan_chars(5)

@@ -208,6 +208,49 @@ def test_streaming_condition_analysis(spark, tmp_path):
     assert (b.tottime_valid_s, b.tottime_s) == (300, 600)
 
 
+def test_streaming_condition_analysis_pins_nothing(spark, tmp_path):
+    """A refreshed micro-batch leaves the persisted-RDD count as it found
+    it: the runner pins no partitions, so a long stream does not grow."""
+    from tsatool_app_spark.runner import CondCollection
+    from tsatool_app_spark.streaming.condition_stream import (
+        streaming_condition_analysis,
+    )
+
+    src = str(tmp_path / "in")
+    coll = CondCollection.from_rows(
+        "live", T0, T0,
+        [("x", "A1", "s1122#tie_1 < 3"), ("x", "B1", "A1 OR s1122#tie_1 > 4")],
+    )
+    seen: dict[str, list] = {}
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+
+    def on_summary(cid, sdf):
+        seen.setdefault(cid, []).append(sdf.collect()[0])
+
+    write_obs_batch(spark, src, [(0, 1122, 3, 5.0), (5, 1122, 3, 2.0)], 0)
+    before = persisted().size()
+    q = streaming_condition_analysis(
+        stream_observations(spark, src),
+        coll,
+        str(tmp_path / "store"),
+        sensor_name_to_id={"tie_1": 3},
+        checkpoint=str(tmp_path / "ckpt"),
+        on_summary=on_summary,
+    )
+    try:
+        q.processAllAvailable()
+        after_one = persisted().size()
+        write_obs_batch(spark, src, [(10, 1122, 3, 2.0), (15, 1122, 3, 5.0)], 1)
+        q.processAllAvailable()
+        after_two = persisted().size()
+    finally:
+        q.stop()
+        q.awaitTermination(60)
+    assert {cid: len(v) for cid, v in seen.items()} == {"x_a1": 2, "x_b1": 2}
+    assert seen["x_a1"][1].tottime_valid_s == 600
+    assert before == after_one == after_two
+
+
 def test_windowed_counts_emit_on_watermark_advance(spark, tmp_path):
     """Windows whose end precedes the advanced watermark ARE emitted with
     correct counts (append mode, two micro-batch files)."""

@@ -73,6 +73,33 @@ def test_cli_dry_validate_exit_codes(tmp_path, capsys):
     assert rc2 == 0
 
 
+def test_cli_dry_validate_metadata_runs_no_spark_job(tmp_path, spark, capsys):
+    """--dry-validate reads the stations and sensors CSVs on the driver:
+    the sheet resolves against them, and no Spark job runs."""
+    clean = tmp_path / "clean"
+    clean.mkdir()
+    write_sheet(clean / "ok.csv", CLEAN_SHEET)
+    (tmp_path / "sensors.csv").write_text('3|18|"TIE_1"\n27|19|"KELI_1"\n')
+    (tmp_path / "stations.csv").write_text("1122|7|vt7_Sipoo\n")
+    argv = [
+        "-i", str(clean), "-n", "t3", "-r", str(tmp_path / "res"), "--dry-validate",
+        "--sensors-csv", str(tmp_path / "sensors.csv"),
+        "--stations-csv", str(tmp_path / "stations.csv"),
+    ]
+    sc = spark.sparkContext
+    sc.setJobGroup("dry-validate", "dry-validate")
+    try:
+        assert main(argv) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+    assert len(sc.statusTracker().getJobIdsForGroup("dry-validate")) == 0
+    assert json.loads(capsys.readouterr().out)["dry_validate"] == "ok"
+    # the CSVs, not the embedded snapshots, are what it validated against
+    (tmp_path / "stations.csv").write_text("1115|1|vt1_Sipoo\n")
+    assert main(argv) == 1
+
+
 def test_xlsx_codec_roundtrip(tmp_path):
     """write_xlsx → read_xlsx preserves values and types (str/int/float/
     bool/datetime/None), multiple sheets, sheet order."""
@@ -163,7 +190,7 @@ def test_cli_full_run(tmp_path, spark, capsys):
         ]
     )
     assert rc == 0
-    # the sheet's checkpoints are released once its reports are written
+    # a run pins no partitions: nothing is left behind for a GC to find
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
     summary = list(csv.DictReader(open(tmp_path / "res" / "run1_s1.csv")))
     assert len(summary) == 2

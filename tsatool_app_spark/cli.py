@@ -18,7 +18,7 @@ import sys
 from pathlib import Path
 
 from tsatool_app_spark import reports
-from tsatool_app_spark.runner import CondCollection
+from tsatool_app_spark.sources.metadata import read_metadata_csv, sensor_name_to_id
 from tsatool_app_spark.sources.workbook import read_csv_workbook, read_xlsx_workbook
 
 
@@ -70,20 +70,10 @@ def main(argv: list[str] | None = None) -> int:
 
         station_ids: set[int] = set(snapshot_station_ids())
         sensor_map: dict[str, int] = snapshot_sensor_name_to_id()
-        if args.stations_csv or args.sensors_csv:
-            from tsatool_app_spark.session import get_spark
-            from tsatool_app_spark.sources.metadata import (
-                read_metadata_csv,
-                sensor_name_to_id,
-            )
-
-            spark = get_spark("tsatool-dryvalidate")
-            if args.stations_csv:
-                station_ids = {
-                    r.id for r in read_metadata_csv(spark, args.stations_csv).collect()
-                }
-            if args.sensors_csv:
-                sensor_map = sensor_name_to_id(read_metadata_csv(spark, args.sensors_csv))
+        if args.stations_csv:
+            station_ids = {r.id for r in read_metadata_csv(args.stations_csv)}
+        if args.sensors_csv:
+            sensor_map = sensor_name_to_id(read_metadata_csv(args.sensors_csv))
         tree = analysis.dry_validate(station_ids, sensor_map)
         out = results_dir / f"{args.name}_ERRORS.json"
         out.write_text(json.dumps(tree, indent=1, default=str))
@@ -108,9 +98,7 @@ def main(argv: list[str] | None = None) -> int:
     obs = spark.read.parquet(args.obs_parquet)
     sensor_map = None
     if args.sensors_csv:
-        from tsatool_app_spark.sources.metadata import read_metadata_csv, sensor_name_to_id
-
-        sensor_map = sensor_name_to_id(read_metadata_csv(spark, args.sensors_csv))
+        sensor_map = sensor_name_to_id(read_metadata_csv(args.sensors_csv))
 
     for coll in analysis.collections:
         res = coll.run(obs, max_minutes=args.max_minutes, sensor_name_to_id=sensor_map)
@@ -133,9 +121,6 @@ def main(argv: list[str] | None = None) -> int:
                 reports.write_timeline_json(row, str(results_dir / f"{stem}.json"))
                 if args.png:
                     reports.write_timeline_png(row, str(results_dir / f"{stem}.png"))
-        # every report is written: free the sheet's checkpointed partitions
-        # now, not whenever a JVM GC lets Spark's ContextCleaner find them
-        CondCollection.release(res)
         log.info("collection %s: %d conditions", coll.name, len(coll.conditions))
 
     reports.write_error_json(analysis, str(results_dir / f"{args.name}_ERRORS.json"))

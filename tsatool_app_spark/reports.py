@@ -18,11 +18,11 @@ implementation, and structured CSV/JSON sinks carry the same content:
 - S10 log sink          → stdlib logging, configured in setup_logging
 
 One driver-side data path feeds every sink: summary_rows collects a sheet's
-results once into plain per-condition rows, and every write_* sink renders
-from those rows without running a Spark job. The rows hold one-row
-summaries and small per-condition range tables (10²-10⁴ rows) — never raw
-observations — so report generation is O(conditions), independent of data
-scale.
+runs relation once and folds it into plain per-condition rows, A3 summary
+included, and every write_* sink renders from those rows without running a
+Spark job. The collect holds small per-condition range tables (10²-10⁴
+rows) — never raw observations — so report generation is O(conditions),
+independent of data scale.
 """
 
 from __future__ import annotations
@@ -46,7 +46,7 @@ SUMMARY_COLUMNS = [
     "rows",
 ]
 
-#: Summary (A3) fields a report row takes from the condition's rollup.
+#: Summary (A3) fields a report row folds from the condition's runs.
 _SUMMARY_FIELDS = (
     "data_from",
     "data_until",
@@ -68,54 +68,85 @@ def summary_rows(results: dict) -> list[dict]:
     """Collect runner results into plain rows, one per condition: the only
     report step that runs Spark, and the input of every sink.
 
-    One collect of ``CondCollection.summaries_df`` reads every summary, and
-    one collect of the sheet's shared runs relation reads every
-    condition's ranges. A row holds the SUMMARY_COLUMNS plus ``cond_id``,
-    the A3 seconds (``tottime_valid_s``, ``tottime_notvalid_s``,
-    ``tottime_nodata_s``), ``errors`` (the condition's error messages) and
-    ``ranges``: the condition's runs in vfrom order, each a dict
-    (vfrom, vuntil, <alias>..., master) — None when the condition did not
-    run, empty when it matched no data."""
-    from tsatool_app_spark.runner import CondCollection
-
-    summaries_df = CondCollection.summaries_df(results)
-    summaries = (
-        {r.cond_id: r for r in summaries_df.collect()} if summaries_df is not None else {}
-    )
-    ranges: dict[str, list[dict]] = {
-        cid: [] for cid, res in results.items() if res.sheet is not None
-    }
+    One collect of each sheet's shared runs relation reads every
+    condition's ranges, and each condition's A3 summary is folded from
+    its collected runs on the driver, as the reference does
+    (condition.py:435-446), with the values ``validity_summary`` gives. A
+    row holds the SUMMARY_COLUMNS plus ``cond_id``, the A3 seconds
+    (``tottime_valid_s``, ``tottime_notvalid_s``, ``tottime_nodata_s``),
+    ``errors`` (the condition's error messages) and ``ranges``: the
+    condition's runs in vfrom order, each a dict (vfrom, vuntil,
+    <alias>..., master) — None when the condition did not run, empty when
+    it matched no data."""
+    runs: dict[str, list] = {cid: [] for cid, res in results.items() if res.sheet is not None}
     sheets = dict.fromkeys(res.sheet for res in results.values() if res.sheet is not None)
     for sheet in sheets:
         for r in sheet.runs.collect():
-            cid = r.cond_id
-            if cid in ranges:
-                ranges[cid].append(
-                    {
-                        "vfrom": r.vfrom,
-                        "vuntil": r.vuntil,
-                        **{a: r[f"{cid}__{a}"] for a in sheet.aliases[cid]},
-                        "master": r.master,
-                    }
-                )
+            if r.cond_id in runs:
+                runs[r.cond_id].append(r)
+    for rs in runs.values():
+        rs.sort(key=lambda r: r.vfrom)
     out = []
     for cid, res in results.items():
         spec = res.spec
-        s = summaries.get(cid)
-        runs = ranges.get(cid)
+        rs = runs.get(cid)
         out.append(
             {
                 "cond_id": cid,
                 "site": spec.site,
                 "master_alias": spec.master_alias,
                 "condition": spec.raw_condition,
-                **{c: None if s is None else s[c] for c in _SUMMARY_FIELDS},
-                "rows": 0 if runs is None else len(runs),
+                **_fold_summary(rs),
+                "rows": 0 if rs is None else len(rs),
                 "errors": list(spec.errors.messages),
-                "ranges": None if runs is None else sorted(runs, key=lambda r: r["vfrom"]),
+                "ranges": None
+                if rs is None
+                else [
+                    {
+                        "vfrom": r.vfrom,
+                        "vuntil": r.vuntil,
+                        **{a: r[f"{cid}__{a}"] for a in res.sheet.aliases[cid]},
+                        "master": r.master,
+                    }
+                    for r in rs
+                ],
             }
         )
     return out
+
+
+def _fold_summary(runs: "list | None") -> dict:
+    """The _SUMMARY_FIELDS of one condition's runs, equal to its
+    ``validity_summary`` row: durations are sums of the runs' ``vdiff_s``,
+    the observed extent is a difference of whole epoch seconds (Spark's
+    ``CAST(ts AS LONG)`` floors), and a percentage is ``x / tot * 100.0``.
+    A condition with no runs has zero valid and not-valid time and None
+    elsewhere; one that did not run has None everywhere."""
+    out = dict.fromkeys(_SUMMARY_FIELDS)
+    if runs is None:
+        return out
+    valid = sum(r.vdiff_s for r in runs if r.master is True)
+    notvalid = sum(r.vdiff_s for r in runs if r.master is False)
+    out.update(tottime_valid_s=valid, tottime_notvalid_s=notvalid)
+    if not runs:
+        return out
+    data_from = min(r.vfrom for r in runs)
+    data_until = max(r.vuntil for r in runs)
+    # collected timestamps are naive local datetimes (pyspark's
+    # fromtimestamp); .timestamp() maps them back to the exact epoch
+    tot = int(data_until.replace(microsecond=0).timestamp()) - int(
+        data_from.replace(microsecond=0).timestamp()
+    )
+    nodata = tot - valid - notvalid
+    return {
+        **out,
+        "data_from": data_from,
+        "data_until": data_until,
+        "tottime_nodata_s": nodata,
+        "percentage_valid": valid / tot * 100.0,
+        "percentage_notvalid": notvalid / tot * 100.0,
+        "percentage_nodata": nodata / tot * 100.0,
+    }
 
 
 def write_summary_csv(rows: list[dict], path: str) -> str:

@@ -14,12 +14,13 @@ Spark-first changes (no semantic impact, SURVEY §7.4):
 - a sheet runs as ONE combine plan instead of per-condition temp tables:
   a secondary condition reads the primary blocks of the conditions it
   references on its own timeline, so chains and diamonds of secondaries
-  cost one cond_id exchange and one checkpoint, whatever their depth;
+  cost one cond_id exchange, whatever their depth;
 - secondary dependencies get a REAL topological sort with cycle detection —
   a strict improvement that preserves all accepted inputs;
 - the time-windowed observations (obs_main, P1) are read once per sheet;
-  Catalyst pushes the window filter into the scan, and only the packed
-  runs are checkpointed;
+  Catalyst pushes the window filter into the scan;
+- ``run`` only plans: it runs no Spark job and pins nothing, and a report
+  reads the sheet with one collect of its runs relation;
 - sheets (collections) are independent Spark jobs, parallelizable.
 """
 
@@ -27,7 +28,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 from datetime import datetime, time
-from functools import reduce
+from functools import cached_property, reduce
 from graphlib import CycleError, TopologicalSorter
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,22 +54,56 @@ DEFAULT_MAX_MINUTES = 30
 
 @dataclass(eq=False)  # identity-hashed: readers group conditions by sheet
 class SheetResult:
-    """A sheet's shared relations, the same object on every condition that
-    ran: report and summary reads make one plan (and one collect) per
+    """A sheet's shared runs relation, the same object on every condition
+    that ran: report and summary reads make one plan (and one collect) per
     SHEET instead of one per condition."""
 
     runs: DataFrame  # (cond_id, vfrom, vuntil, vdiff_s, <cond_id>__<alias>..., master)
-    summary: DataFrame  # cond_id-grouped validity rollup (cond_id + A3 columns)
     aliases: "dict[str, list[str]]"  # cond_id -> block aliases, column order
-    checkpoints: "tuple[DataFrame, ...]"  # the frames whose partitions run() pinned
+
+    @cached_property
+    def summary(self) -> DataFrame:
+        """The cond_id-grouped validity rollup (cond_id + A3 columns), one
+        row per condition that ran.
+
+        ONE rollup per sheet: every condition's summary is a cheap filter
+        of it, so driver-side plan construction stays flat in sheet size
+        (profiled: per-condition aggregates were ~1.1 s of a 10-condition
+        sheet's ~6.8 s warm wall). The keys frame restores the
+        one-row-per-condition contract: a condition whose blocks matched
+        ZERO observations has no rows in ``runs``, and a grouped agg would
+        silently drop it."""
+        cid_keys = self.runs.sparkSession.range(0, 1, 1, 1).select(
+            F.explode(F.array(*[F.lit(c) for c in self.aliases])).alias("cond_id")
+        )
+        return validity_summary(self.runs, group_cols=["cond_id"], keys=cid_keys)
 
 
 @dataclass
 class ConditionResult:
+    """One condition's result. ``ranges`` and ``summary`` are views of the
+    sheet's relations, planned on first access; both are None when the
+    condition did not run."""
+
     spec: ConditionSpec
-    ranges: DataFrame | None = None  # (vfrom, vuntil, vdiff_s, <aliases...>, master)
-    summary: DataFrame | None = None  # one-row validity rollup (A3)
     sheet: SheetResult | None = None  # the sheet result this condition ran in
+
+    @cached_property
+    def ranges(self) -> DataFrame | None:
+        """(vfrom, vuntil, vdiff_s, <aliases...>, master)"""
+        if self.sheet is None:
+            return None
+        cid = self.spec.id_string
+        return condition_view(self.sheet.runs, cid, self.sheet.aliases[cid])
+
+    @cached_property
+    def summary(self) -> DataFrame | None:
+        """The one-row validity rollup (A3)."""
+        if self.sheet is None:
+            return None
+        return self.sheet.summary.where(
+            F.col("cond_id") == F.lit(self.spec.id_string)
+        ).drop("cond_id")
 
 
 @dataclass
@@ -176,13 +211,10 @@ class CondCollection:
         window (P1) is applied here once; with date-partitioned storage the
         filter prunes partitions before any shuffle.
 
-        The whole sheet runs as two checkpointed relations, whatever the
-        depth of its secondary chains: the packed runs of every primary
-        block (eager), and the combined runs of every condition (lazy —
-        under AQE the call still runs combine_tagged's one cond_id
-        shuffle map stage as a job, and the result stage folds into the
-        first consuming job, normally the sheet-summary collect). Release
-        them with :meth:`release` once the results have been read.
+        The whole sheet is one lazy plan, whatever the depth of its
+        secondary chains: this method runs no Spark job and pins nothing.
+        Each result's ``ranges`` and ``summary`` read the sheet's runs
+        relation, and so does ``reports.summary_rows``, with one collect.
         """
         windowed = obs.where(
             F.col(time_col).between(F.lit(self.time_from), F.lit(self.time_until))
@@ -239,7 +271,6 @@ class CondCollection:
         #     pack_ranges SQL call per block, rescanning obs_main each
         #     time — condition.py:329-354);
         # (b) one multi-block packing pass (W3-W5) keyed by block id.
-        # Only the packed RUNS are cached — tiny — never raw readings.
         combined = None
         for sid, sev in {(sid, sev) for sid, sev, _, _ in spec_index}:
             c = (F.col(key_cols[0]) == F.lit(sid)) & (F.col(key_cols[1]) == F.lit(sev))
@@ -254,15 +285,7 @@ class CondCollection:
             (bid, sid, sev, op, value)
             for (sid, sev, op, value), bid in spec_index.items()
         ]
-        # Materialize AND truncate lineage: the combine reads this relation
-        # through a fan-out over conditions — with lineage intact, Catalyst
-        # re-analyzes the full packing DAG per plan, and an unpopulated
-        # cache would be recomputed concurrently inside fan-out jobs.
-        # localCheckpoint pins the computed partitions and gives downstream
-        # plans a leaf-sized logical node.
-        packed_all = pack_ranges_multi(stepped, specs, key_cols=key_cols).localCheckpoint(
-            eager=True
-        )
+        packed_all = pack_ranges_multi(stepped, specs, key_cols=key_cols)
 
         # A secondary block is its source's master over the source's own
         # primary blocks, on the same timeline (see combine_tagged). So each
@@ -298,28 +321,11 @@ class CondCollection:
         # One relation replaces the reference's per-condition temp tables
         # (condition.py:338); it holds RUNS (small), and every downstream
         # read — summaries, reports — derives from it.
-        multi = combine_tagged(tagged, exprs, refs).localCheckpoint(eager=False)
-        # ONE cond_id-grouped rollup per sheet: every condition's summary
-        # is a cheap filter of it, so driver-side plan construction stays
-        # flat in sheet size (profiled: per-condition aggregates were
-        # ~1.1 s of a 10-condition sheet's ~6.8 s warm wall).
-        # The keys frame restores the one-row-per-condition contract:
-        # a condition whose blocks matched ZERO observations has no
-        # rows in `multi`, and a grouped agg would silently drop it —
-        # the report rows (reports.summary_rows) rely on its summary
-        # row existing, NULL-filled, for no-data conditions exactly as
-        # the ungrouped rollup produced.
-        cid_keys = obs.sparkSession.range(0, 1, 1, 1).select(
-            F.explode(F.array(*[F.lit(c) for c in refs])).alias("cond_id")
+        sheet = SheetResult(
+            combine_tagged(tagged, exprs, refs),
+            {cid: list(crefs) for cid, crefs in refs.items()},
         )
-        summary = validity_summary(multi, group_cols=["cond_id"], keys=cid_keys)
-        aliases = {cid: list(crefs) for cid, crefs in refs.items()}
-        sheet = SheetResult(multi, summary, aliases, (packed_all, multi))
         for cid in refs:
-            results[cid].ranges = condition_view(multi, cid, aliases[cid])
-            results[cid].summary = summary.where(F.col("cond_id") == F.lit(cid)).drop(
-                "cond_id"
-            )
             results[cid].sheet = sheet
         return results
 
@@ -348,16 +354,6 @@ class CondCollection:
         if not parts:
             return None
         return reduce(DataFrame.unionByName, parts)
-
-    @staticmethod
-    def release(results: dict[str, ConditionResult]) -> None:
-        """Unpersist the partitions that ``run`` checkpointed for these
-        results. Every frame of the results reads them, so call this once
-        the last of them has been read: a read after the release fails with
-        ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``."""
-        for sheet in {res.sheet for res in results.values() if res.sheet is not None}:
-            for df in sheet.checkpoints:
-                df._jdf.logicalPlan().rdd().unpersist(False)
 
     def error_tree(self) -> dict:
         """S9: nested error dict (analysis_collection.py:149-187 shape)."""

@@ -39,7 +39,9 @@ def streaming_condition_analysis(
 
     ``on_summary(condition_id, summary_df)`` is invoked per refreshed
     condition each micro-batch (default: no-op, summaries queryable from
-    the returned handle's last results via the store).
+    the returned handle's last results via the store). Each
+    ``summary_df`` is a view that plans from the store: nothing is
+    computed until the callback reads it, and a batch pins no partitions.
     Returns the StreamingQuery handle.
     """
 
