@@ -2,7 +2,7 @@
 # CI gate: the two long verifications that form the regression net, as ONE
 # command (r5 VERDICT next-round #8).
 #
-#   1. full pytest suite (579 tests, ~8 min on 4 cores), then the
+#   1. full pytest suite (581 tests, ~8 min on 4 cores), then the
 #      end-to-end benchmark's self-tests (e2ebench/run.py --selftest for
 #      sheet_report and corpus_mix, ~30 s): the workbook CLI and the
 #      pretraining_mix pipeline each run once, checked against DuckDB, and

@@ -2,8 +2,12 @@
 
 from __future__ import annotations
 
+import random
+
 import numpy as np
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from tsatool_app_spark.functions import (
@@ -19,6 +23,7 @@ from tsatool_app_spark.functions import (
     quality_score,
     doc_fingerprint,
 )
+from tsatool_app_spark.functions.dedup import DRIVER_COMPONENTS_LIMIT
 from tsatool_app_spark.model import load_table
 
 
@@ -427,18 +432,29 @@ def test_ivf_ann_recall(spark, sf_dir):
 
 
 def test_connected_components_cliques_and_chain(spark):
-    from tsatool_app_spark.functions.dedup import connected_components
+    from tsatool_app_spark.functions.dedup import (
+        _connected_components_stats,
+        connected_components,
+    )
 
-    # two cliques {1,2,3}, {10,11} and a 64-node path 100..163 — the path
-    # is the adversarial case pointer jumping exists for (O(log n) rounds)
-    edges = [(1, 2), (2, 3), (1, 3), (10, 11)] + [
-        (100 + i, 101 + i) for i in range(63)
-    ]
+    # two cliques {1,2,3}, {10,11}, a 64-node path 100..163 with ascending
+    # ids, and a 96-node path on shuffled ids 1000..1999 — the adversarial
+    # case for the loop: a node-level step alone moves the minimum one hop
+    # per round there, so only root hooking converges within max_iter
+    shuffled = random.Random(0).sample(range(1000, 2000), 96)
+    edges = (
+        [(1, 2), (2, 3), (1, 3), (10, 11)]
+        + [(100 + i, 101 + i) for i in range(63)]
+        + list(zip(shuffled, shuffled[1:]))
+    )
     e = spark.createDataFrame(edges, "id_a long, id_b long")
-    cc = {r.node: r.component for r in connected_components(e).collect()}
-    assert cc[1] == cc[2] == cc[3] == 1
-    assert cc[10] == cc[11] == 10
-    assert all(cc[100 + i] == 100 for i in range(64))
+    distributed, _ = _connected_components_stats(e, driver_limit=0)
+    for labels in (connected_components(e), distributed):
+        cc = {r.node: r.component for r in labels.collect()}
+        assert cc[1] == cc[2] == cc[3] == 1
+        assert cc[10] == cc[11] == 10
+        assert all(cc[100 + i] == 100 for i in range(64))
+        assert all(cc[x] == min(shuffled) for x in shuffled)
 
 
 def test_connected_components_stats_loser_count(spark):
@@ -452,13 +468,74 @@ def test_connected_components_stats_loser_count(spark):
         (100 + i, 101 + i) for i in range(15)
     ]
     e = spark.createDataFrame(edges, "id_a long, id_b long")
-    labels, n_losers = _connected_components_stats(e)
-    rows = labels.collect()
-    assert n_losers == sum(1 for r in rows if r.node != r.component)
-    assert n_losers == 2 + 1 + 15  # cliques {1,2,3},{10,11} + 16-node path
     empty = spark.createDataFrame([], "id_a long, id_b long")
-    labels0, n0 = _connected_components_stats(empty)
-    assert n0 == 0 and labels0.count() == 0
+    for driver_limit in (DRIVER_COMPONENTS_LIMIT, 0):  # driver, distributed
+        labels, n_losers = _connected_components_stats(e, driver_limit=driver_limit)
+        rows = labels.collect()
+        assert n_losers == sum(1 for r in rows if r.node != r.component)
+        assert n_losers == 2 + 1 + 15  # cliques {1,2,3},{10,11} + 16-node path
+        labels0, n0 = _connected_components_stats(empty, driver_limit=driver_limit)
+        assert n0 == 0 and labels0.count() == 0
+
+
+def _reference_components(edges):
+    """node -> min node of its component, by breadth-first search."""
+    adj = {}
+    for u, v in edges:
+        adj.setdefault(u, set()).add(v)
+        adj.setdefault(v, set()).add(u)
+    label = {}
+    for start in sorted(adj):
+        if start in label:
+            continue
+        seen, todo = {start}, [start]
+        while todo:
+            for w in adj[todo.pop()] - seen:
+                seen.add(w)
+                todo.append(w)
+        for x in seen:
+            label[x] = start  # sorted starts: the first one seen is the min
+    return label
+
+
+@st.composite
+def _pair_graphs(draw):
+    """Disjoint cliques, chains of at least 64 nodes and stars on shuffled
+    ids, plus duplicate and reversed copies of some edges."""
+    n_parts = draw(st.integers(1, 4))
+    ids = draw(st.permutations(range(1, 400)))
+    edges, nxt = [], 0
+    for kind in draw(st.lists(st.sampled_from(["clique", "chain", "star"]),
+                              min_size=n_parts, max_size=n_parts)):
+        size = draw(st.integers(64, 90) if kind == "chain" else st.integers(2, 8))
+        nodes = ids[nxt:nxt + size]
+        nxt += size
+        if kind == "clique":
+            edges += [(a, b) for i, a in enumerate(nodes) for b in nodes[i + 1:]]
+        elif kind == "chain":
+            edges += list(zip(nodes, nodes[1:]))
+        else:
+            edges += [(nodes[0], b) for b in nodes[1:]]
+    extra = draw(st.lists(st.sampled_from(edges), max_size=10))
+    edges += extra + [(b, a) for a, b in draw(st.lists(st.sampled_from(edges), max_size=10))]
+    return draw(st.permutations(edges))
+
+
+@settings(max_examples=2, deadline=None, suppress_health_check=list(HealthCheck))
+@given(edges=_pair_graphs())
+def test_connected_components_property(spark, edges):
+    """Both components paths — the driver union-find and the distributed
+    pointer-jumping loop, forced with bound 0 — label every node with the
+    min id of its component, and count the losers exactly."""
+    from tsatool_app_spark.functions.dedup import _connected_components_stats
+
+    want = _reference_components(edges)
+    e = spark.createDataFrame(edges, "id_a long, id_b long")
+    for driver_limit in (DRIVER_COMPONENTS_LIMIT, 0):
+        labels, n_losers = _connected_components_stats(e, driver_limit=driver_limit)
+        got = {r.node: r.component for r in labels.collect()}
+        assert got == want
+        assert n_losers == sum(1 for x, c in want.items() if x != c)
 
 
 def test_anti_join_ids_n_ids_matches_counted(spark):

@@ -162,6 +162,68 @@ def test_read_metadata_csv_matches_spark(spark, tmp_path):
     assert sensor_name_to_id(rows) == sensor_name_to_id(oracle)
 
 
+def test_read_parquet_footer_schema_equals_spark(spark, sf_dir, tmp_path):
+    """model.read_parquet takes the schema from the first data file's
+    footer: the same schema as Spark's own inference, for every testdata
+    table, a Spark-written part-file directory, a date-partitioned store
+    and a pyarrow-written file, under both NTZ inference settings, and no
+    Spark job."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tsatool_app_spark.model import read_parquet
+
+    parts = str(tmp_path / "parts")
+    spark.range(0, 40, 1, 3).selectExpr(
+        "id",
+        "CAST(id AS INT) AS i",
+        "id * 0.5D AS x",
+        "CAST(id AS STRING) AS s",
+        "timestamp_seconds(id) AS ts",
+        "CAST(timestamp_seconds(id) AS TIMESTAMP_NTZ) AS ts_ntz",
+        "CAST(id AS DECIMAL(10, 2)) AS d",
+        "array(id, id + 1) AS arr",
+        "named_struct('a', id, 'b', CAST(id AS STRING)) AS st",
+    ).write.parquet(parts)
+    dated = str(tmp_path / "dated")
+    spark.range(0, 30).selectExpr(
+        "CAST(id AS INT) AS statid",
+        "CAST(id AS FLOAT) AS seval",
+        "date_add(DATE'2024-03-30', CAST(id % 3 AS INT)) AS obs_date",
+    ).write.partitionBy("obs_date").parquet(dated)
+
+    # a footer without Spark's schema: a tz-less timestamp maps by the
+    # session's NTZ inference setting
+    naive = str(tmp_path / "naive.parquet")
+    pq.write_table(
+        pa.table({"t": pa.array([0, 1], pa.timestamp("us")), "n": [1, 2]}), naive
+    )
+
+    sc = spark.sparkContext
+    paths = sorted(glob.glob(f"{sf_dir}/*.parquet")) + [parts, dated, naive]
+    assert len(paths) > 3
+    ntz_key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    ntz = spark.conf.get(ntz_key)
+    try:
+        for infer_ntz, path in [(ntz, p) for p in paths] + [
+            ("true", parts), ("true", naive)
+        ]:
+            spark.conf.set(ntz_key, infer_ntz)
+            sc.setJobGroup("read-parquet-footer", "read-parquet-footer")
+            try:
+                got = read_parquet(spark, path)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert got.schema == spark.read.parquet(path).schema, (path, infer_ntz)
+    finally:
+        spark.conf.set(ntz_key, ntz)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("read-parquet-footer")) == []
+    assert read_parquet(spark, dated).where("obs_date = DATE'2024-04-01'").count() == 10
+
+
 def test_parse_finnish_timestamp_dst_edges(spark):
     """P6 DST semantics pinned (02_rawdata_schema.sql:46-57 reads Helsinki
     local time): spring-forward GAP times (2018-03-25 03:00-03:59:59 don't

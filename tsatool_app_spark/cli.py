@@ -92,10 +92,11 @@ def main(argv: list[str] | None = None) -> int:
         print("error: --obs-parquet is required unless --dry-validate", file=sys.stderr)
         return 2
 
+    from tsatool_app_spark.model import read_parquet
     from tsatool_app_spark.session import get_spark
 
     spark = get_spark(f"tsatool-{args.name}")
-    obs = spark.read.parquet(args.obs_parquet)
+    obs = read_parquet(spark, args.obs_parquet)
     sensor_map = None
     if args.sensors_csv:
         sensor_map = sensor_name_to_id(read_metadata_csv(args.sensors_csv))

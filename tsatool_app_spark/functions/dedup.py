@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from tsatool_app_spark.functions.text import _sql_name
+
 
 def exact_dedup_groups(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
@@ -97,35 +99,32 @@ def minhash_signatures(
     exploded = narrow.select(
         F.col(id_col), F.explode(shingles(F.col(text_col), shingle_k)).alias("sh")
     ).select(id_col, F.pmod(F.xxhash64("sh"), F.lit(p)).alias("x"))
-    # SQL text: one py4j call per aggregate where the Column builders
-    # make about nine (a, b < p fit INT literals, as F.lit gives them).
-    mins = [
-        F.expr(f"min(pmod({int(a[i])} * x + {int(b[i])}, {p})) AS h{i}")
+    # SQL text: the whole signature is ONE expression, a struct of the
+    # per-permutation mins (a, b < p fit INT literals, as F.lit gives
+    # them), where Column API calls make about nine py4j round trips per
+    # aggregate.  The optimizer folds the struct away.
+    mins = ", ".join(
+        f"'h{i}', min(pmod({int(a[i])} * x + {int(b[i])}, {p}))"
         for i in range(num_hashes)
-    ]
-    return exploded.groupBy(id_col).agg(*mins)
+    )
+    return exploded.groupBy(id_col).agg(
+        F.expr(f"named_struct({mins}) AS _sig")
+    ).select(id_col, "_sig.*")
 
 
 def _band_keys(sig: DataFrame, bands: int, rows_per_band: int, id_col: str) -> DataFrame:
     """(id, band, bucket) rows: each band of the signature hashed to one
     bucket key — the relation both the candidate self-join and the
     oversize-bucket audit are built on."""
-    return sig.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[f"h{b * rows_per_band + r}" for r in range(rows_per_band)]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, "bk.band", "bk.bucket")
+    keys = ", ".join(
+        f"named_struct('band', {b}, 'bucket', xxhash64("
+        + ", ".join(f"h{b * rows_per_band + r}" for r in range(rows_per_band))
+        + "))"
+        for b in range(bands)
+    )
+    # SQL text: one py4j round trip where the Column API calls made ~13
+    # per band
+    return sig.selectExpr(_sql_name(id_col), f"inline(array({keys}))")
 
 
 def minhash_oversize_buckets(
@@ -812,6 +811,24 @@ def simhash_pairs_dedup_first(
     )
 
 
+# Verified-pair graphs of at most this many edges are settled on the
+# driver: one Arrow collect of two ids an edge (10M long pairs = 160 MB)
+# and a numpy union-find whose peak is about 70 bytes an edge more.  On
+# 4 local cores the driver path beat the distributed loop at every size
+# measured: sf10-dedup-shaped graphs (10-cliques plus one 600-clique) of
+# 2.43M edges took 4-5 s against 8.6 s, and of 9.18M edges 23 s against
+# 40 s.  So the bound is the driver's memory, not a crossover; the loop
+# stays the only path that fits web-scale loser sets.
+DRIVER_COMPONENTS_LIMIT = 10_000_000
+
+# Loser-id sets above this row count are NOT broadcast: at web-crawl
+# near-dup rates (30-50 %) the loser set is O(corpus) — forcing a
+# broadcast would collect a multi-GB id list to the driver and replicate
+# it to every executor.  20M longs ≈ 160 MB serialized, comfortably
+# inside executor memory yet far past the point where the hint helps.
+LOSER_BROADCAST_LIMIT = 20_000_000
+
+
 def connected_components(
     edges: DataFrame,
     *,
@@ -826,23 +843,47 @@ def connected_components(
     duplicate CLUSTER of d docs surfaces as up to d(d-1)/2 pairs, and
     "keep one per cluster" needs the transitive closure, not the pairs.
 
-    Algorithm: alternating min-neighbor propagation + pointer jumping
-    (label ← label-of-label), the hashing-to-min-labels scheme of
+    Two paths, chosen by a counted bound (:func:`_connected_components_stats`
+    has the job shape): a graph of at most :data:`DRIVER_COMPONENTS_LIMIT`
+    edges is collected in one action and settled by a union-find on the
+    driver; a larger one runs min-label propagation with root hooking
+    and pointer jumping (label ← label-of-label), in the family of
     Kiveris et al., "Connected Components in MapReduce and Beyond"
-    (SoCC'14) in its simplest convergent form. Pointer jumping halves
-    label-chain depth every round, so convergence is O(log n) rounds even
-    on path graphs — each round is two hash-joins on (node, label) int
-    pairs, no text, no driver-side graph. Labels are ``localCheckpoint``-ed
-    per round to truncate the iterative lineage (same reason as
-    runner.py's level combine).
-
-    Dedup-shaped inputs (near-identical clusters = small cliques) converge
-    in 1-2 rounds; ``max_iter`` is a backstop for adversarial chains.
+    (SoCC'14): O(log n) rounds even on path graphs with shuffled ids,
+    each a few hash joins and aggregates on (node, label) int pairs, no
+    text. Dedup-shaped inputs (near-identical clusters = small cliques)
+    settle in the first round's convergence check; ``max_iter`` is a
+    backstop.
     """
     labels, _ = _connected_components_stats(
         edges, src=src, dst=dst, max_iter=max_iter
     )
     return labels
+
+
+def _min_root_labels(u, v):
+    """``(nodes, roots)`` over the edges ``(u[i], v[i])`` (numpy arrays):
+    every node and its component's minimum node.  A union-find run on
+    all edges at once: each round hooks every root to the least root
+    across its edges, then jumps pointers until every tree is flat.
+    Pointers only go to smaller nodes, so each root is its tree's
+    minimum, and every tree with a crossing edge merges with another,
+    so a component's tree count at least halves per round."""
+    import numpy as np
+
+    nodes, idx = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = idx[: len(u)], idx[len(u):]
+    root = np.arange(len(nodes))
+    while True:
+        ra, rb = root[a], root[b]
+        cross = ra != rb
+        if not cross.any():
+            return nodes, nodes[root]
+        ra, rb = ra[cross], rb[cross]
+        np.minimum.at(root, np.maximum(ra, rb), np.minimum(ra, rb))
+        jumped = root[root]
+        while (jumped != root).any():
+            root, jumped = jumped, jumped[jumped]
 
 
 def _connected_components_stats(
@@ -851,73 +892,121 @@ def _connected_components_stats(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
+    driver_limit: int = DRIVER_COMPONENTS_LIMIT,
 ) -> tuple[DataFrame, int]:
     """:func:`connected_components` plus the loser count — ``(labels,
-    n_losers)`` where ``n_losers = |{node : component != node}|``, read
-    for free from the final round's convergence aggregate.  Callers that
-    anti-join the loser set next (``anti_join_ids``) pass it as
-    ``n_ids`` and skip the counted broadcast gate's own job.
+    n_losers)`` where ``n_losers = |{node : component != node}|``.
+    Callers that anti-join the loser set next (``anti_join_ids``) pass
+    it as ``n_ids`` and skip the counted broadcast gate's own job.
 
-    Job shape (r13, VERDICT #1: the 63-job pretraining_mix census):
-    ONE driver action per round.  Each round's labels are lazily
-    ``localCheckpoint``-ed and the round's single
-    ``agg(sum(l), count_if(l < u))`` action both MATERIALIZES the
-    checkpoint (the aggregate scans every partition) and answers
-    convergence: labels are monotone non-increasing elementwise and the
-    node set is fixed, so the exact decimal label sum strictly decreases
-    iff any label changed — equal sums ⟺ converged.  The min-neighbor
-    step is a union + one groupBy instead of the previous
-    aggregate-then-left-join (one exchange fewer per round).  The
-    previous shape paid two actions per round (eager checkpoint + a
-    join-based limit(1).count() against the prior labels) and a third
-    job later for the loser-set count."""
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    # Materialize the edge list ONCE: its lineage is typically the whole
-    # candidate-generation pipeline (minhash -> banded join -> exact-Jaccard
-    # verify), and without truncation every propagation round AND every
-    # convergence check would re-run that pipeline from the scan (measured
-    # 23 s -> ~6 s on the driver board's dedup_components). Edge sets are
-    # int pairs bounded by near-dup density — orders of magnitude smaller
-    # than the corpus — so RAM-backed localCheckpoint is safe at scale.
-    # Lazy: the labels-sum action below computes (and persists) it in the
-    # same action — one setup job, not two.
-    sym = (
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .localCheckpoint(eager=False)
+    Job shape.  The edge list is lazily ``localCheckpoint``-ed ONCE (its
+    lineage is the whole candidate pipeline: minhash → banded join →
+    exact-Jaccard verify) and ``limit(driver_limit + 1)`` of it is
+    collected as Arrow — the one action of the small-graph path: the
+    edge pipeline's exchanges, then ONE job in which each partition's
+    first ``driver_limit + 1`` rows meet in a single-partition exchange
+    (a row ``collect`` of a limit scans partitions in scaled-up rounds,
+    a job each).  Within the bound
+    (``driver_limit``, default :data:`DRIVER_COMPONENTS_LIMIT`; 0 sends
+    every non-empty graph to the loop) a driver-side union-find over
+    numpy arrays (:func:`_min_root_labels`) labels each node with its
+    component's minimum id, and the labels come back
+    as an Arrow-built local relation: a JVM ``LocalRelation``, so
+    consumers plan it with no Python-worker task (a pickled
+    ``createDataFrame`` is a Python-RDD scan).
+
+    Above the bound the distributed loop runs over the checkpointed
+    edges, whose partitions the bounded collect already computed, with
+    ONE driver action per round (:func:`_distributed_labels` has the
+    round); the bounded collect is then wasted work, about a second per
+    million edges on 4 cores."""
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
+        eager=False
+    )
+    head = e.limit(driver_limit + 1).toArrow()
+    if head.num_rows <= driver_limit:
+        return _driver_labels(e, head)
+    return _distributed_labels(e, max_iter)
+
+
+def _driver_labels(e: DataFrame, head) -> tuple[DataFrame, int]:
+    """The small-graph path of :func:`_connected_components_stats`: the
+    collected Arrow table of ``(u, v)`` edges labelled on the driver."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructField, StructType
+
+    nodes, roots = _min_root_labels(
+        head.column("u").to_numpy(), head.column("v").to_numpy()
+    )
+    id_type = e.schema["u"].dataType
+    schema = StructType(
+        [StructField("node", id_type), StructField("component", id_type)]
+    )
+    table = pa.table({"node": nodes, "component": roots})
+    n_losers = int((nodes != roots).sum())
+    return e.sparkSession.createDataFrame(table, schema=schema), n_losers
+
+
+def _distributed_labels(e: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
+    """The large-graph path of :func:`_connected_components_stats`:
+    min-label propagation with root hooking and pointer jumping.  Each
+    round takes every node's least label over itself and its neighbors
+    (``mn``); unless no label moved, it hooks each label (a tree root)
+    to the least ``mn`` over the nodes it labels, moves every node to
+    its root's hook, and jumps once.  Hooking at the roots is what bounds
+    the rounds by O(log n): a node-level step alone moves the minimum one
+    hop per round, so a 64-node path with shuffled ids took 63 rounds and
+    came back unconverged at ``max_iter``.
+
+    ONE driver action per round: the round's ``(u, l, mn)`` frame is
+    lazily ``localCheckpoint``-ed, and its ``count_if(mn < l)`` aggregate
+    both MATERIALIZES it and answers convergence.  A label is always the
+    id of a node in the same component and never exceeds its own node, so
+    when no node sees a smaller label among its neighbors every edge
+    joins equal labels, each component carries one label, and that label
+    is its minimum id.  The loser count rides out of the same aggregate.
+    Dedup-shaped inputs (small cliques) settle in the first round's
+    check."""
+    # Both directions of every edge from one projection: a union of the
+    # checkpoint with its own swap can fail Spark's union constraint
+    # rewrite (NoSuchElementException on the swapped attribute) when the
+    # checkpointed plan carries isnotnull constraints.
+    sym = e.selectExpr(
+        "inline(array(named_struct('u', u, 'v', v), named_struct('u', v, 'v', u)))"
     )
     # l(u) = min(u, min neighbor) — one shuffle on int keys.
-    labels = (
-        sym.groupBy("u")
-        .agg(F.least(F.min("v"), F.first("u")).alias("l"))
-        .localCheckpoint(eager=False)
-    )
-    # int64 sums could overflow on adversarial ids; decimal(38,0) is exact
-    # for any realistic node count x id magnitude.
-    stats = [
-        F.sum(F.col("l").cast("decimal(38,0)")).alias("s"),
-        F.count_if(F.col("l") < F.col("u")).alias("n"),
-    ]
-    row = labels.agg(*stats).collect()[0]
-    prev_sum, n_losers = row.s, int(row.n or 0)
-    for _ in range(max_iter):
-        if prev_sum is None:  # empty edge set: nothing to propagate
-            break
-        # min over own + neighbors' labels: union + one groupBy (the
-        # left-join formulation needed the same groupBy AND a join)
-        nbrl = sym.join(labels.withColumnRenamed("u", "v"), "v").select(
-            "u", "l"
-        )
+    labels = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("l"))
+    for i in range(max_iter + 1):
+        # mn(u) = min over own + neighbors' labels, next to l(u): one
+        # union (own rows carry l, neighbor rows NULL) + one groupBy
+        nbr = sym.join(
+            labels.select(F.col("u").alias("v"), F.col("l").alias("c")), "v"
+        ).select("u", F.lit(None).cast(labels.schema["l"].dataType).alias("l"), "c")
         stepped = (
-            labels.select("u", "l")
-            .unionByName(nbrl)
+            labels.select("u", "l", F.col("l").alias("c"))
+            .unionByName(nbr)
             .groupBy("u")
-            .agg(F.min("l").alias("l"))
+            .agg(F.max("l").alias("l"), F.min("c").alias("mn"))
+            .localCheckpoint(eager=False)
+        )
+        row = stepped.agg(
+            F.count_if(F.col("mn") < F.col("l")).alias("moved"),
+            F.count_if(F.col("l") < F.col("u")).alias("n"),
+        ).collect()[0]
+        if not row.moved or i == max_iter:
+            break
+        # root hooking: each label takes the least mn over the nodes it
+        # labels, and every node moves there — whole trees merge, so the
+        # labels in a component at least halve per round
+        hook = stepped.groupBy("l").agg(F.min("mn").alias("h"))
+        hooked = stepped.join(hook, "l").select(
+            "u", F.least("mn", "h").alias("l")
         )
         # pointer jump: l(u) <- l(l(u))
-        jumped = (
-            stepped.alias("a")
+        labels = (
+            hooked.alias("a")
             .join(
-                stepped.select(
+                hooked.select(
                     F.col("u").alias("l"), F.col("l").alias("ll")
                 ).alias("b"),
                 "l",
@@ -926,26 +1015,10 @@ def _connected_components_stats(
             .select("u", F.least("l", F.coalesce("ll", "l")).alias("l"))
             .localCheckpoint(eager=False)
         )
-        # ONE action: materializes the round's checkpoint blocks AND reads
-        # convergence + the loser count off them.
-        row = jumped.agg(*stats).collect()[0]
-        labels = jumped
-        n_losers = int(row.n or 0)
-        if row.s == prev_sum:
-            break
-        prev_sum = row.s
     return (
-        labels.select(F.col("u").alias("node"), F.col("l").alias("component")),
-        n_losers,
+        stepped.select(F.col("u").alias("node"), F.col("l").alias("component")),
+        int(row.n or 0),
     )
-
-
-# Loser-id sets above this row count are NOT broadcast: at web-crawl
-# near-dup rates (30-50 %) the loser set is O(corpus) — forcing a
-# broadcast would collect a multi-GB id list to the driver and replicate
-# it to every executor.  20M longs ≈ 160 MB serialized, comfortably
-# inside executor memory yet far past the point where the hint helps.
-LOSER_BROADCAST_LIMIT = 20_000_000
 
 
 def anti_join_ids(

@@ -19,15 +19,36 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _count_occurrences(col: Column, needle: str) -> Column:
-    """Occurrences of ``needle`` via length arithmetic — portable to any SQL
+def _sql_name(name: str) -> str:
+    """A column name as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_str(value: str) -> str:
+    """A Python string as a Spark SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _count_sql(expr: str, needle: str) -> str:
+    """SQL text of the occurrences of ``needle`` in the string SQL
+    expression ``expr``, via length arithmetic — portable to any SQL
     engine, no regex dialect differences."""
     if not needle:
         raise ValueError("needle must be non-empty")
     return (
-        (F.length(col) - F.length(F.replace(col, F.lit(needle), F.lit(""))))
-        / len(needle)
-    ).cast("long")
+        f"CAST((length({expr}) - length(replace({expr}, {_sql_str(needle)}, '')))"
+        f" / {len(needle)} AS BIGINT)"
+    )
+
+
+def _count_occurrences(text_col: str, needle: str) -> Column:
+    """Occurrences of ``needle`` in column ``text_col`` (:func:`_count_sql`).
+
+    This module's Column expressions are built as SQL text: one py4j
+    round trip per expression where Column API calls make one per
+    node (a marker count is five), and the composed corpus pipelines
+    build dozens of them per call."""
+    return F.expr(_count_sql(_sql_name(text_col), needle))
 
 
 def text_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -38,13 +59,13 @@ def text_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     separately by :func:`token_count_bpe_ish`.
     """
     t = F.col(text_col)
-    n_spaces = _count_occurrences(t, " ")
+    n_spaces = _count_occurrences(text_col, " ")
     return docs.select(
         "doc_id",
         F.length(t).alias("len_chars"),
         (n_spaces + 1).alias("n_tokens_ws"),
-        _count_occurrences(t, ".").alias("n_periods"),
-        _count_occurrences(t, ",").alias("n_commas"),
+        _count_occurrences(text_col, ".").alias("n_periods"),
+        _count_occurrences(text_col, ",").alias("n_commas"),
         (F.length(t) - F.length(F.replace(t, F.lit(" "), F.lit("")))).alias("n_space_chars"),
     )
 
@@ -72,28 +93,28 @@ _LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 
-def _lang_scores(t: Column) -> dict[str, Column]:
-    padded = F.concat(F.lit(" "), F.lower(t), F.lit(" "))
+def _lang_scores_sql(t: str) -> dict[str, str]:
+    padded = f"concat(' ', lower({t}), ' ')"
     return {
-        lang: sum((_count_occurrences(padded, m) for m in markers), F.lit(0))
+        lang: "(" + " + ".join(["0"] + [_count_sql(padded, m) for m in markers]) + ")"
         for lang, markers in _LANG_MARKERS.items()
     }
 
 
-def lang_pred_col(t: Column) -> Column:
-    """Predicted-language Column expression (the body of
-    :func:`lang_id_heuristic`, reusable inside wider single-scan
-    pipelines like corpus.clean_corpus).
+def lang_pred_col(text_col: str) -> Column:
+    """Predicted-language Column expression over column ``text_col`` (the
+    body of :func:`lang_id_heuristic`, reusable inside wider single-scan
+    pipelines like corpus.clean_corpus), built as SQL text.
 
-    The argmax is ONE array_max over (score, priority, lang) structs, so
-    each marker-score sum appears exactly once in the expression tree.
+    Each marker-score sum appears exactly once in the expression tree.
     (The r2 shape — greatest(...) plus a when-chain re-comparing each
     score — inlined every sum ~5x after Catalyst's project collapsing,
     and was the main contributor to blowing generated code past the
     JVM's 64 KB method cap in composed pipelines.)  Priority runs
     DESCENDING in marker-dict order so score ties break toward the
     earlier language, matching the original when-chain and the oracle."""
-    scores = _lang_scores(t)
+    t = _sql_name(text_col)
+    scores = _lang_scores_sql(t)
     n = len(scores)
     # The lexicographic (score, priority) argmax is PACKED into one
     # BIGINT per language — score·8 + prio, prio < 8 — and taken with
@@ -108,23 +129,21 @@ def lang_pred_col(t: Column) -> Column:
     # NULL text → NULL scores → greatest skips NULLs → 'und' (the old
     # struct form decayed to 'en' on NULL; no tier carries NULL text and
     # no oracle pins it — 'und' is the sane edge).
-    packed = [
-        score * 8 + F.lit(n - i)
-        for i, (lang, score) in enumerate(scores.items())
-    ]
-    best = F.greatest(*packed, F.lit(n + 1).cast("long"))
+    packed = [f"{score} * 8 + {n - i}" for i, score in enumerate(scores.values())]
+    best = f"greatest({', '.join(packed)}, CAST({n + 1} AS BIGINT))"
     # prio → language lookup (1-indexed): prio i+1 is the (n-1-i)-th
     # marker-dict language; prio n+1 is 'und'
-    langs = list(scores)
-    lookup = F.array(
-        *[F.lit(lang) for lang in reversed(langs)], F.lit("und")
+    lookup = ", ".join(_sql_str(lang) for lang in [*reversed(scores), "und"])
+    # non-ASCII ratio: chars whose codepoint > 127 (CJK detection); the
+    # CJK check runs first (no ASCII stopwords)
+    ascii_re = _sql_str(r"[\x00-\x7F]")
+    nonascii_ratio = (
+        f"length(regexp_replace({t}, {ascii_re}, ''))"
+        f" / greatest(length({t}), 1)"
     )
-    # non-ASCII ratio: chars whose codepoint > 127 (CJK detection)
-    ascii_stripped = F.length(F.regexp_replace(t, r"[\x00-\x7F]", ""))
-    nonascii_ratio = ascii_stripped / F.greatest(F.length(t), F.lit(1))
-    return (
-        F.when(nonascii_ratio > 0.3, F.lit("zh"))  # CJK check first: no ASCII stopwords
-        .otherwise(F.element_at(lookup, F.pmod(best, F.lit(8)).cast("int")))
+    return F.expr(
+        f"CASE WHEN {nonascii_ratio} > 0.3D THEN 'zh'"
+        f" ELSE element_at(array({lookup}), CAST(pmod({best}, 8) AS INT)) END"
     )
 
 
@@ -136,33 +155,39 @@ def lang_id_heuristic(docs: DataFrame, text_col: str = "text") -> DataFrame:
     (CJK text has essentially no ASCII stopwords). Returns (doc_id,
     lang_pred). Accuracy against the testdata ``lang`` ground-truth column is
     asserted in tests."""
-    return docs.select("doc_id", lang_pred_col(F.col(text_col)).alias("lang_pred"))
+    return docs.select("doc_id", lang_pred_col(text_col).alias("lang_pred"))
 
 
-def quality_col(t: Column) -> Column:
-    """Quality-score Column expression (the body of :func:`quality_score`,
-    reusable inside wider single-scan pipelines)."""
-    n_chars = F.length(t)
-    n_tokens = _count_occurrences(t, " ") + 1
-    avg_token_len = n_chars / n_tokens
-    space_ratio = _count_occurrences(t, " ") / F.greatest(n_chars, F.lit(1))
-    has_sentence_end = (_count_occurrences(t, ".") > 0).cast("int")
-
-    length_ok = ((n_chars >= 50) & (n_chars <= 20000)).cast("int")
-    token_len_ok = ((avg_token_len >= 2.0) & (avg_token_len <= 12.0)).cast("int")
-    space_ok = ((space_ratio >= 0.05) & (space_ratio <= 0.35)).cast("int")
-
-    score = (
-        length_ok * 0.4 + has_sentence_end * 0.2 + token_len_ok * 0.2 + space_ok * 0.2
+def quality_col(text_col: str) -> Column:
+    """Quality-score Column expression over column ``text_col`` (the body
+    of :func:`quality_score`, reusable inside wider single-scan
+    pipelines), built as SQL text."""
+    t = _sql_name(text_col)
+    n_chars = f"length({t})"
+    n_spaces = _count_sql(t, " ")
+    avg_token_len = f"({n_chars} / ({n_spaces} + 1))"
+    space_ratio = f"({n_spaces} / greatest({n_chars}, 1))"
+    length_ok = f"{n_chars} >= 50 AND {n_chars} <= 20000"
+    has_sentence_end = f"{_count_sql(t, '.')} > 0"
+    token_len_ok = f"{avg_token_len} >= 2.0D AND {avg_token_len} <= 12.0D"
+    space_ok = f"{space_ratio} >= 0.05D AND {space_ratio} <= 0.35D"
+    score = " + ".join(
+        f"CAST(({test}) AS INT) * {weight}"
+        for test, weight in (
+            (length_ok, "0.4D"),
+            (has_sentence_end, "0.2D"),
+            (token_len_ok, "0.2D"),
+            (space_ok, "0.2D"),
+        )
     )
-    return score.cast("double")
+    return F.expr(f"CAST({score} AS DOUBLE)")
 
 
 def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Heuristic document quality in [0, 1] from surface statistics:
     length band, punctuation presence, word-length sanity, space ratio.
     All Column arithmetic; deterministic."""
-    return docs.select("doc_id", quality_col(F.col(text_col)).alias("quality"))
+    return docs.select("doc_id", quality_col(text_col).alias("quality"))
 
 
 def winnowing_fingerprints(

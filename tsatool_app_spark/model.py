@@ -18,6 +18,8 @@ key — harmless to the operators), value→seval.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -102,6 +104,67 @@ TESTDATA_TABLES = (
 )
 
 
+def _first_data_file(path: str) -> str | None:
+    """The file whose footer Spark's schema inference reads for the local
+    ``path``: the least full path among the files a parquet read scans.
+    Hidden names (``_SUCCESS``, ``.crc``, ``_temporary``) are skipped, as
+    Spark skips them."""
+    if os.path.isfile(path):
+        return path
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        files += [
+            os.path.join(root, n) for n in names if not n.startswith(("_", "."))
+        ]
+    return min(files, default=None)
+
+
+# The footer key under which Spark writes a file's schema as JSON; Spark's
+# inference prefers it to the parquet types.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job: the
+    first data file's footer is read on the driver (pyarrow) and passed
+    as the schema, so only the frame's own actions run Spark jobs.
+    Spark's inference reads one footer too (``mergeSchema`` is off) and
+    maps it the same way: the schema Spark wrote into the footer when
+    there is one, else the parquet types, timestamps without a time zone
+    as TIMESTAMP_NTZ only under ``spark.sql.parquet.inferTimestampNTZ``.
+    Partition columns (``key=value`` directories) are still inferred from
+    the paths.  Paths pyarrow cannot read locally, and footers whose
+    mapping the session decides (nanosecond timestamps, which is also how
+    pyarrow reads INT96 — see :func:`load_table`) or that Spark's type
+    mapping lacks, fall back to Spark's own inference."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    first = _first_data_file(path) if os.path.exists(path) else None
+    if first is None:
+        return spark.read.parquet(path)
+    try:
+        with pq.ParquetFile(first) as f:
+            written = (f.metadata.metadata or {}).get(_SPARK_SCHEMA_KEY)
+            arrow = f.schema_arrow
+        if written is not None:
+            schema = StructType.fromJson(json.loads(written))
+        elif any(
+            pa.types.is_timestamp(c.type) and c.type.unit == "ns" for c in arrow
+        ):
+            return spark.read.parquet(path)
+        else:
+            ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled")
+            schema = from_arrow_schema(arrow, prefer_timestamp_ntz=ntz == "true")
+    except (pa.ArrowException, TypeError, ValueError, KeyError, OSError):
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver-testdata parquet table.
 
@@ -123,7 +186,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df

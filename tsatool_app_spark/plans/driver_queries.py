@@ -5983,12 +5983,17 @@ def q_pretraining_mix(spark, sf_dir):
     from tsatool_app_spark.functions.corpus import pretraining_mix
 
     corpus, bench = _pretrain_corpus(spark, sf_dir)
-    return pretraining_mix(
-        corpus,
-        bench,
-        {"src0": 2_000, "src10": 50_000},
-        n_shards=4,
-    ).orderBy("doc_id")
+    return _in_doc_id_order(
+        pretraining_mix(corpus, bench, {"src0": 2_000, "src10": 50_000}, n_shards=4)
+    )
+
+
+def _in_doc_id_order(df):
+    """``df`` in ``doc_id`` order, computed once.  ``orderBy``'s range
+    sort samples its input in one job and shuffles it in the next, which
+    runs the pipeline's Python packing stage twice; the rows all go to
+    the collecting driver anyway, so one partition sorts them."""
+    return df.repartition(1).sortWithinPartitions("doc_id")
 
 
 # p5's English wrapper: long enough for the quality length band, carries
@@ -6013,26 +6018,25 @@ def _pretrain_corpus(spark, sf_dir):
     and a redundant scan at scale (r13 census: the fixture subplans were
     ~8 of pretraining_mix's 63 jobs).  Planted row VALUES are identical
     by construction — the same expressions over the same seed texts."""
+    from tsatool_app_spark.functions.corpus import _tokens_sql
+    from tsatool_app_spark.functions.text import _sql_str
+
+    # The plan pieces below are SQL text: one py4j round trip each, where
+    # the Column API calls made one per expression node (~280 per call).
     docs = load_table(spark, sf_dir, "documents")
-    cols = ["doc_id", "text", "source", "n_chars"]
-    base = docs.where(F.col("doc_id") % 10 == 0).select(*cols)
-    bench = docs.where(F.col("doc_id") % 97 == 0)
+    base = docs.where("doc_id % 10 = 0").select(
+        "doc_id", "text", "source", "n_chars"
+    )
+    bench = docs.where("doc_id % 97 = 0")
     # BOTH seed texts from ONE map-side-combined pass: min_by(text,
-    # when(cond, doc_id)) is exactly orderBy(doc_id).limit(1) per
-    # condition (doc_id unique; NULL ordering keys are ignored), and the
-    # two r12 TakeOrdered collects each re-scanned documents — 4.0 s of
-    # the sf10 wall per invocation, measured.
-    seeds = docs.agg(
-        F.min_by(
-            "text",
-            F.when(
-                (F.col("doc_id") % 10 == 0) & (F.col("doc_id") % 97 != 0),
-                F.col("doc_id"),
-            ),
-        ).alias("seed_text"),
-        F.min_by(
-            "text", F.when(F.col("doc_id") % 97 == 0, F.col("doc_id"))
-        ).alias("blow_text"),
+    # CASE WHEN cond THEN doc_id END) is exactly orderBy(doc_id).limit(1)
+    # per condition (doc_id unique; NULL ordering keys are ignored), and
+    # the two r12 TakeOrdered collects each re-scanned documents — 4.0 s
+    # of the sf10 wall per invocation, measured.
+    seeds = docs.selectExpr(
+        "min_by(text, CASE WHEN doc_id % 10 = 0 AND doc_id % 97 != 0"
+        " THEN doc_id END) AS seed_text",
+        "min_by(text, CASE WHEN doc_id % 97 = 0 THEN doc_id END) AS blow_text",
     ).collect()[0]
 
     def one_row_text(text):
@@ -6053,30 +6057,24 @@ def _pretrain_corpus(spark, sf_dir):
 
     seed = one_row_text(seeds.seed_text)
     blow = one_row_text(seeds.blow_text)
-    toks = F.filter(F.split(F.col("text"), " "), lambda x: x != F.lit(""))
+    toks = _tokens_sql("text")
 
-    def planted(src, doc_id, text_expr):
-        return src.select(text_expr.alias("text")).select(
-            F.lit(doc_id).cast("long").alias("doc_id"),
+    def planted(src, doc_id, text_sql):
+        return src.selectExpr(f"{text_sql} AS text").selectExpr(
+            f"CAST({doc_id} AS BIGINT) AS doc_id",
             "text",
-            F.lit("src0").alias("source"),
-            F.length("text").cast("long").alias("n_chars"),
+            "'src0' AS source",
+            "CAST(length(text) AS BIGINT) AS n_chars",
         )
 
-    p1 = planted(seed, 9_000_010, F.col("text"))
-    p2 = planted(seed, 9_000_020, F.concat(F.col("text"), F.lit("!")))
+    p1 = planted(seed, 9_000_010, "text")
+    p2 = planted(seed, 9_000_020, "concat(text, '!')")
     p3 = planted(
         blow,
         9_000_030,
-        F.concat(
-            F.lit("N3 "), F.array_join(F.slice(toks, 3, 24), " "), F.lit(" tail3")
-        ),
+        f"concat('N3 ', array_join(slice({toks}, 3, 24), ' '), ' tail3')",
     )
-    p4 = planted(
-        blow,
-        9_000_040,
-        F.concat(F.lit("Q4 "), F.substring("text", 21, 160), F.lit(" tail4")),
-    )
+    p4 = planted(blow, 9_000_040, "concat('Q4 ', substring(text, 21, 160), ' tail4')")
     # p5 (9000094): SPAN-ONLY contamination — the benchmark doc's FIRST
     # md5-selected 40-char window embedded with NO flanking spaces, so
     # the span detector fires by construction (selection is a pure
@@ -6090,26 +6088,16 @@ def _pretrain_corpus(spark, sf_dir):
     # sequence(1, 0) DESCENDS to [1, 0], so a sub-40-char seed would
     # otherwise yield bogus truncated windows where the oracle's
     # range(1, 1) is empty
-    w40 = F.expr(
+    w40 = (
         "filter(transform(sequence(1, greatest(length(text) - 40 + 1, 1)),"
         " p -> named_struct('pos', p, 'w', substring(text, p, 40))),"
         " x -> x.pos <= length(text) - 40 + 1"
         "      and substring(md5(x.w), 32, 1) < '2')"
     )
-    p5 = (
-        blow.select(F.element_at(w40, 1)["w"].alias("w"))
-        .where(F.col("w").isNotNull())
-        .select(
-            F.concat(
-                F.lit(_P5_PREFIX), F.col("w"), F.lit(_P5_SUFFIX)
-            ).alias("text")
-        )
-        .select(
-            F.lit(9_000_094).cast("long").alias("doc_id"),
-            "text",
-            F.lit("src0").alias("source"),
-            F.length("text").cast("long").alias("n_chars"),
-        )
+    p5 = planted(
+        blow.selectExpr(f"element_at({w40}, 1).w AS w").where("w IS NOT NULL"),
+        9_000_094,
+        f"concat({_sql_str(_P5_PREFIX)}, w, {_sql_str(_P5_SUFFIX)})",
     )
     corpus = (
         base.unionByName(p1)
@@ -6290,13 +6278,12 @@ def q_pretraining_mix_excise(spark, sf_dir):
     from tsatool_app_spark.functions.corpus import pretraining_mix
 
     corpus, bench = _pretrain_corpus(spark, sf_dir)
-    return pretraining_mix(
-        corpus,
-        bench,
-        {"src0": 2_000, "src10": 50_000},
-        n_shards=4,
-        decon="excise",
-    ).orderBy("doc_id")
+    return _in_doc_id_order(
+        pretraining_mix(
+            corpus, bench, {"src0": 2_000, "src10": 50_000}, n_shards=4,
+            decon="excise",
+        )
+    )
 
 
 ORACLES["pretraining_mix_excise"] = (
