@@ -2,11 +2,13 @@
 # CI gate: the two long verifications that form the regression net, as ONE
 # command (r5 VERDICT next-round #8).
 #
-#   1. full pytest suite (581 tests, ~8 min on 4 cores), then the
+#   1. full pytest suite (587 tests, ~8 min on 4 cores), then the
 #      end-to-end benchmark's self-tests (e2ebench/run.py --selftest for
-#      sheet_report and corpus_mix, ~30 s): the workbook CLI and the
-#      pretraining_mix pipeline each run once, checked against DuckDB, and
-#      an altered output must be caught
+#      sheet_report and corpus_mix, ~2 min): the workbook CLI and the
+#      pretraining_mix pipeline each run, checked against DuckDB, and an
+#      altered output must be caught.  Each workload runs twice in an
+#      empty class-data cache (session.py): the first run dumps the driver
+#      JVM's archive, the second maps it.
 #   2. scripts/selfcheck.py — every registry query's Spark plan vs its
 #      DuckDB oracle at sf0.01, value-compared (~11 min); output is diffed
 #      against the expected-green manifest scripts/ci_expected.txt so a
@@ -52,7 +54,8 @@ else
 fi
 
 ACTUAL=$(mktemp)
-trap 'rm -f "$ACTUAL"' EXIT
+CACHES=$(mktemp -d)
+trap 'rm -rf "$ACTUAL" "$CACHES"' EXIT
 
 if [[ "$REGEN" == 1 ]]; then
   python scripts/selfcheck.py | grep -E '^(ok|FAIL|rows-only)' | sort > "$EXPECTED"
@@ -64,8 +67,15 @@ if [[ "$SF1" == 0 ]]; then
   echo "== pytest =="
   python -m pytest tests/ -q
   for workload in sheet_report corpus_mix; do
-    echo "== e2ebench selftest: $workload =="
-    python3 e2ebench/run.py --workload "$workload" --selftest | tail -n 1
+    CACHE="$CACHES/$workload"
+    for run in dump archive; do
+      echo "== e2ebench selftest ($run): $workload =="
+      XDG_CACHE_HOME="$CACHE" python3 e2ebench/run.py --workload "$workload" --selftest | tail -n 1
+      if ! compgen -G "$CACHE/tsatool_app_spark/*.jsa" > /dev/null; then
+        echo "CI: no class-data archive after the $workload $run run" >&2
+        exit 1
+      fi
+    done
   done
 fi
 

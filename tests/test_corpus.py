@@ -508,6 +508,61 @@ def test_pretraining_mix_seams(spark, monkeypatch):
     assert all(r.rate_q < 10_000 for r in b_rows)
 
 
+def test_pretraining_mix_arrow_runs_each_pandas_stage_once(spark, monkeypatch, tmp_path):
+    """One collect of ``pretraining_mix(impl="arrow")`` over the registry's
+    sf0.01 corpus runs each pandas stage in exactly one Spark stage: the
+    benchmark's and the training corpus's decon scans (``mapInPandas``)
+    and the packing (``applyInPandas``).  Neither the near-dup survivors
+    nor the decon frame is checkpointed, so a plan that evaluated either
+    twice would show here as a second stage of its scan."""
+    import os
+
+    from pyspark import TaskContext
+    from pyspark.sql.group import GroupedData
+
+    from tsatool_app_spark.functions.corpus import pretraining_mix
+    from tsatool_app_spark.plans.driver_queries import _pretrain_corpus
+
+    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    if not os.path.isdir(sf_dir):
+        pytest.skip(f"{sf_dir} not present")
+    log = str(tmp_path / "stages.log")
+    made = []
+
+    def counted(kind, fn):
+        label = f"{kind}{len(made)}"
+        made.append(label)
+
+        def run(arg):  # one argument: applyInPandas checks the arity
+            tc = TaskContext.get()
+            with open(log, "a") as f:
+                f.write(f"{label} {tc.stageId()}\n")
+            return fn(arg)
+
+        return run
+
+    frame_cls = type(spark.range(0))
+    map_in, apply_in = frame_cls.mapInPandas, GroupedData.applyInPandas
+    monkeypatch.setattr(frame_cls, "mapInPandas", lambda self, fn, schema, **kw: map_in(
+        self, counted("map", fn), schema, **kw))
+    monkeypatch.setattr(GroupedData, "applyInPandas", lambda self, fn, schema: apply_in(
+        self, counted("apply", fn), schema))
+    corpus, bench = _pretrain_corpus(spark, sf_dir)
+    rows = pretraining_mix(
+        corpus, bench, {"src0": 2_000, "src10": 50_000}, n_shards=4, impl="arrow"
+    ).collect()
+    monkeypatch.undo()
+    assert rows
+    # built in this order: the benchmark scan, the training scan, the packing
+    assert made == ["map0", "map1", "apply2"]
+    stages: dict[str, set[str]] = {}
+    with open(log) as f:
+        for line in f:
+            label, stage = line.split()
+            stages.setdefault(label, set()).add(stage)
+    assert {k: len(v) for k, v in stages.items()} == {"map0": 1, "map1": 1, "apply2": 1}, stages
+
+
 def test_pretraining_mix_excise(spark):
     """decon="excise" (r9): span-contaminated docs SURVIVE with the
     detected windows spliced out and the mixture/packing token counts

@@ -18,13 +18,45 @@ runs on local[N] for tests and on a large cluster:
 - DataFrame debugging off: recording the Python call site of every Column
   and DataFrame call costs py4j round trips per call; SQL errors lose that
   call site from their DataFrame context.
+- Class-data archive for the local driver JVM (JDK application class-data
+  sharing): the JVM maps the classes an earlier run loaded instead of
+  loading and verifying them again, which halves the set-up of a one-shot
+  CLI run (4 cores: 8.7 -> 4.5 s).  The archive lives in ``$XDG_CACHE_HOME/tsatool_app_spark/``
+  (default ``~/.cache``), named by a hash of the JDK build
+  (``$JAVA_HOME/release``) and the Spark jar set (path, names, sizes and
+  mtimes), so a JDK or Spark upgrade trains a new one and deletes the old.
+  The first run of a key dumps the archive when its JVM exits (about 14 s
+  more, once, for 170 MB); later runs map it.  JDK 17 refuses to dump while a
+  non-empty directory is on the class path, and Spark puts its conf
+  directory there, so when that directory holds nothing but ``*.template``
+  files the JVM gets an empty one from the cache instead (nothing is read
+  from templates).  A conf directory with a real file, or a non-local
+  master, gets no archive.  A dump is published only by a rename after its
+  JVM exited cleanly, since a truncated archive crashes every JVM that
+  maps it; a dump that did not finish is not retried (its ``.attempt``
+  marker stays).  A mismatched or damaged archive is ignored by the JVM,
+  which logs why to ``cds.log`` there instead of stdout.  Deleting the
+  archive, or the whole directory, is safe: the next run dumps again.
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import hashlib
 import os
+import re
+import shutil
+import subprocess
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+#: seconds an exiting process waits for its driver JVM to write the archive
+#: (a dump took 13-14 s on 4 cores); a JVM still busy then is killed and its
+#: archive dropped
+DUMP_WAIT_S = 300
 
 
 def _default_driver_mem() -> str:
@@ -39,6 +71,111 @@ def _default_driver_mem() -> str:
     except OSError:
         pass
     return "8g"
+
+
+def _archive_key(spark_home: str) -> str:
+    """Hash of the JDK build and the Spark jar set; raises OSError when
+    either cannot be read."""
+    java_home = os.environ.get("JAVA_HOME")
+    if not java_home:
+        java = shutil.which("java")
+        if java is None:
+            raise OSError("no java on PATH")
+        java_home = os.path.dirname(os.path.dirname(os.path.realpath(java)))
+    h = hashlib.sha256()
+    with open(os.path.join(java_home, "release"), "rb") as f:
+        h.update(f.read())
+    jars = os.path.realpath(os.path.join(spark_home, "jars"))
+    h.update(jars.encode())
+    for e in sorted(os.scandir(jars), key=lambda e: e.name):
+        st = e.stat()
+        h.update(f"\0{e.name}\0{st.st_size}\0{st.st_mtime_ns}".encode())
+    return h.hexdigest()[:20]
+
+
+def _pid_alive(pid: str) -> bool:
+    try:
+        os.kill(int(pid), 0)
+    except PermissionError:
+        return True
+    except (ValueError, OverflowError, ProcessLookupError):
+        return False
+    return True
+
+
+def _prune(cache: str, key: str, new_key: bool) -> None:
+    """Remove the ``.part`` files whose dumping process is gone and, when
+    ``key`` is new, every other key's archive and marker."""
+    for name in os.listdir(cache):
+        stem, ext = os.path.splitext(name)
+        if (ext == ".part" and not _pid_alive(os.path.splitext(stem)[1][1:])) or (
+            new_key and ext in (".jsa", ".attempt") and stem != key
+        ):
+            with contextlib.suppress(OSError):
+                os.remove(os.path.join(cache, name))
+
+
+def _driver_archive(master: str) -> tuple[str, str, tuple[str, str, str] | None] | None:
+    """The class-data archive for a driver JVM about to start: its JVM
+    options, the conf directory to start it with, and, when this run dumps
+    the archive, its (``.part``, archive, marker) paths.  None when the
+    driver is not a local JVM started here, or the archive cannot be used."""
+    if not master.startswith("local") or SparkContext._gateway is not None:
+        return None
+    if "PYSPARK_GATEWAY_PORT" in os.environ:  # the JVM is already running
+        return None
+    try:
+        spark_home = _find_spark_home()
+        conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+        if os.path.isdir(conf) and any(not n.endswith(".template") for n in os.listdir(conf)):
+            return None
+        cache_root = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+        cache = os.path.join(cache_root, "tsatool_app_spark")
+        if re.search(r"[\s:,=\"']", cache):  # would not survive the option syntax
+            return None
+        key = _archive_key(spark_home)
+        empty_conf = os.path.join(cache, "conf")
+        os.makedirs(empty_conf, exist_ok=True)
+        jsa, marker = os.path.join(cache, key + ".jsa"), os.path.join(cache, key + ".attempt")
+        if os.path.exists(jsa):
+            _prune(cache, key, new_key=False)
+            opt, dump = f"-XX:SharedArchiveFile={jsa}", None
+        else:
+            # the marker is taken atomically: one dump per key, ever, unless
+            # it is published (a failed one stays failed, a concurrent run
+            # goes without)
+            os.close(os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+            _prune(cache, key, new_key=True)
+            part = os.path.join(cache, f"{key}.{os.getpid()}.part")
+            opt, dump = f"-XX:ArchiveClassesAtExit={part}", (part, jsa, marker)
+    except OSError:  # includes a marker that is already there
+        return None
+    log = os.path.join(cache, "cds.log")
+    return f"{opt} -Xlog:cds*=off -Xlog:cds*=warning:file={log}::filecount=0", empty_conf, dump
+
+
+def _publish_at_exit(proc: subprocess.Popen, part: str, jsa: str, marker: str) -> None:
+    """Wait for the dumping driver JVM to exit, and publish its archive only
+    if it exited cleanly."""
+    try:
+        if proc.poll() is None:
+            sc = SparkContext._active_spark_context
+            if sc is not None:  # its accumulator server would see the JVM go
+                sc.stop()
+            proc.stdin.close()  # the gateway JVM exits when its stdin closes
+            try:
+                proc.wait(timeout=DUMP_WAIT_S)
+            except subprocess.TimeoutExpired:
+                proc.kill()
+                proc.wait()
+        if proc.returncode == 0:
+            os.replace(part, jsa)
+            os.remove(marker)
+    except OSError:
+        pass
+    finally:
+        with contextlib.suppress(OSError):
+            os.remove(part)
 
 
 def get_spark(
@@ -151,6 +288,25 @@ def get_spark(
         # context (nothing here reads that context).
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    archive = _driver_archive(master)
+    if archive is not None:
+        key = "spark.driver.extraJavaOptions"
+        conf[key] = f"{conf[key]} {archive[0]}" if conf.get(key) else archive[0]
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    if archive is None:
+        return builder.getOrCreate()
+    _, conf_dir, dump = archive
+    saved = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = conf_dir  # read by the launched JVM only
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if saved is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
+    if dump is not None:
+        atexit.register(_publish_at_exit, SparkContext._gateway.proc, *dump)
+    return spark
