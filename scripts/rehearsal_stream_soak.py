@@ -1,10 +1,9 @@
 #!/usr/bin/env python
-"""Long-run streaming soak (r10 VERDICT next-round #5): 1,000+ batches
-through BOTH incremental indexes (minhash dedup + span), measuring the
-maintenance quantities the r10 200-batch pytest bounds — at a scale
-where the pre-r10 O(n²) behaviors (one ledger line per batch forever;
-one live segment per batch forever, each manifest listing all of them)
-would be unmissable:
+"""Long-run streaming soak: 1,000+ batches through the incremental minhash
+dedup index, measuring the maintenance quantities the r10 200-batch pytest
+bounds — at a scale where the pre-r10 O(n²) behaviors (one ledger line
+per batch forever; one live segment per batch forever, each manifest
+listing all of them) would be unmissable:
 
 - ledger file size (lines): must end at ONE high-water line;
 - live segment count: bounded by compact_every at every sample;
@@ -16,14 +15,12 @@ would be unmissable:
 - per-fold wall trajectory (first/mid/last 100 means — compaction
   rewrite cost is amortized state/compact_every per fold, tiny at this
   state size, so the mean must stay flat within noise);
-- exactness: final dedup index = docs × bands rows; final span index
-  equals a fresh batch-mode span_doc_fingerprints over the full corpus;
-  replay of an early batch id is still a no-op after ~15 compactions.
+- exactness: final dedup index = docs × bands rows; replay of an early
+  batch id is still a no-op after ~15 compactions.
 
-Usage: PYTHONPATH=/root/repo python scripts/rehearsal_stream_soak.py [N] [kinds]
-(N batches per index, default 1000; kinds = dedup,span | span | dedup.
-REHEARSAL_DOCS_PER_BATCH overrides the 5-docs/batch default — r11 VERDICT
-ask #6 runs the span leg at 1000 docs/batch, the ingest-shaped regime,
+Usage: PYTHONPATH=. python scripts/rehearsal_stream_soak.py [N]
+(N batches, default 1000.  REHEARSAL_DOCS_PER_BATCH overrides the
+5-docs/batch default, e.g. 1000 docs/batch for the ingest-shaped regime,
 to pin fold wall growth and compaction cost against real state sizes.)
 """
 
@@ -35,12 +32,13 @@ import shutil
 import sys
 import time
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DOCS_PER_BATCH = int(os.environ.get("REHEARSAL_DOCS_PER_BATCH", "5"))
 WORDS = 40
 COMPACT_EVERY = 64
 
 
-def _batch_docs(spark, kind: str, b: int):
+def _batch_docs(spark, b: int):
     from pyspark.sql import functions as F
 
     start = b * DOCS_PER_BATCH
@@ -51,7 +49,7 @@ def _batch_docs(spark, kind: str, b: int):
                 F.sequence(F.lit(0), F.lit(WORDS - 1)),
                 lambda j: F.md5(
                     F.concat_ws(
-                        "|", F.lit(kind), F.col("id").cast("string"),
+                        "|", F.lit("dedup"), F.col("id").cast("string"),
                         j.cast("string"),
                     )
                 ).substr(1, 8),
@@ -78,16 +76,13 @@ def _store_stats(root: str) -> dict:
     }
 
 
-def _soak(spark, kind: str, n_batches: int, root: str) -> dict:
+def _soak(spark, n_batches: int, root: str) -> dict:
     from tsatool_app_spark.streaming.dedup_index import (
         incremental_probe_and_update,
     )
     from tsatool_app_spark.streaming.snapshot_store import (
         is_batch_folded,
         read_snapshot,
-    )
-    from tsatool_app_spark.streaming.span_index import (
-        incremental_span_probe_and_update,
     )
 
     shutil.rmtree(root, ignore_errors=True)
@@ -96,16 +91,11 @@ def _soak(spark, kind: str, n_batches: int, root: str) -> dict:
     cum_manifest = 0
     max_segs = 0
     for b in range(n_batches):
-        docs = _batch_docs(spark, kind, b)
+        docs = _batch_docs(spark, b)
         t = time.time()
-        if kind == "dedup":
-            incremental_probe_and_update(
-                spark, root, docs, batch_id=b, compact_every=COMPACT_EVERY
-            )
-        else:
-            incremental_span_probe_and_update(
-                spark, root, docs, batch_id=b, compact_every=COMPACT_EVERY
-            )
+        incremental_probe_and_update(
+            spark, root, docs, batch_id=b, compact_every=COMPACT_EVERY
+        )
         walls.append(time.time() - t)
         st = _store_stats(root)
         cum_manifest += st["manifest_bytes"]
@@ -149,45 +139,14 @@ def _soak(spark, kind: str, n_batches: int, root: str) -> dict:
     # exactness + replay protection after many compactions
     snap = read_snapshot(spark, root)
     n_docs = n_batches * DOCS_PER_BATCH
-    if kind == "dedup":
-        assert snap.count() == n_docs * 8, snap.count()  # 8 bands/doc
-    else:
-        from pyspark.sql import functions as F
-
-        from tsatool_app_spark.functions.spans import span_doc_fingerprints
-
-        # regenerate the full corpus in one frame (same generator)
-
-        corpus = spark.range(n_docs).select(
-            F.col("id").alias("doc_id"),
-            F.array_join(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(WORDS - 1)),
-                    lambda j: F.md5(
-                        F.concat_ws(
-                            "|", F.lit(kind), F.col("id").cast("string"),
-                            j.cast("string"),
-                        )
-                    ).substr(1, 8),
-                ),
-                " ",
-            ).alias("text"),
-        )
-        expect = span_doc_fingerprints(corpus).count()
-        assert snap.count() == expect, (snap.count(), expect)
+    assert snap.count() == n_docs * 8, snap.count()  # 8 bands/doc
     v_before = read_snapshot(spark, root).count()
     early = 3
     assert is_batch_folded(root, early)
-    if kind == "dedup":
-        incremental_probe_and_update(
-            spark, root, _batch_docs(spark, kind, early), batch_id=early,
-            compact_every=COMPACT_EVERY,
-        )
-    else:
-        incremental_span_probe_and_update(
-            spark, root, _batch_docs(spark, kind, early), batch_id=early,
-            compact_every=COMPACT_EVERY,
-        )
+    incremental_probe_and_update(
+        spark, root, _batch_docs(spark, early), batch_id=early,
+        compact_every=COMPACT_EVERY,
+    )
     assert read_snapshot(spark, root).count() == v_before  # replay no-op
     return rep
 
@@ -196,25 +155,15 @@ def main() -> None:
     from tsatool_app_spark.session import get_spark
 
     n_batches = int(sys.argv[1]) if len(sys.argv) > 1 else 1000
-    kinds = tuple(sys.argv[2].split(",")) if len(sys.argv) > 2 else ("dedup", "span")
     spark = get_spark("rehearsal-stream-soak")
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.time()
-    report = {}
-    for kind in kinds:
-        t = time.time()
-        report[kind] = _soak(
-            spark, kind, n_batches, f"/root/repo/.scratch/soak_{kind}"
-        )
-        report[kind]["total_wall_s"] = round(time.time() - t, 1)
-        print(kind, "done:", json.dumps(report[kind])[:400])
+    report = _soak(spark, n_batches, os.path.join(ROOT, ".scratch", "soak_dedup"))
     report["total_wall_s"] = round(time.time() - t0, 1)
     out_name = f"rehearsal_stream_soak_d{DOCS_PER_BATCH}.json" if DOCS_PER_BATCH != 5 else "rehearsal_stream_soak.json"
-    with open(f"/root/repo/.scratch/{out_name}", "w") as f:
+    with open(os.path.join(ROOT, ".scratch", out_name), "w") as f:
         json.dump(report, f, indent=1)
-    print(json.dumps({k: {kk: vv for kk, vv in v.items() if kk != "samples"}
-                      if isinstance(v, dict) else v
-                      for k, v in report.items()}))
+    print(json.dumps({k: v for k, v in report.items() if k != "samples"}))
     spark.stop()
     print("ALL ASSERTS GREEN")
 

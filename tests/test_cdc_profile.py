@@ -276,22 +276,6 @@ def test_zorder_key_matches_python_morton(spark):
         assert r.z == morton(r.x, r.y), (r.x, r.y)
 
 
-def test_cluster_by_zorder_layout(spark):
-    from tsatool_app_spark.operators.layout import cluster_by_zorder
-
-    df = spark.range(1000).select(
-        (F.col("id") % 37).alias("x"), (F.col("id") % 53).alias("y"),
-        F.col("id").alias("payload"),
-    )
-    clustered = cluster_by_zorder(df, "x", "y", num_partitions=4)
-    # layout changes bytes, not rows
-    assert clustered.count() == 1000
-    assert "_z" not in clustered.columns
-    plan = clustered._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning" in plan.lower()  # disjoint curve segments
-    assert "Sort" in plan                        # ordered within partitions
-
-
 def test_funnel_strict_order(spark):
     from tsatool_app_spark.operators.funnel import funnel_counts
 
@@ -355,43 +339,12 @@ def test_salted_join_equals_plain_join(spark):
     assert salted_l == plain_l
 
 
-def test_balanced_shards_roundtrip(spark, tmp_path):
-    from tsatool_app_spark.sources.shard_writer import (
-        shard_manifest,
-        write_balanced_shards,
-    )
-
-    df = spark.range(2000).select(F.col("id").alias("doc_id"),
-                                  (F.col("id") % 7).alias("payload"))
-    path = str(tmp_path / "shards")
-    write_balanced_shards(df, path, id_col="doc_id", n_shards=8)
-
-    man = shard_manifest(spark, path, id_col="doc_id").collect()
-    assert len(man) == 8
-    assert sum(r.n_rows for r in man) == 2000
-    # md5 hash-distribution is balanced: no shard more than 2x the mean
-    assert max(r.n_rows for r in man) < 2 * (2000 / 8)
-
-    # determinism: rewriting the same input yields identical manifests
-    path2 = str(tmp_path / "shards2")
-    write_balanced_shards(df, path2, id_col="doc_id", n_shards=8)
-    man2 = shard_manifest(spark, path2, id_col="doc_id").collect()
-    assert [(r.shard, r.n_rows, r.id_checksum) for r in man] == \
-           [(r.shard, r.n_rows, r.id_checksum) for r in man2]
-
-    # round-trip preserves content
-    back = spark.read.parquet(path).drop("shard")
-    assert back.count() == 2000
-    assert back.select(F.sum("payload")).first()[0] == \
-           df.select(F.sum("payload")).first()[0]
-
-
 def test_quality_gate_quarantine(spark):
     from tsatool_app_spark.functions.quality_gate import (
+        check_constraints,
         in_range,
         matches,
         not_null,
-        quarantine_split,
     )
 
     df = spark.createDataFrame(
@@ -405,15 +358,14 @@ def test_quality_gate_quarantine(spark):
         "id long, v double, s string",
     )
     rules = [not_null("v"), in_range("v", 0, 10), matches("s", "^[a-z]+$")]
-    valid, bad = quarantine_split(df, rules)
-    assert {r.id for r in valid.collect()} == {1, 5}
-    got = {r.id: sorted(r.violations) for r in bad.collect()}
+    checked = check_constraints(df, rules).collect()
+    assert {r.id for r in checked if r.is_valid} == {1, 5}
+    got = {r.id: sorted(r.violations) for r in checked if not r.is_valid}
     assert got == {
         2: ["v_not_null"],
         3: ["v_in_range"],
         4: ["s_matches", "v_in_range"],
     }
-    assert "violations" not in valid.columns
 
 
 def test_value_buckets_ties_share_bucket(spark):

@@ -9,7 +9,6 @@ test_driver_contract.py.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from tsatool_app_spark.functions.corpus import (
     chunk_documents,
@@ -363,23 +362,6 @@ def test_drop_duplicate_chunks_removes_boilerplate(spark):
     assert out[1] == (legal + " " + a, 64)
     assert out[2] == (b, 32)
     assert 3 not in out
-
-
-def test_corpus_datacard_values(spark):
-    from pyspark.sql import functions as F
-
-    from tsatool_app_spark.functions.corpus import corpus_datacard
-    from tsatool_app_spark.model import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    card = corpus_datacard(docs)
-    n = docs.count()
-    assert card["n_docs"] == n
-    assert card["total_chars"] == docs.agg(F.sum(F.length("text"))).first()[0]
-    assert set(card["language_mix"]) and sum(card["language_mix"].values()) == n
-    assert 0 <= card["exact_dup_rate"] < 1
-    assert card["chars_p50"] <= card["chars_p95"]
-    assert 0 <= card["quality_pass_rate"] <= 1
 
 
 def _pipeline_stage() -> str:

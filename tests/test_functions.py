@@ -256,15 +256,10 @@ def test_pair_overlap_fixed_values(spark):
 
 
 def test_simhash_hamming(spark):
-    from tsatool_app_spark.functions.dedup import hamming_distance
-
     sig = simhash_signatures(docs_with_dups(spark))
     s = {r.doc_id: r.simhash for r in sig.collect()}
     assert s[1] == s[2]
-    df = sig.sparkSession.createDataFrame(
-        [(s[1], s[3]), (s[1], s[4])], "a long, b long"
-    ).select(hamming_distance(F.col("a"), F.col("b")).alias("d"))
-    d_near, d_far = [r.d for r in df.collect()]
+    d_near, d_far = (bin(s[1] ^ s[j]).count("1") for j in (3, 4))
     assert d_near < d_far
 
 
@@ -395,23 +390,6 @@ def test_quantized_dot_exactness(spark):
     out = df.select(quantized_dot(F.col("a"), F.col("b")).alias("d")).collect()[0].d
     # floor(1.5k)*floor(2k) + floor(-2.25k)*floor(1k) + floor(3k)*floor(-1.5k)
     assert out == 1500 * 2000 + (-2250) * 1000 + 3000 * (-1500)
-
-
-def test_winnowing_fingerprints(spark):
-    from tsatool_app_spark.functions.text import winnowing_fingerprints
-
-    base = "the quick brown fox jumps over the lazy dog into the forest"
-    edited = base.replace("forest", "meadow")  # local edit
-    df = spark.createDataFrame(
-        [(1, base), (2, base), (3, edited)], "doc_id long, text string"
-    )
-    fps = {
-        i: {r.fp for r in winnowing_fingerprints(df).where(f"doc_id = {i}").collect()}
-        for i in (1, 2, 3)
-    }
-    assert fps[1] == fps[2]  # identical docs → identical fingerprint sets
-    overlap = len(fps[1] & fps[3]) / len(fps[1] | fps[3])
-    assert 0.5 < overlap < 1.0  # local edit keeps most fingerprints
 
 
 def test_ivf_ann_recall(spark, sf_dir):
@@ -638,17 +616,11 @@ def test_leakage_safe_split_cluster_invariant(spark):
         assert out[d][1] == want
 
 
-def test_gram_matrix_and_pca_match_numpy(spark):
-    """gram_matrix == quantized numpy X.T@X; PCA eigenpairs == numpy eigh
-    on the same matrix; projection == matmul."""
+def test_gram_matrix_matches_numpy(spark):
+    """gram_matrix == quantized numpy X.T@X."""
     import numpy as np
 
-    from tsatool_app_spark.functions.linalg import (
-        gram_matrix,
-        gram_to_numpy,
-        pca_top_components,
-        project_embeddings,
-    )
+    from tsatool_app_spark.functions.linalg import gram_matrix
 
     rng = np.random.default_rng(7)
     x = rng.standard_normal((40, 6))
@@ -664,23 +636,6 @@ def test_gram_matrix_and_pca_match_numpy(spark):
     iu, ju = np.triu_indices(6)
     for i, j in zip(iu, ju):
         assert got[(int(i), int(j))] == int(expect[i, j])
-
-    g = gram_to_numpy(rows, 6, 1000)
-    vals, comps = pca_top_components(df, k=2, dim=6)
-    evals, evecs = np.linalg.eigh(g)
-    np.testing.assert_allclose(vals, evals[::-1][:2], rtol=1e-9)
-    for ci, c in enumerate(comps):
-        ref = evecs[:, np.argsort(evals)[::-1][ci]]
-        if ref[np.argmax(np.abs(ref))] < 0:
-            ref = -ref
-        np.testing.assert_allclose(c, ref, atol=1e-9)
-
-    proj = project_embeddings(df, comps).select("vec_id", "pca").collect()
-    xf = np.stack([np.asarray(r, dtype=np.float64) for r in x.astype(np.float32)])
-    for r in proj:
-        np.testing.assert_allclose(
-            np.asarray(r["pca"]), xf[r["vec_id"]] @ comps.T, rtol=1e-7
-        )
 
 
 def test_power_sums_and_moments_match_numpy(spark):

@@ -275,95 +275,3 @@ def test_observation_summary_month_in_helsinki_tz(spark):
     )
     out = {r.obs_month: r.obs_count for r in observation_summary(obs).collect()}
     assert out == {3: 1, 4: 1, 11: 1}
-
-
-def test_jsonl_round_trip_and_corrupt_quarantine(spark, tmp_path):
-    """JSONL sink→source round trip preserves values; malformed lines are
-    quarantined, not dropped silently and not fatal."""
-    import gzip
-    import os
-
-    from tsatool_app_spark.sources.jsonl import (
-        corrupt_records,
-        read_jsonl,
-        write_jsonl,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"text {i}", None if i % 3 else "en") for i in range(50)],
-        "doc_id long, text string, lang string",
-    )
-    out = str(tmp_path / "docs_jsonl")
-    write_jsonl(docs, out, shards=4)
-    # gzip shards, one per requested shard
-    parts = [f for f in os.listdir(out) if f.startswith("part-")]
-    assert len(parts) == 4
-    assert all(f.endswith(".gz") for f in parts)
-
-    back = read_jsonl(spark, out, "doc_id long, text string, lang string")
-    got = {r.doc_id: (r.text, r.lang) for r in back.collect()}
-    assert got == {i: (f"text {i}", None if i % 3 else "en") for i in range(50)}
-
-    # corrupt a shard: append garbage + a schema-violating line
-    bad = str(tmp_path / "mixed")
-    os.makedirs(bad)
-    with gzip.open(os.path.join(bad, "part-x.json.gz"), "wt") as f:
-        f.write('{"doc_id": 1, "text": "ok", "lang": "en"}\n')
-        f.write("not json at all\n")
-        f.write('{"doc_id": "NaNope", "text": 3}\n')
-    good = read_jsonl(spark, bad, "doc_id long, text string, lang string")
-    assert [r.doc_id for r in good.collect()] == [1]
-    quarantined = corrupt_records(
-        spark, bad, "doc_id long, text string, lang string"
-    )
-    # full-row materialization (a corrupt-only scan is disallowed by Spark;
-    # .count() would prune down to exactly that — see sources/jsonl.py)
-    rows = quarantined.collect()
-    assert len(rows) == 2
-    assert any("not json at all" in r._corrupt_record for r in rows)
-
-
-def test_jsonl_good_path_prunable_and_parity(spark, tmp_path):
-    """The good-path frame must survive column-pruned plans (.count/.isEmpty)
-    — the corrupt-column-only restriction must not leak to callers — and
-    good + quarantined must partition the input exactly."""
-    import gzip
-    import os
-
-    from tsatool_app_spark.sources.jsonl import corrupt_records, read_jsonl
-
-    d = str(tmp_path / "in")
-    os.makedirs(d)
-    with gzip.open(os.path.join(d, "p.json.gz"), "wt") as f:
-        f.write('{"doc_id": 1, "text": "a"}\n')
-        f.write("garbage\n")
-        f.write('{"doc_id": 2, "text": "b"}\n')
-        f.write("{broken\n")
-    schema = "doc_id long, text string"
-    good = read_jsonl(spark, d, schema)
-    assert good.count() == 2           # would raise before the DROPMALFORMED fix
-    assert not good.isEmpty()
-    n_bad = len(corrupt_records(spark, d, schema).collect())
-    assert good.count() + n_bad == 4
-
-
-def test_ingest_jsonl_one_pass_split(spark, tmp_path):
-    """Single-scan ingest: good rows and quarantine written together,
-    partition-separated, and both readable without restrictions."""
-    import gzip
-    import os
-
-    from tsatool_app_spark.sources.jsonl import ingest_jsonl
-
-    d = str(tmp_path / "in")
-    os.makedirs(d)
-    with gzip.open(os.path.join(d, "p.json.gz"), "wt") as f:
-        f.write('{"doc_id": 1, "text": "a"}\n')
-        f.write("garbage line\n")
-        f.write('{"doc_id": 2, "text": "b"}\n')
-    good, bad = ingest_jsonl(
-        spark, d, "doc_id long, text string", str(tmp_path / "out")
-    )
-    assert good.count() == 2 and not good.isEmpty()
-    assert sorted(r.doc_id for r in good.collect()) == [1, 2]
-    assert [r.raw for r in bad.collect()] == ["garbage line"]

@@ -8,9 +8,7 @@ import pytest
 from tsatool_app_spark.functions.multimodal import (
     MEDIA_SCHEMA,
     decode_image_batch,
-    media_metadata,
     pack_fake_image,
-    resize_images,
     sample_video_frames,
 )
 
@@ -37,23 +35,6 @@ def test_decode_without_library_raises(spark, media_df):
     with pytest.raises(Exception) as ei:
         decode_image_batch(media_df, fake_decoder=False).collect()
     assert "NotImplementedError" in str(ei.value) or "requires" in str(ei.value)
-
-
-def test_resize_roundtrip(spark, media_df):
-    resized = resize_images(media_df, 4, 2, fake_decoder=True)
-    meta = decode_image_batch(resized, fake_decoder=True).collect()
-    assert all((r.width, r.height) == (4, 2) for r in meta)
-    # resize is deterministic: same input → same bytes
-    b1 = {r.media_id: bytes(r.content) for r in resized.collect()}
-    b2 = {r.media_id: bytes(r.content) for r in resize_images(media_df, 4, 2, fake_decoder=True).collect()}
-    assert b1 == b2
-
-
-def test_media_metadata_prunes_bytes(spark, media_df):
-    meta = media_metadata(media_df)
-    assert "content" not in meta.columns
-    rows = {r.media_id: r for r in meta.collect()}
-    assert rows[1].kind == "image" and rows[1].n_bytes == len(pack_fake_image(8, 4))
 
 
 def test_video_sampling_real_fanout(spark):
@@ -235,25 +216,6 @@ def test_decode_image_batch_real_png(spark):
         r = out[mid]
         assert (r.width, r.height, r.channels) == (a.shape[1], a.shape[0], 3)
         assert r.mean_px == f"{float(a.mean()):.6f}"
-
-
-def test_resize_images_real_png(spark):
-    """Native PNG resize: output is a decodable PNG at the target size whose
-    pixels are the exact nearest-neighbour selection."""
-    import numpy as np
-
-    from tsatool_app_spark.sinks_png import decode_png, encode_png
-
-    rng = np.random.default_rng(5)
-    arr = rng.integers(0, 256, size=(16, 16, 3), dtype=np.uint8)
-    df = spark.createDataFrame(
-        [(1, encode_png(arr), ("image", "png", 16, 16, None))], MEDIA_SCHEMA
-    )
-    out = resize_images(df, 4, 8).collect()
-    got = decode_png(bytes(out[0].content))
-    ys = (np.arange(8) * 16) // 8
-    xs = (np.arange(4) * 16) // 4
-    assert np.array_equal(got, arr[ys][:, xs])
 
 
 def _gradient_img(h, w, seed=7):
@@ -466,65 +428,6 @@ def test_avi_codec_rejects_non_mjpeg():
     avi[avi.find(b"MJPG") : avi.find(b"MJPG") + 4] = b"H264"
     with _pytest.raises(NotImplementedError, match="MJPEG"):
         list(iter_avi_mjpeg_frames(bytes(avi)))
-
-
-def test_resize_images_real_jpeg(spark):
-    """Native JPEG resize: output decodes at target size and tracks the
-    nearest-neighbour selection within re-encode loss."""
-    import numpy as np
-
-    from tsatool_app_spark.jpeg_codec import decode_jpeg, encode_jpeg_baseline
-
-    img = _gradient_img(40, 56, seed=17)
-    df = spark.createDataFrame(
-        [(3, encode_jpeg_baseline(img, quality=95),
-          ("image", "jpeg", 56, 40, None))],
-        MEDIA_SCHEMA,
-    )
-    out = resize_images(df, 14, 10).collect()
-    arr = decode_jpeg(bytes(out[0].content))
-    assert arr.shape == (10, 14, 3)
-    src = decode_jpeg(encode_jpeg_baseline(img, quality=95))
-    ys = (np.arange(10) * 40) // 10
-    xs = (np.arange(14) * 56) // 14
-    want = src[ys][:, xs]
-    assert np.abs(arr.astype(int) - want.astype(int)).mean() < 8
-
-
-def test_audio_frame_features_match_numpy(spark):
-    """Frame RMS / ZCR / spectral centroid from WAV bytes: a pure sine's
-    centroid sits at its frequency and ZCR at 2f/sr; values match a direct
-    numpy recomputation exactly."""
-    import numpy as np
-
-    from tsatool_app_spark.functions.multimodal import audio_frame_features
-    from tsatool_app_spark.wav_codec import encode_wav
-
-    sr, f0 = 16000, 1000.0
-    t = np.arange(4096) / sr
-    sine = (0.5 * np.sin(2 * np.pi * f0 * t) * 32767).astype(np.int16)
-    df = spark.createDataFrame(
-        [(1, encode_wav(sine, sr), ("audio", "wav", None, None, None))],
-        MEDIA_SCHEMA,
-    )
-    rows = sorted(
-        audio_frame_features(df, frame_len=512, hop=256).collect(),
-        key=lambda r: r.frame_idx,
-    )
-    assert len(rows) == (4096 - 512) // 256 + 1
-    for r in rows:
-        assert abs(r.centroid_hz - f0) < 60  # leakage smears a little
-        assert abs(r.zcr - 2 * f0 / sr) < 0.01
-        assert abs(r.rms - 0.5 / np.sqrt(2)) < 0.01
-
-    # exact parity with a direct numpy recomputation of frame 3
-    x = sine.astype(np.float64) / 32768.0
-    fr = x[3 * 256 : 3 * 256 + 512]
-    rms = float(np.sqrt((fr**2).mean()))
-    spec = np.abs(np.fft.rfft(fr))
-    cen = float((spec * np.fft.rfftfreq(512, 1 / sr)).sum() / spec.sum())
-    got = rows[3]
-    assert got.rms == rms and abs(got.centroid_hz - cen) < 1e-9
 
 
 def _strip_dht(data: bytes) -> bytes:

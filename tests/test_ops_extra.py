@@ -15,10 +15,7 @@ from pyspark.sql import functions as F
 
 
 def test_extract_json_fields_typed(spark):
-    from tsatool_app_spark.functions.semistructured import (
-        extract_json_fields,
-        json_field,
-    )
+    from tsatool_app_spark.functions.semistructured import extract_json_fields
 
     df = spark.createDataFrame(
         [(1, '{"k": 7, "tag": "x"}'), (2, '{"k": -3}'), (3, "not json")],
@@ -29,9 +26,6 @@ def test_extract_json_fields_typed(spark):
     assert rows[1] == (7, "x")
     assert rows[2] == (-3, None)
     assert rows[3] == (None, None)  # unparseable -> typed NULLs, no error
-
-    one = df.select("id", json_field(F.col("props"), "k", "long").alias("k"))
-    assert {r.id: r.k for r in one.collect()} == {1: 7, 2: -3, 3: None}
 
 
 def test_line_quality_filter_rules(spark):
@@ -177,33 +171,6 @@ def test_phrase_search_adjacency(spark):
     out3 = [r.doc_id for r in
             phrase_search(docs, ["the", "quick", "brown"]).collect()]
     assert out3 == [1]
-
-
-def test_hll_sketch_within_error_bound(spark, sf_dir):
-    """Approximate-operator evidence policy: the HLL estimate must sit
-    within the sketch's published error envelope of the exact twin
-    (lg_k=14 → rse ≈ 0.8%; assert 3σ ≈ 2.5%)."""
-    from tsatool_app_spark.functions.sketches import (
-        exact_distinct_by_group,
-        hll_distinct_by_group,
-    )
-    from tsatool_app_spark.model import load_table
-    import pyspark.sql.functions as F
-
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "day", F.date_trunc("day", F.col("ts")).cast("date").cast("string")
-    )
-    exact = {
-        r.day: r.n_distinct
-        for r in exact_distinct_by_group(ev, ["day"], "user_id").collect()
-    }
-    est = {
-        r.day: r.n_distinct_est
-        for r in hll_distinct_by_group(ev, ["day"], "user_id").collect()
-    }
-    assert est.keys() == exact.keys()
-    for day, n in exact.items():
-        assert abs(est[day] - n) <= max(1, 0.025 * n), (day, est[day], n)
 
 
 def test_hll_rollup_merges_fine_sketches(spark, sf_dir):
@@ -564,10 +531,8 @@ def test_grouped_topk_pruned_equals_plain_window(spark):
 
 
 def test_grouped_topk_pruned_nulls_match_window(spark):
-    """Null order values must survive the prune exactly as the final
-    window ranks them (asc → nulls FIRST, desc → nulls LAST); the old
-    single-na_position sort dropped null rows that belonged in the
-    global top-k."""
+    """Null order values must survive the prune exactly as the plain
+    window ranks them (asc → nulls FIRST, desc → nulls LAST)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 

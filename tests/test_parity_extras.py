@@ -1,35 +1,13 @@
-"""Remaining parity pieces: formatting utils, Helsinki-TZ month bucketing vs
-DuckDB, BPE-ish token counts, embedding near-dup pairs."""
+"""Remaining parity pieces: Helsinki-TZ month bucketing vs DuckDB, BPE-ish
+token counts, embedding near-dup pairs."""
 
 from __future__ import annotations
 
-from datetime import datetime, timedelta
+from datetime import datetime
 
 import duckdb
 import numpy as np
 import pytest
-
-from tsatool_app_spark.dsl.format import strfdelta, trunc_str, with_errpointer
-
-
-def test_strfdelta():
-    td = timedelta(days=2, hours=3, minutes=4, seconds=5)
-    assert (
-        strfdelta(td, "{days}d {hours}h {minutes}min") == "2d 3h 4min"
-    )
-
-
-def test_trunc_str():
-    assert trunc_str("short") == "short"
-    long = "x" * 100
-    out = trunc_str(long, 80)
-    assert out.endswith(" ...") and len(out) == 79
-
-
-def test_with_errpointer():
-    assert with_errpointer("abcdef", 2).splitlines()[1] == "~~^ HERE"
-    assert with_errpointer("abc", -1) == "abc"
-    assert with_errpointer("abc", "zz") == "abc"
 
 
 def test_helsinki_month_matches_duckdb(spark):

@@ -22,6 +22,10 @@ from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from tsatool_app_spark.operators.ranges import pack_ranges_all_keys
+from tsatool_app_spark.plans.driver_queries import (
+    _pack_sql_cte,
+    _reference_combine_sql,
+)
 
 T0 = datetime(2018, 3, 1)
 
@@ -231,30 +235,6 @@ def test_combine_multi_matches_duckdb_random(spark, conds):
         assert got == want, (cid, master)
 
 
-def _reference_combine_sql(sources, master, vdiff):
-    """The reference's combine (condition.py:364-391) as one DuckDB query:
-    boundary union, LEAD pairing, one containment LEFT JOIN per block,
-    Kleene master.  ``sources``: alias -> (relation, truth column), each
-    relation (vfrom, vuntil, <truth column>); ``vdiff``: the duration of
-    the master range ``m`` in seconds."""
-    pts = " UNION ALL ".join(
-        f"SELECT vfrom AS vt FROM {rel} UNION ALL SELECT vuntil FROM {rel}"
-        for rel, _ in sources.values()
-    )
-    joins = "\n".join(
-        f"LEFT JOIN {rel} AS j_{a} ON m.vfrom >= j_{a}.vfrom AND m.vfrom < j_{a}.vuntil"
-        for a, (rel, _) in sources.items()
-    )
-    cols = ", ".join(f"j_{a}.{tc} AS {a}" for a, (_, tc) in sources.items())
-    return f"""
-SELECT aligned.*, ({master}) AS master FROM (
-  SELECT m.vfrom, m.vuntil, {vdiff} AS vdiff_s, {cols}
-  FROM (SELECT * FROM (
-    SELECT vt AS vfrom, lead(vt) OVER (ORDER BY vt) AS vuntil
-    FROM (SELECT DISTINCT vt FROM ({pts}))) WHERE vuntil IS NOT NULL) m
-  {joins}) aligned"""
-
-
 # -- Secondary sheets: the runner against a level-by-level reference ------
 
 # Sensor keys (station, sensor id) of the random streams; the sheet names
@@ -350,7 +330,6 @@ def test_secondary_sheet_matches_level_reference_random(spark, sheet):
     (block.py:195-207).  Each condition's runs, its secondary-alias
     columns included, and its summary must match."""
     from tsatool_app_spark import reports
-    from tsatool_app_spark.plans.driver_queries import _pack_sql_cte
     from tsatool_app_spark.runner import CondCollection
 
     streams, primaries, secondaries = sheet
@@ -397,11 +376,7 @@ def test_secondary_sheet_matches_level_reference_random(spark, sheet):
                     )
                 )
                 sources[a] = (f"blk{n}_{a}", "istrue")
-        combine = _reference_combine_sql(
-            sources,
-            spec.alias_condition,
-            "CAST(date_diff('second', m.vfrom, m.vuntil) AS BIGINT)",
-        )
+        combine = _reference_combine_sql(sources, spec.alias_condition)
         con.execute(
             f"CREATE TABLE ref_{cid} AS "
             + (f"WITH {','.join(ctes)} " if ctes else "")

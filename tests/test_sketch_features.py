@@ -1,4 +1,4 @@
-"""Tests for count-min sketch, heavy hitters, hashing-trick features, and
+"""Tests for count-min sketch, hashing-trick features, and
 rational tf-idf (functions/sketches.py, mlprep.py, search.py)."""
 
 from __future__ import annotations
@@ -9,11 +9,7 @@ from pyspark.sql import functions as F
 
 from tsatool_app_spark.functions.mlprep import hashed_features
 from tsatool_app_spark.functions.search import tfidf_topk
-from tsatool_app_spark.functions.sketches import (
-    cms_build,
-    cms_estimate,
-    heavy_hitters,
-)
+from tsatool_app_spark.functions.sketches import cms_build, cms_estimate
 
 
 def test_cms_never_undercounts_and_is_tight_when_sparse(spark):
@@ -39,13 +35,6 @@ def test_cms_is_mergeable_by_cell_sum(spark):
     )
     full = cms_build(a.unionByName(b), "k")
     assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, full.collect()))
-
-
-def test_heavy_hitters_exact(spark):
-    vals = ["a"] * 10 + ["b"] * 5 + ["c"] * 4 + ["d"]
-    df = spark.createDataFrame([(v,) for v in vals], ["k"])
-    out = [(r.key, r.cnt) for r in heavy_hitters(df, "k", min_count=5).collect()]
-    assert out == [("a", 10), ("b", 5)]
 
 
 def test_hashed_features_deterministic_and_signed(spark):

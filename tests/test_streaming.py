@@ -969,197 +969,6 @@ def test_snapshot_store_segments_append_and_compact(spark, tmp_path):
     assert current_version(root) is not None
 
 
-def test_streaming_anomaly_monitor_score_then_fold(spark, tmp_path):
-    """Batch 1 builds history; batch 2's outlier is flagged against the
-    PRIOR snapshot; normal values are not; batch-1 rows never flagged
-    (empty history); a corrupt batch can't vote itself normal."""
-    from tsatool_app_spark.streaming import stream_observations
-    from tsatool_app_spark.streaming.incremental_stream import (
-        streaming_anomaly_monitor,
-    )
-
-    src = str(tmp_path / "obs")
-    snap = str(tmp_path / "snapshot")
-    anom = str(tmp_path / "anomalies")
-
-    # history: 40 values near 10.0 for key 1
-    b1 = [(m, 1, 1, 10.0 + (m % 5) * 0.01) for m in range(40)]
-    write_obs_batch(spark, src, b1, 0)
-    q = streaming_anomaly_monitor(
-        stream_observations(spark, src), snap, anom,
-        keys=["statid"], value_col="seval",
-        checkpoint=str(tmp_path / "ck"), min_n=30,
-    )
-    q.awaitTermination(120)
-    # first batch: no history, nothing flagged (the sink may hold an
-    # empty part file — row count is the contract)
-    assert spark.read.parquet(anom).count() == 0
-
-    # batch 2: one outlier (99.0), one normal, one for an UNSEEN key
-    write_obs_batch(spark, src, [(50, 1, 1, 99.0), (51, 1, 1, 10.02), (52, 7, 1, 99.0)], 1)
-    q = streaming_anomaly_monitor(
-        stream_observations(spark, src), snap, anom,
-        keys=["statid"], value_col="seval",
-        checkpoint=str(tmp_path / "ck"), min_n=30,
-    )
-    q.awaitTermination(120)
-    flagged = spark.read.parquet(anom).collect()
-    assert len(flagged) == 1
-    assert flagged[0]["statid"] == 1 and abs(flagged[0]["seval"] - 99.0) < 1e-6
-
-
-def test_streaming_join_view_maintenance_matches_recompute(spark, tmp_path):
-    """Three IVM rounds through the segment store — including a round with
-    only one side's delta and a same-round cross-delta match — equal the
-    full A JOIN B recompute at every step."""
-    from tsatool_app_spark.streaming.incremental_stream import (
-        fold_join_view_batch,
-    )
-    from tsatool_app_spark.streaming.snapshot_store import read_snapshot
-
-    root = str(tmp_path / "jv")
-
-    def cust(rows):
-        return spark.createDataFrame(rows, "custkey long, name string")
-
-    def orders(rows):
-        return spark.createDataFrame(rows, "orderkey long, custkey long")
-
-    rounds = [
-        (cust([(1, "a"), (2, "b")]), orders([(10, 1)])),
-        (cust([(3, "c")]), orders([(11, 2), (12, 3)])),  # cross-delta match
-        (None, orders([(13, 1), (14, 3)])),              # one-sided round
-    ]
-    a_all, b_all = None, None
-    for a_d, b_d in rounds:
-        fold_join_view_batch(spark, root, a_d, b_d, ["custkey"])
-        a_all = a_d if a_all is None else (a_all if a_d is None else a_all.unionByName(a_d))
-        b_all = b_d if b_all is None else (b_all if b_d is None else b_all.unionByName(b_d))
-        view = read_snapshot(spark, root + "/view")
-        got = sorted(
-            (r["custkey"], r["orderkey"], r["name"]) for r in view.collect()
-        )
-        full = sorted(
-            (r["custkey"], r["orderkey"], r["name"])
-            for r in a_all.join(b_all, ["custkey"]).collect()
-        )
-        assert got == full
-    assert len(got) == 5
-
-
-def test_snapshot_store_time_travel_retention(spark, tmp_path):
-    """publish_snapshot_retained keeps the last N versions readable;
-    older ones are pruned; CURRENT always resolves to the newest."""
-    import pytest as _pytest
-
-    from tsatool_app_spark.streaming.snapshot_store import (
-        current_version,
-        list_versions,
-        publish_snapshot_retained,
-        read_snapshot,
-        read_snapshot_version,
-    )
-
-    root = str(tmp_path / "tt")
-    for i in range(5):
-        publish_snapshot_retained(
-            spark.range(0, 10 + i).selectExpr("id AS k"), root, keep_versions=3
-        )
-    vs = list_versions(root)
-    assert vs == ["v-2", "v-3", "v-4"]  # 3 retained of 5
-    assert current_version(root) == "v-4"
-    assert read_snapshot(spark, root).count() == 14
-    assert read_snapshot_version(spark, root, "v-2").count() == 12
-    with _pytest.raises(FileNotFoundError):
-        read_snapshot_version(spark, root, "v-0")
-
-
-def test_incremental_span_index_matches_batch_and_streams(spark, tmp_path):
-    """r8 new capability: feeding the corpus through the incremental span
-    index in batches emits exactly the CROSS-batch + WITHIN-later-batch
-    pairs the one-shot batch detector finds — pair set AND n_shared —
-    each pair once (when its later doc arrives); the foreachBatch
-    wrapper reproduces it through a real stream with a restart between
-    batches; the cap excludes a boilerplate fingerprint observable via
-    the shared audit over the final index."""
-    from tsatool_app_spark.functions.spans import (
-        duplicated_span_pairs,
-        hot_span_fingerprints,
-    )
-    from tsatool_app_spark.streaming.snapshot_store import read_snapshot
-    from tsatool_app_spark.streaming.span_index import (
-        incremental_span_probe_and_update,
-        streaming_span_dedup,
-    )
-
-    span = " ".join(f"sp{i:03d}" for i in range(40))  # 239 chars, shared
-    base = [
-        (i, f"doc {i} " + " ".join(f"t{i}q{j}" for j in range(30)))
-        for i in range(10)
-    ]
-    # cross-batch copy of doc 3's text, an embedded slice of the span at a
-    # different offset, and a within-batch-2 clone pair
-    b1 = base + [(20, "prefix one " + span + " suffix")]
-    b2 = [
-        (100, base[3][1]),
-        (101, "completely different lead-in text " + span + " done"),
-        (102, "another unrelated framing " + span),
-    ]
-    df1 = spark.createDataFrame(b1, "doc_id long, text string")
-    df2 = spark.createDataFrame(b2, "doc_id long, text string")
-
-    snap = str(tmp_path / "spanidx")
-    m1 = incremental_span_probe_and_update(spark, snap, df1)
-    assert m1.count() == 0  # batch 1 shares nothing internally
-    m2 = incremental_span_probe_and_update(spark, snap, df2)
-    got = sorted(tuple(r) for r in m2.collect())
-
-    batch = duplicated_span_pairs(df1.unionByName(df2), window_len=40)
-    want = sorted(
-        tuple(r) for r in batch.collect() if r["id_b"] >= 100
-    )  # pairs whose later doc is in batch 2
-    assert got == want and len(got) >= 4
-    pairs_only = {(a, b) for a, b, _ in got}
-    assert (20, 101) in pairs_only and (101, 102) in pairs_only
-    assert (3, 100) in pairs_only  # exact cross-batch copy
-
-    # accumulated index IS the batch fingerprint relation: the shared
-    # audit runs on it directly (the span's interior fingerprints live in
-    # docs 20/101/102 — 3 docs, over a cap of 2)
-    idx = read_snapshot(spark, snap)
-    audit = hot_span_fingerprints(fps=idx, max_docs_per_fp=2).collect()
-    assert audit and max(r.n_docs for r in audit) == 3
-    # cap at probe time: with cap=2 the 3-doc span fingerprints are
-    # excluded — only the exact-copy pair (2 docs) survives
-    snap_c = str(tmp_path / "spanidx_c")
-    incremental_span_probe_and_update(spark, snap_c, df1, max_docs_per_fp=2)
-    mc = incremental_span_probe_and_update(spark, snap_c, df2, max_docs_per_fp=2)
-    assert {(r.id_a, r.id_b) for r in mc.collect()} == {(3, 100)}
-
-    # real stream with a restart between the two batches
-    src = str(tmp_path / "spansrc")
-    df1.coalesce(1).write.mode("overwrite").parquet(src + "/b=1")
-    stream = spark.readStream.schema("doc_id long, text string").parquet(src + "/*")
-    snap2 = str(tmp_path / "spanidx2")
-    matches_path = str(tmp_path / "spanmatches")
-    q = streaming_span_dedup(
-        stream, snap2, matches_path, checkpoint=str(tmp_path / "spanck")
-    )
-    q.awaitTermination(120)
-    df2.coalesce(1).write.mode("overwrite").parquet(src + "/b=2")
-    q = streaming_span_dedup(
-        stream, snap2, matches_path, checkpoint=str(tmp_path / "spanck")
-    )
-    q.awaitTermination(120)
-    streamed = sorted(
-        tuple(r)
-        for r in spark.read.parquet(matches_path)
-        .select("id_a", "id_b", "n_shared")
-        .collect()
-    )
-    assert streamed == want
-
-
 def _crash_replay_docs(spark):
     span = " ".join(f"cr{i:03d}" for i in range(40))
     b1 = [(1, "lead text " + span + " tail"), (2, "unrelated filler words " * 10)]
@@ -1168,64 +977,6 @@ def _crash_replay_docs(spark):
         spark.createDataFrame(b1, "doc_id long, text string"),
         spark.createDataFrame(b2, "doc_id long, text string"),
     )
-
-
-def test_span_index_crash_replay_idempotent(spark, tmp_path):
-    """r9 (VERDICT r8 ask #3 / ADVICE medium): a crash between the
-    matches write and the streaming-checkpoint commit replays the batch
-    — invoking the foreachBatch body TWICE with the same batch_id must
-    leave the index (no double-fold: the snapshot store's batch ledger
-    skips it) and the match sink (batch_id-partition overwrite, not
-    append) byte-identical."""
-    from tsatool_app_spark.streaming.snapshot_store import (
-        folded_batches,
-        read_snapshot,
-    )
-    from tsatool_app_spark.streaming.span_index import process_span_batch
-
-    df1, df2 = _crash_replay_docs(spark)
-    snap = str(tmp_path / "snap")
-    matches = str(tmp_path / "matches")
-    process_span_batch(df1, 0, snap, matches)
-    idx_rows = read_snapshot(spark, snap).count()
-    m0 = sorted(
-        tuple(r)
-        for r in spark.read.parquet(matches)
-        .select("id_a", "id_b", "n_shared")
-        .collect()
-    )
-    # crash-replay of batch 0
-    process_span_batch(df1, 0, snap, matches)
-    assert read_snapshot(spark, snap).count() == idx_rows  # fold skipped
-    assert folded_batches(snap) == {"0"}
-    m0_replay = sorted(
-        tuple(r)
-        for r in spark.read.parquet(matches)
-        .select("id_a", "id_b", "n_shared")
-        .collect()
-    )
-    assert m0_replay == m0  # overwrite, not append
-    # batch 1, then ITS replay — cross-batch matches must not duplicate
-    process_span_batch(df2, 1, snap, matches)
-    idx_rows2 = read_snapshot(spark, snap).count()
-    m1 = sorted(
-        tuple(r)
-        for r in spark.read.parquet(matches)
-        .select("id_a", "id_b", "n_shared")
-        .collect()
-    )
-    process_span_batch(df2, 1, snap, matches)
-    assert read_snapshot(spark, snap).count() == idx_rows2
-    assert folded_batches(snap) == {"0", "1"}
-    m1_replay = sorted(
-        tuple(r)
-        for r in spark.read.parquet(matches)
-        .select("id_a", "id_b", "n_shared")
-        .collect()
-    )
-    assert m1_replay == m1
-    pairs = {(a, b) for a, b, _ in m1}
-    assert (1, 10) in pairs and (1, 11) in pairs  # replay changed nothing
 
 
 def test_dedup_index_crash_replay_idempotent(spark, tmp_path):
@@ -1258,29 +1009,11 @@ def test_dedup_index_crash_replay_idempotent(spark, tmp_path):
     assert m_replay == m and (1, 11) in m
 
 
-def test_probe_span_cap_counts_distinct_docs(spark):
-    """r9 (VERDICT r8 ask #5): the probe cap measures DOCUMENTS — a
-    duplicated index segment (rows appearing twice) must not push a
-    fingerprint over max_docs_per_fp."""
+def test_probe_bucket_cap_counts_distinct_docs(spark):
+    """The probe cap measures DOCUMENTS — a duplicated index segment (rows
+    appearing twice) must not push a bucket over max_bucket_size."""
     from tsatool_app_spark.streaming.dedup_index import probe_index
-    from tsatool_app_spark.streaming.span_index import probe_span_index
 
-    idx = spark.createDataFrame(
-        [(1, "f1"), (2, "f1"), (3, "f1")], "doc_id long, fp string"
-    )
-    new = spark.createDataFrame([(3, "f1")], "doc_id long, fp string")
-    clean = {
-        (r.id_a, r.id_b)
-        for r in probe_span_index(idx, new, max_docs_per_fp=3).collect()
-    }
-    assert clean == {(1, 3), (2, 3)}
-    dup_idx = idx.unionByName(idx)  # 6 rows, still 3 distinct docs
-    dup = {
-        (r.id_a, r.id_b)
-        for r in probe_span_index(dup_idx, new, max_docs_per_fp=3).collect()
-    }
-    assert dup == clean  # row-count cap would have emptied this
-    # same contract for the minhash bucket cap
     bidx = spark.createDataFrame(
         [(1, 0, 7), (2, 0, 7), (3, 0, 7)], "doc_id long, band int, bucket int"
     )

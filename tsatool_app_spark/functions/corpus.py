@@ -853,60 +853,6 @@ def drop_duplicate_chunks(
     )
 
 
-def corpus_datacard(docs: DataFrame, *, text_col: str = "text") -> dict:
-    """One-call dataset datasheet: the numbers every corpus release ships
-    with — volume, exact-duplication rate, language mix, quality
-    distribution, and length percentiles — assembled from this module's
-    operators in FOUR jobs total (each constituent is one aggregate; the
-    per-doc stats share one scan via a single projection).
-
-    Returns a plain dict (JSON-ready); writing it next to the data is the
-    caller's one line.  This is a reporting edge: collects are one row
-    (or |languages| rows), never the corpus."""
-    from tsatool_app_spark.functions.dedup import exact_dedup_groups
-    from tsatool_app_spark.functions.text import lang_pred_col, quality_col
-
-    t = F.col(text_col)
-    per_doc = docs.select(
-        lang_pred_col(text_col).alias("lang_pred"),
-        quality_col(text_col).alias("quality"),
-        F.length(t).alias("n_chars"),
-    )
-    agg = per_doc.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.avg("quality").alias("mean_quality"),
-        F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY n_chars)").alias("p50_chars"),
-        F.expr("percentile_disc(0.95) WITHIN GROUP (ORDER BY n_chars)").alias("p95_chars"),
-        F.sum((F.col("quality") >= 0.6).cast("long")).alias("n_quality_pass"),
-    ).collect()[0]
-    langs = {
-        r["lang_pred"]: r["n"]
-        for r in per_doc.groupBy("lang_pred")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    groups = exact_dedup_groups(docs, text_col=text_col)
-    dup = groups.agg(
-        F.sum("n_copies").alias("n_docs"),
-        F.count(F.lit(1)).alias("n_distinct"),
-    ).collect()[0]
-    n = agg["n_docs"]
-    return {
-        "n_docs": n,
-        "total_chars": int(agg["total_chars"]),
-        "mean_quality": float(agg["mean_quality"]),
-        "quality_pass_rate": agg["n_quality_pass"] / n if n else None,
-        "chars_p50": int(agg["p50_chars"]),
-        "chars_p95": int(agg["p95_chars"]),
-        "language_mix": langs,
-        "n_distinct_texts": dup["n_distinct"],
-        "exact_dup_rate": (dup["n_docs"] - dup["n_distinct"]) / dup["n_docs"]
-        if dup["n_docs"]
-        else None,
-    }
-
-
 def pretraining_mix(
     docs: DataFrame,
     benchmark: DataFrame,

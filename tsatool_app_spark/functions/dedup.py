@@ -268,10 +268,6 @@ def simhash_signatures(
     return voted.select(id_col, sig.cast("long").alias("simhash"))
 
 
-def hamming_distance(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 def _resolve_band_bits(
     band_bits: int | str,
     embeddings: DataFrame,

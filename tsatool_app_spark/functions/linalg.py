@@ -59,68 +59,3 @@ def gram_matrix(
         .agg(F.sum("g").cast("long").alias("g"))
         .orderBy("i", "j")
     )
-
-
-def gram_to_numpy(gram_rows, dim: int, scale: int = 1000):
-    """Reassemble collected (i, j, g) upper-triangle rows into the full
-    symmetric float64 Gram matrix, de-quantized (÷ scale²)."""
-    import numpy as np
-
-    g = np.zeros((dim, dim), dtype=np.float64)
-    for r in gram_rows:
-        g[r["i"], r["j"]] = r["g"]
-        g[r["j"], r["i"]] = r["g"]
-    return g / (scale * scale)
-
-
-def pca_top_components(
-    emb: DataFrame,
-    k: int = 4,
-    *,
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    scale: int = 1000,
-):
-    """Top-k principal directions of the (uncentered) second-moment matrix.
-
-    The distributed pass is :func:`gram_matrix` (one scan); the d × d
-    eigendecomposition runs on the driver — the standard split for tall
-    matrices.  Returns (eigenvalues desc, components (k, d)), with each
-    component's sign fixed so its largest-|coord| entry is positive
-    (eigenvectors are sign-ambiguous; pinning makes results comparable)."""
-    import numpy as np
-
-    if dim is None:
-        dim = len(emb.select(vec_col).first()[0])
-    rows = gram_matrix(emb, vec_col=vec_col, scale=scale).collect()
-    g = gram_to_numpy(rows, dim, scale)
-    vals, vecs = np.linalg.eigh(g)  # ascending
-    order = np.argsort(vals)[::-1][:k]
-    comps = vecs[:, order].T  # (k, d)
-    for c in comps:
-        pivot = np.argmax(np.abs(c))
-        if c[pivot] < 0:
-            c *= -1
-    return vals[order], comps
-
-
-def project_embeddings(
-    emb: DataFrame,
-    components,
-    *,
-    vec_col: str = "embedding",
-    out_col: str = "pca",
-) -> DataFrame:
-    """Project each vector onto the given (k, d) components — one matmul
-    per Arrow batch (vectorized pandas UDF), narrow map, no shuffle."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    comp = np.asarray(components, dtype=np.float64)
-
-    def _proj(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy()).astype(np.float64)
-        return pd.Series(list((m @ comp.T).astype(np.float64)))
-
-    proj_udf = pandas_udf(_proj, "array<double>")
-    return emb.withColumn(out_col, proj_udf(F.col(vec_col)))

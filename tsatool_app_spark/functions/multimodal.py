@@ -3,7 +3,7 @@
 Large-scale training pipelines carry media as opaque ``binary`` columns with
 typed metadata; the Spark-side concerns — schema, batch shape, partition
 sizing, Arrow transfer — are real and tested here. The codec set is
-NATIVE: PNG decode/resize (sinks_png — pure zlib + numpy), JPEG baseline
+NATIVE: PNG decode (sinks_png — pure zlib + numpy), JPEG baseline
 AND progressive (jpeg_codec — pure numpy), PCM WAV audio (wav_codec —
 stdlib struct), and MJPEG-AVI video frame extraction (avi_codec). Only
 formats with no realistic pure-Python path (mp3/flac, h264/vp9) fall back
@@ -32,10 +32,8 @@ from collections.abc import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -87,12 +85,6 @@ def _unpack_fake_header(buf: bytes) -> tuple[int, int, int, bytes]:
     if magic != _FAKE_MAGIC:
         raise ValueError("not a fake test image")
     return w, h, c, buf[16:]
-
-
-def _pack_fake_header(w: int, h: int, c: int) -> bytes:
-    import struct as _struct
-
-    return _struct.pack(">4sIII", _FAKE_MAGIC, w, h, c)
 
 
 def _fake_decode(buf: bytes) -> tuple[int, int, int, float]:
@@ -191,87 +183,6 @@ def decode_image_batch(
             )
 
     return media.select(id_col, content_col).mapInPandas(decode, out_schema)
-
-
-def resize_images(
-    media: DataFrame,
-    target_w: int,
-    target_h: int,
-    *,
-    fake_decoder: bool = False,
-    content_col: str = "content",
-    id_col: str = "media_id",
-) -> DataFrame:
-    """Resize kernel: (media_id, content) → (media_id, content) at target
-    size. PNG and JPEG inputs resize for real (native decode → vectorized
-    nearest-neighbour index → native encode; JPEG re-encodes baseline
-    q90); with fake_decoder the nearest-neighbour subsample runs on the
-    fake payload, re-packed with the fake header — byte-deterministic
-    either way."""
-    out_schema = StructType(
-        [
-            StructField(id_col, LongType(), False),
-            StructField(content_col, BinaryType(), True),
-        ]
-    )
-
-    def _resize_png(buf: bytes) -> bytes:
-        import numpy as _np
-
-        from tsatool_app_spark.sinks_png import decode_png, encode_png
-
-        arr = decode_png(buf)
-        if arr.shape[2] == 1:  # grey → RGB so encode_png (color type 2) applies
-            arr = _np.repeat(arr, 3, axis=2)
-        elif arr.shape[2] == 4:
-            arr = arr[:, :, :3]
-        h, w = arr.shape[:2]
-        ys = (_np.arange(target_h) * h) // target_h
-        xs = (_np.arange(target_w) * w) // target_w
-        return encode_png(_np.ascontiguousarray(arr[ys][:, xs]))
-
-    def _resize_jpeg(buf: bytes) -> bytes:
-        import numpy as _np
-
-        from tsatool_app_spark.jpeg_codec import decode_jpeg, encode_jpeg_baseline
-
-        arr = decode_jpeg(buf)
-        if arr.shape[2] == 1:
-            arr = _np.repeat(arr, 3, axis=2)
-        h, w = arr.shape[:2]
-        ys = (_np.arange(target_h) * h) // target_h
-        xs = (_np.arange(target_w) * w) // target_w
-        return encode_jpeg_baseline(
-            _np.ascontiguousarray(arr[ys][:, xs]), quality=90
-        )
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf[id_col], pdf[content_col]):
-                buf = bytes(buf)
-                if not fake_decoder:
-                    if buf[:8] == b"\x89PNG\r\n\x1a\n":
-                        rows.append((mid, _resize_png(buf)))
-                        continue
-                    if buf[:2] == b"\xff\xd8":
-                        rows.append((mid, _resize_jpeg(buf)))
-                        continue
-                    raise NotImplementedError(
-                        "unrecognized format: PNG and JPEG resize natively; "
-                        "others need an image library or fake_decoder=True"
-                    )
-                w, h, c, payload = _unpack_fake_header(buf)
-                out = bytearray(_pack_fake_header(target_w, target_h, c))
-                for y in range(target_h):
-                    sy = y * h // target_h
-                    for x in range(target_w):
-                        sx = x * w // target_w
-                        out.append(payload[sy * w + sx])
-                rows.append((mid, bytes(out)))
-            yield pd.DataFrame(rows, columns=[id_col, content_col])
-
-    return media.select(id_col, content_col).mapInPandas(resize, out_schema)
 
 
 def _luma_plane(arr):
@@ -638,21 +549,6 @@ def render_text_audio(
             yield pd.DataFrame(rows, columns=[id_col, "content"])
 
     return docs.select(id_col, text_col).mapInPandas(render, out_schema)
-
-
-def media_metadata(media: DataFrame) -> DataFrame:
-    """Metadata projection WITHOUT touching bytes: filters/joins on this
-    stay in the columnar fast path (content column pruned from the scan)."""
-    return media.select(
-        "media_id",
-        F.col("meta.kind").alias("kind"),
-        F.col("meta.codec").alias("codec"),
-        F.col("meta.width").alias("width"),
-        F.col("meta.height").alias("height"),
-        F.coalesce(F.col("meta.n_bytes"), F.length("content").cast("long")).alias(
-            "n_bytes"
-        ),
-    )
 
 
 def decode_audio_batch(
@@ -1135,64 +1031,3 @@ def render_text_videos(
             yield pd.DataFrame(rows, columns=[id_col, "content"])
 
     return docs.select(id_col, text_col).mapInPandas(render, out_schema)
-
-
-def audio_frame_features(
-    media: DataFrame,
-    *,
-    frame_len: int = 512,
-    hop: int = 256,
-    content_col: str = "content",
-    id_col: str = "media_id",
-) -> DataFrame:
-    """Frame-level audio features from PCM WAV bytes: one output row per
-    analysis frame with RMS energy, zero-crossing rate, and spectral
-    centroid (Hz, via numpy rFFT) — the standard speech-preprocessing
-    triple, computed natively (wav_codec decode, no audio libraries).
-
-    1→N fan-out like sample_video_frames: the audio bytes are consumed in
-    the worker and only small typed feature rows leave it. Multi-channel
-    input is mixed down to mono (mean) before framing; the last partial
-    frame is dropped (librosa-style center=False behavior)."""
-    out_schema = StructType(
-        [
-            StructField(id_col, LongType(), False),
-            StructField("frame_idx", IntegerType(), True),
-            StructField("rms", DoubleType(), True),
-            StructField("zcr", DoubleType(), True),
-            StructField("centroid_hz", DoubleType(), True),
-        ]
-    )
-
-    def features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-
-        from tsatool_app_spark.wav_codec import decode_wav
-
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf[id_col], pdf[content_col]):
-                rate, samples = decode_wav(bytes(buf))
-                x = samples.astype(_np.float64).mean(axis=1) / 32768.0
-                n_frames = max(0, (len(x) - frame_len) // hop + 1)
-                if n_frames == 0:
-                    continue
-                idx = _np.arange(frame_len)[None, :] + hop * _np.arange(n_frames)[:, None]
-                frames = x[idx]  # (n_frames, frame_len)
-                rms = _np.sqrt((frames**2).mean(axis=1))
-                zcr = (_np.diff(_np.signbit(frames), axis=1) != 0).mean(axis=1)
-                spec = _np.abs(_np.fft.rfft(frames, axis=1))
-                freqs = _np.fft.rfftfreq(frame_len, d=1.0 / rate)
-                denom = spec.sum(axis=1)
-                centroid = _np.where(
-                    denom > 0, (spec * freqs).sum(axis=1) / _np.maximum(denom, 1e-300), 0.0
-                )
-                for i in range(n_frames):
-                    rows.append(
-                        (mid, i, float(rms[i]), float(zcr[i]), float(centroid[i]))
-                    )
-            yield pd.DataFrame(
-                rows, columns=[id_col, "frame_idx", "rms", "zcr", "centroid_hz"]
-            )
-
-    return media.select(id_col, content_col).mapInPandas(features, out_schema)

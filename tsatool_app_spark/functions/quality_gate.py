@@ -56,17 +56,6 @@ def check_constraints(
     )
 
 
-def quarantine_split(
-    df: DataFrame, rules: list[tuple[str, Column]]
-) -> tuple[DataFrame, DataFrame]:
-    """(valid, quarantined) pair from one rule set. ``valid`` drops the
-    bookkeeping columns; ``quarantined`` keeps ``violations`` for triage."""
-    checked = check_constraints(df, rules)
-    valid = checked.where("is_valid").drop("violations", "is_valid")
-    bad = checked.where(~F.col("is_valid")).drop("is_valid")
-    return valid, bad
-
-
 def fd_violations(
     df: DataFrame,
     lhs: list[str],

@@ -154,33 +154,6 @@ def build_ivf_index(
     return indexed, centroids
 
 
-def write_ivf_index_bucketed(
-    indexed: DataFrame,
-    table_name: str,
-    path: str,
-    *,
-    n_buckets: int | None = None,
-    n_clusters: int = 16,
-) -> None:
-    """Persist an IVF-indexed embedding table hash-clustered BY cluster —
-    the storage layout that turns :func:`ivf_ann_topk`'s ``nprobe`` filter
-    into bucket pruning (the scan plans ``SelectedBucketsCount: nprobe out
-    of n_buckets``; asserted in test_plans.py), so a probe reads only the
-    probed clusters' files instead of the whole corpus. ``sortBy(cluster)``
-    additionally keeps parquet row-group stats tight for min/max skipping.
-
-    At 100 TB this IS the index lookup: brute force scans everything per
-    query; the bucketed IVF layout reads nprobe/n_clusters of the data."""
-    (
-        indexed.write.mode("overwrite")
-        .format("parquet")
-        .option("path", path)
-        .bucketBy(n_buckets or n_clusters, "cluster")
-        .sortBy("cluster")
-        .saveAsTable(table_name)
-    )
-
-
 def ivf_ann_topk(
     indexed: DataFrame,
     centroids,

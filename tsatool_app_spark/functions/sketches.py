@@ -33,23 +33,6 @@ def exact_distinct_by_group(
     )
 
 
-def hll_distinct_by_group(
-    df: DataFrame, group_cols: Sequence[str], col: str, lg_k: int = 14
-) -> DataFrame:
-    """HLL-sketch per-group distinct estimate (DataSketches, lgConfigK=lg_k,
-    relative error ~1.04/sqrt(2^lg_k) ≈ 0.8% at the default).  One
-    aggregate; the shuffle carries one ≤2^lg_k-byte sketch per group."""
-    return (
-        df.groupBy(*group_cols)
-        .agg(
-            F.hll_sketch_estimate(
-                F.hll_sketch_agg(F.col(col), F.lit(lg_k))
-            ).alias("n_distinct_est")
-        )
-        .orderBy(*group_cols)
-    )
-
-
 def hll_rollup(
     df: DataFrame,
     fine_cols: Sequence[str],
@@ -77,7 +60,7 @@ def hll_rollup(
 
 
 # ---------------------------------------------------------------------------
-# Count-min sketch (portable md5 bucket hashing) + exact heavy hitters
+# Count-min sketch (portable md5 bucket hashing)
 # ---------------------------------------------------------------------------
 
 def _cms_bucket(col: Column, row: int, width: int) -> Column:
@@ -137,18 +120,4 @@ def cms_estimate(
         joined.groupBy("key")
         .agg(F.min("cnt").cast("long").alias("est"))
         .orderBy("key")
-    )
-
-
-def heavy_hitters(df: DataFrame, col: str, *, min_count: int) -> DataFrame:
-    """Exact keys with frequency >= min_count.  Spark's two-level hash
-    aggregate IS the classic two-pass heavy-hitter plan: partial counts
-    collapse per partition map-side, so the shuffle carries (distinct keys
-    × partitions) at worst — a skewed hot key costs one row per partition,
-    not one row per occurrence."""
-    return (
-        df.groupBy(F.col(col).alias("key"))
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .where(F.col("cnt") >= min_count)
-        .orderBy(F.desc("cnt"), F.asc("key"))
     )

@@ -190,41 +190,6 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select("doc_id", quality_col(text_col).alias("quality"))
 
 
-def winnowing_fingerprints(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    window: int = 4,
-) -> DataFrame:
-    """Winnowing document fingerprints (the rolling-hash scheme of MOSS):
-    hash every k-gram, slide a window of ``window`` consecutive k-gram
-    hashes, keep each window's minimum — the distinct selected hashes are
-    the document's fingerprint set, robust to insertions/reordering.
-
-    Plan: posexplode shingles → per-position window min (one shuffle on
-    doc id) → distinct. Guarantees of winnowing hold regardless of the
-    k-gram hash function, so xxhash64 stands in for the classic polynomial
-    rolling hash (same selection semantics, JVM-side)."""
-    from pyspark.sql import Window
-    from tsatool_app_spark.functions.dedup import shingles
-
-    grams = docs.select(
-        F.col(id_col),
-        F.posexplode(shingles(F.col(text_col), k)).alias("pos", "sh"),
-    ).select(id_col, "pos", F.xxhash64("sh").alias("h"))
-    w = (
-        Window.partitionBy(id_col)
-        .orderBy("pos")
-        .rowsBetween(0, window - 1)
-    )
-    return (
-        grams.select(F.col(id_col), F.min("h").over(w).alias("fp"))
-        .distinct()
-    )
-
-
 def doc_fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """64-bit content fingerprint (xxhash64 of normalized text) — the cheap
     exact-dup key: lowercase, collapse whitespace, hash. One narrow scan."""

@@ -254,30 +254,3 @@ def write_observations(df: DataFrame, path: str, mode: str = "append") -> None:
         .partitionBy("obs_date")
         .parquet(path)
     )
-
-
-def write_observations_bucketed(
-    df: DataFrame,
-    table_name: str,
-    path: str,
-    n_buckets: int = 64,
-    bucket_cols: tuple[str, ...] = ("statid", "seid"),
-) -> None:
-    """Hash-clustered (bucketed) observation store: co-located joins and
-    aggregations on the bucket key read WITHOUT a shuffle.
-
-    The reference's repeated `statobs ⋈ seobs`-shaped joins and the
-    per-(statid, seid) packing aggregation all key on the same columns;
-    bucketing both sides by them turns every such exchange into a local
-    zipped-partition read (asserted in test_plans.py). At 100 TB pick
-    ``n_buckets`` ≳ cluster cores so each bucket stays executor-sized;
-    buckets also prune single-key lookups (Spark plans a one-bucket scan
-    for an equality filter on the bucket column set)."""
-    (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .option("path", path)
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .saveAsTable(table_name)
-    )

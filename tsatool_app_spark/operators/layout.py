@@ -16,7 +16,7 @@ Python loop, so the two cannot drift).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -45,29 +45,6 @@ def zorder_sql(x_expr: str, y_expr: str, bits: int = 16) -> str:
         terms.append(f"((({xc} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({yc} >> {i}) & 1) << {2 * i + 1})")
     return "(" + " + ".join(terms) + ")"
-
-
-def cluster_by_zorder(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    *,
-    bits: int = 16,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Lay the DataFrame out along the Morton curve: range-partition on the
-    z-key (so files cover disjoint curve segments → min/max pruning works
-    across files) and sort within partitions (→ pruning works across row
-    groups). The z column is dropped after layout; this changes bytes on
-    disk, not query results."""
-    z = zorder_key(F.col(x_col), F.col(y_col), bits).alias("_z")
-    parts = [num_partitions] if num_partitions else []
-    return (
-        df.withColumn("_z", z)
-        .repartitionByRange(*parts, F.col("_z"))
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )
 
 
 def zorder_key_n(cols: list[Column], bits: int = 10) -> Column:

@@ -219,80 +219,33 @@ def grouped_topk_pruned(
     group_cols: list[str],
     order_cols: list[tuple[str, bool]],
     k: int,
-    *,
-    impl: str = "window",
 ) -> DataFrame:
     """Per-group top-k with MAP-SIDE pruning.
 
-    ``impl="window"`` (default): the plain window rank + ``rk <= k``
-    filter.  Spark ≥3.5's InferWindowGroupLimit rewrites this into
-    WindowGroupLimitExec in PARTIAL mode BEFORE the exchange (asserted
-    by tests/test_plans.py::test_grouped_topk_window_group_limit): each
-    map task keeps only its local top-k per group IN THE JVM, so the
-    shuffle carries ≤ k rows per (group × input partition) instead of
-    the fact table — the map-side prune for free, no Python boundary.
-    Measured at sf10 (60 M lineitem rows, r12 SCALING.md): 5.2 s vs the
-    Arrow prune's 25.7 s.
+    The plain window rank + ``rk <= k`` filter: Spark ≥3.5's
+    InferWindowGroupLimit rewrites this into WindowGroupLimitExec in
+    PARTIAL mode BEFORE the exchange (asserted by
+    tests/test_plans.py::test_grouped_topk_window_group_limit): each map
+    task keeps only its local top-k per group IN THE JVM, so the shuffle
+    carries ≤ k rows per (group × input partition) instead of the fact
+    table — the map-side prune for free, no Python boundary.  Measured at
+    sf10 (60 M lineitem rows, r12 SCALING.md): 5.2 s vs an Arrow
+    per-batch prune's 25.7 s.
 
-    ``impl="arrow"``: the pre-WindowGroupLimit formulation — one
-    in-memory pandas sort per Arrow batch keeps each partition's local
-    top-k per group, then the exact window ranks survivors.  Retained
-    for engines/builds without the rewrite; on Spark 4.x it pays the
-    fact table through Arrow twice for a prune the JVM already does.
-
-    Both are exact for the same reason: the global top-k of a group is
-    a subset of the union of its per-partition top-k's, PROVIDED the
-    prune uses the same TOTAL order as the final rank (``order_cols`` =
-    [(col, descending), ...] must be total over the emitted columns, or
-    boundary ties can drop the eventual winner).
+    Exact because the global top-k of a group is a subset of the union of
+    its per-partition top-k's, PROVIDED the prune uses the same TOTAL
+    order as the final rank (``order_cols`` = [(col, descending), ...]
+    must be total over the emitted columns, or boundary ties can drop the
+    eventual winner).
     """
     cols = df.columns
     if "rk" in cols or "rank" in cols:
         raise ValueError("input already has an 'rk'/'rank' column; rename it")
-    if impl not in ("window", "arrow"):
-        raise ValueError("impl must be 'window' or 'arrow'")
-    if impl == "window":
-        w = Window.partitionBy(*group_cols).orderBy(
-            *[(F.col(c).desc() if d else F.col(c).asc()) for c, d in order_cols]
-        )
-        return (
-            df.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= k)
-            .select(*cols, F.col("rk").cast("long").alias("rank"))
-        )
-
-    by = [c for c, _ in order_cols]
-    asc = [not d for _, d in order_cols]
-
-    def _prune(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if not any(pdf[c].isna().any() for c in by):
-                # fast path: one multi-key sort (null ordering is moot)
-                s = pdf.sort_values(by=by, ascending=asc)
-            else:
-                # Match Spark's per-direction null ordering (asc → nulls
-                # FIRST, desc → nulls LAST) — pandas sort_values takes one
-                # na_position for all keys, so sort one key at a time,
-                # least-significant first, composing the total order via
-                # stable sorts.
-                s = pdf
-                for c, desc in reversed(order_cols):
-                    s = s.sort_values(
-                        by=c,
-                        ascending=not desc,
-                        na_position="last" if desc else "first",
-                        kind="stable",
-                    )
-            yield s.groupby(group_cols, sort=False).head(k)
-
-    pruned = df.mapInPandas(_prune, df.schema)
     w = Window.partitionBy(*group_cols).orderBy(
         *[(F.col(c).desc() if d else F.col(c).asc()) for c, d in order_cols]
     )
     return (
-        pruned.withColumn("rk", F.row_number().over(w))
+        df.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= k)
         .select(*cols, F.col("rk").cast("long").alias("rank"))
     )

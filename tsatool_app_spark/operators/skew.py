@@ -9,7 +9,7 @@ mega-stations / viral documents in a 100 TB corpus).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 

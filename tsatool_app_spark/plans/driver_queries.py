@@ -25,10 +25,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tsatool_app_spark.functions.dedup import (
-    exact_dedup_groups,
-    minhash_near_dup_pairs,
-)
+from tsatool_app_spark.functions.dedup import exact_dedup_groups
 from tsatool_app_spark.functions.similarity import lsh_ann_topk, quantized_dot
 from tsatool_app_spark.functions.text import _LANG_MARKERS, lang_id_heuristic, text_stats
 from tsatool_app_spark.model import load_observations_from_events, load_table
@@ -93,37 +90,46 @@ def _pack_sql_cte(name: str, block, seval_expr: str = "value", time_pred: str = 
 )"""
 
 
+def _reference_combine_sql(
+    sources: dict[str, tuple[str, str]],
+    master_expr: str,
+    vdiff: str = "CAST(date_diff('second', m.vfrom, m.vuntil) AS BIGINT)",
+) -> str:
+    """The reference's combine (condition.py:364-391) as one DuckDB query:
+    boundary union → LEAD pairing → one containment LEFT JOIN per block →
+    Kleene master.  ``sources``: alias -> (relation, truth column), each
+    relation (vfrom, vuntil, <truth column>); ``vdiff``: the duration of
+    the master range ``m`` in seconds.  Output: vfrom, vuntil, vdiff_s, one
+    column per alias, master.  This IS the reference's plan in portable
+    SQL — deliberately a different algorithm from the Spark carry-forward
+    implementation, so the oracle is an independent check; the registry
+    oracles and the property tests build on it."""
+    pts = " UNION ALL ".join(
+        f"SELECT vfrom AS vt FROM {rel} UNION ALL SELECT vuntil FROM {rel}"
+        for rel, _ in sources.values()
+    )
+    joins = "\n".join(
+        f"LEFT JOIN {rel} AS j_{a} ON m.vfrom >= j_{a}.vfrom AND m.vfrom < j_{a}.vuntil"
+        for a, (rel, _) in sources.items()
+    )
+    cols = ", ".join(f"j_{a}.{tc} AS {a}" for a, (_, tc) in sources.items())
+    return f"""
+SELECT aligned.*, ({master_expr}) AS master FROM (
+  SELECT m.vfrom, m.vuntil, {vdiff} AS vdiff_s, {cols}
+  FROM (SELECT * FROM (
+    SELECT vt AS vfrom, lead(vt) OVER (ORDER BY vt) AS vuntil
+    FROM (SELECT DISTINCT vt FROM ({pts}))) WHERE vuntil IS NOT NULL) m
+  {joins}) aligned"""
+
+
 def _condition_sql(blocks: dict[str, tuple], master_expr: str) -> str:
-    """Reference-style condition SQL (condition.py:364-391): boundary union →
-    LEAD pairing → one LEFT JOIN per block on range containment → Kleene
-    master. This IS the reference's plan, in portable SQL — deliberately a
-    different algorithm from the Spark carry-forward implementation, so the
-    oracle is an independent check."""
+    """Reference-style condition SQL: one _pack_sql_cte per block, then
+    _reference_combine_sql over them."""
     # CTE names are prefixed blk_ so the alias columns (a1, a2, …) in the
     # outer master expression can't collide with relation names.
     ctes = ",".join(_pack_sql_cte(f"blk_{a}", b) for a, b in blocks.items())
-    unions = " UNION ALL ".join(
-        f"SELECT vfrom AS vt FROM blk_{a} UNION ALL SELECT vuntil FROM blk_{a}"
-        for a in blocks
-    )
-    joins = "\n".join(
-        f"LEFT JOIN blk_{a} ON m.vfrom >= blk_{a}.vfrom AND m.vfrom < blk_{a}.vuntil"
-        for a in blocks
-    )
-    alias_cols = ", ".join(f"blk_{a}.istrue AS {a}" for a in blocks)
-    return f"""
-WITH {ctes},
-pts AS (SELECT DISTINCT vt FROM ({unions})),
-mr AS (SELECT vt AS vfrom, lead(vt) OVER (ORDER BY vt) AS vuntil FROM pts),
-m AS (SELECT * FROM mr WHERE vuntil IS NOT NULL),
-aligned AS (
-  SELECT m.vfrom, m.vuntil,
-         CAST(date_diff('second', m.vfrom, m.vuntil) AS BIGINT) AS vdiff_s,
-         {alias_cols}
-  FROM m
-  {joins}
-)
-SELECT aligned.*, ({master_expr}) AS master FROM aligned"""
+    sources = {a: (f"blk_{a}", "istrue") for a in blocks}
+    return f"WITH {ctes}\n" + _reference_combine_sql(sources, master_expr)
 
 
 #: One structured source of truth for the 10-condition driver sheet —
@@ -148,8 +154,8 @@ def _sheet_workload_sql() -> str:
     summaries, generated from the SAME sheet definition (_sheet_blocks /
     _SHEET_MASTER) as q_sheet_workload.
 
-    Primary conditions are the _condition_sql pattern (pack → boundary union
-    → containment join → Kleene master); the secondary chain re-applies the
+    Primary conditions are the _condition_sql pattern (_pack_sql_cte per
+    block, then _reference_combine_sql); the secondary chain re-applies the
     same combine with the referenced conditions' master ranges as blocks —
     the reference's level-by-level secondary semantics (block.py:195-207),
     which the engine's one-plan combine reproduces (combine_tagged)."""
@@ -160,32 +166,11 @@ def _sheet_workload_sql() -> str:
     ctes: list[str] = []
 
     def combine(prefix: str, sources: dict[str, tuple[str, str]], master_expr: str):
-        """sources: alias -> (relation, truth_column). Appends the boundary
-        union / segmentation / containment-join / master CTE chain."""
-        unions = " UNION ALL ".join(
-            f"SELECT vfrom AS vt FROM {rel} UNION ALL SELECT vuntil FROM {rel}"
-            for rel, _ in sources.values()
+        """sources: alias -> (relation, truth_column). Appends the
+        condition's ``{prefix}_cond`` CTE."""
+        ctes.append(
+            f"\n{prefix}_cond AS ({_reference_combine_sql(sources, master_expr)}\n)"
         )
-        joins = "\n  ".join(
-            f"LEFT JOIN {rel} ON {prefix}_m.vfrom >= {rel}.vfrom"
-            f" AND {prefix}_m.vfrom < {rel}.vuntil"
-            for rel, _ in sources.values()
-        )
-        alias_cols = ", ".join(
-            f"{rel}.{tc} AS {a}" for a, (rel, tc) in sources.items()
-        )
-        ctes.append(f"""
-{prefix}_pts AS (SELECT DISTINCT vt FROM ({unions})),
-{prefix}_mr AS (SELECT vt AS vfrom, lead(vt) OVER (ORDER BY vt) AS vuntil FROM {prefix}_pts),
-{prefix}_m AS (SELECT * FROM {prefix}_mr WHERE vuntil IS NOT NULL),
-{prefix}_cond AS (
-  SELECT aligned.*, ({master_expr}) AS master FROM (
-    SELECT {prefix}_m.vfrom, {prefix}_m.vuntil,
-           CAST(date_diff('second', {prefix}_m.vfrom, {prefix}_m.vuntil) AS BIGINT) AS vdiff_s,
-           {alias_cols}
-    FROM {prefix}_m
-  {joins}) aligned
-)""")
 
     summary_rels: list[tuple[str, str]] = []
     for i in range(9):

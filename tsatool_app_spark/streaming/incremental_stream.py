@@ -82,141 +82,3 @@ def streaming_incremental_rollup(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def flag_anomalies(
-    batch_df: DataFrame,
-    snapshot: DataFrame | None,
-    keys: list[str],
-    value_col: str,
-    *,
-    moments_scale: int,
-    sigma: float = 3.0,
-    min_n: int = 30,
-) -> DataFrame:
-    """Flag rows whose value deviates more than ``sigma`` standard
-    deviations from THEIR KEY's history — the training-free streaming
-    anomaly check, scored against the PRIOR moments snapshot so a batch
-    of corrupt values cannot vote itself normal.
-
-    Pure Column arithmetic: the snapshot contributes mean/σ per key (from
-    the exact integer power sums), the join is on the (bounded) key set,
-    and the flag is one comparison.  Keys with < ``min_n`` history rows
-    are never flagged (insufficient evidence), nor are keys absent from
-    the snapshot.  Returns the batch with ``is_anomaly`` appended."""
-    from pyspark.sql import functions as F
-
-    if snapshot is None:
-        return batch_df.withColumn("is_anomaly", F.lit(False))
-    if "p_s2" not in snapshot.columns:
-        raise ValueError(
-            "snapshot has no moment partials — fold it with moments_scale set"
-        )
-    n = F.col("p_count").cast("double")
-    mean_q = F.col("p_s1") / n
-    var_q = F.col("p_s2") / n - mean_q * mean_q
-    stats = snapshot.select(
-        *keys,
-        F.col("p_count").alias("_hist_n"),
-        (mean_q / moments_scale).alias("_mean"),
-        (F.sqrt(F.greatest(var_q, F.lit(0.0))) / moments_scale).alias("_sd"),
-    )
-    out = batch_df.join(F.broadcast(stats), keys, "left")
-    flag = (
-        F.col("_hist_n").isNotNull()
-        & (F.col("_hist_n") >= min_n)
-        & (F.col("_sd") > 0)
-        & (
-            F.abs(F.col(value_col).cast("double") - F.col("_mean"))
-            > sigma * F.col("_sd")
-        )
-    )
-    return out.withColumn("is_anomaly", F.coalesce(flag, F.lit(False))).drop(
-        "_hist_n", "_mean", "_sd"
-    )
-
-
-def streaming_anomaly_monitor(
-    stream_df: DataFrame,
-    snapshot_path: str,
-    anomalies_path: str,
-    *,
-    keys: list[str],
-    value_col: str,
-    checkpoint: str,
-    moments_scale: int = 1000,
-    sigma: float = 3.0,
-    min_n: int = 30,
-):
-    """foreachBatch driver: score each micro-batch against the moments
-    snapshot SO FAR (anomalies append to ``anomalies_path``), then fold
-    the batch in — score-then-fold, so an anomalous batch is judged by
-    history, not by itself. Returns the StreamingQuery."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        snap = read_snapshot(spark, snapshot_path)
-        flagged = flag_anomalies(
-            batch_df, snap, keys, value_col,
-            moments_scale=moments_scale, sigma=sigma, min_n=min_n,
-        )
-        flagged.where("is_anomaly").write.mode("append").parquet(anomalies_path)
-        fold_batch_into_snapshot(
-            batch_df, snapshot_path, keys, value_col, moments_scale=moments_scale
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def fold_join_view_batch(
-    spark,
-    store_root: str,
-    a_delta: DataFrame | None,
-    b_delta: DataFrame | None,
-    on: list[str],
-    *,
-    compact_every: int | None = 64,
-) -> None:
-    """One maintenance round of a streaming materialized JOIN view: apply
-    the IVM delta rule against the persisted base snapshots, append the
-    view delta as a SEGMENT (O(|Δ view|) write), then fold the base
-    deltas into their snapshots.
-
-    Store layout under ``store_root``: ``a/`` and ``b/`` hold the base
-    relations (append-only segments), ``view/`` holds the materialized
-    join.  Order matters: the view delta must see the bases as of BEFORE
-    this round (the delta rule's A_old/B_old), so bases fold last.
-    All three stores auto-compact every ``compact_every`` folds so a
-    long-lived view holds a bounded segment count (r10; None opts
-    out)."""
-    from tsatool_app_spark.operators.incremental import join_view_delta
-    from tsatool_app_spark.streaming.snapshot_store import (
-        append_snapshot_segment,
-        read_snapshot,
-    )
-
-    a_old = read_snapshot(spark, store_root + "/a")
-    b_old = read_snapshot(spark, store_root + "/b")
-    delta = join_view_delta(a_old, a_delta, b_old, b_delta, on)
-    if delta is not None:
-        # materialize BEFORE the bases advance (lazy plans would read the
-        # post-fold snapshots and double-count)
-        delta = delta.localCheckpoint(eager=True)
-        append_snapshot_segment(
-            delta, store_root + "/view", compact_every=compact_every
-        )
-    if a_delta is not None:
-        append_snapshot_segment(
-            a_delta, store_root + "/a", compact_every=compact_every
-        )
-    if b_delta is not None:
-        append_snapshot_segment(
-            b_delta, store_root + "/b", compact_every=compact_every
-        )

@@ -33,10 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BooleanType,
-    FloatType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
     TimestampType,

@@ -302,56 +302,3 @@ def compact_segments(spark: SparkSession, root: str) -> str | None:
     # the batch ledger survives compaction — replay protection must not
     # lapse just because maintenance ran between a crash and its replay
     return _publish_manifest(root, [seg], _read_ledger(root))
-
-
-def list_versions(root: str) -> list[str]:
-    """Version directories present on disk, oldest→newest (committed
-    current last if retention kept its predecessors)."""
-    try:
-        names = [
-            e for e in os.listdir(root) if e.startswith("v-") and "-" in e
-        ]
-    except FileNotFoundError:
-        return []
-    return sorted(names, key=lambda n: int(n.rsplit("-", 1)[1]))
-
-
-def publish_snapshot_retained(
-    df: DataFrame, root: str, *, keep_versions: int = 3
-) -> str:
-    """publish_snapshot with TIME TRAVEL: keep the last ``keep_versions``
-    committed versions on disk instead of pruning to one, so
-    :func:`read_snapshot_version` can read any retained predecessor —
-    the debugging/audit contract a lakehouse table format provides,
-    at plain-parquet cost (each retained version is a full copy here;
-    the segment store amortizes that for append-only state)."""
-    os.makedirs(root, exist_ok=True)
-    prev = current_version(root)
-    seq = 0 if prev is None else int(prev.rsplit("-", 1)[1]) + 1
-    name = f"v-{seq}"
-    df.write.mode("overwrite").parquet(os.path.join(root, name))
-    tmp = _pointer_path(root) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(name)
-        f.flush()
-        os.fsync(f.fileno())
-    os.rename(tmp, _pointer_path(root))
-    live = set(list_versions(root)[-keep_versions:])
-    for entry in os.listdir(root):
-        if entry.startswith("v-") and entry not in live and entry != name:
-            shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
-    return name
-
-
-def read_snapshot_version(
-    spark: SparkSession, root: str, version: str
-) -> DataFrame:
-    """Read a specific retained version (from :func:`list_versions`).
-    Raises FileNotFoundError if retention already pruned it."""
-    path = os.path.join(root, version)
-    if not os.path.isdir(path):
-        raise FileNotFoundError(f"version {version!r} not retained under {root}")
-    segs = _manifest_segments(root, version)
-    if segs is None:
-        return spark.read.parquet(path)
-    return spark.read.parquet(*[os.path.join(root, s) for s in segs])
